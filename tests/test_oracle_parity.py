@@ -3,6 +3,9 @@ sf0.001 (the driver's gate runs the same comparison at sf0.01)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from tools.check import compare
@@ -18,6 +21,29 @@ def test_every_query_has_callable():
 def test_oracles_are_subset():
     missing = set(ORACLES) - set(QUERIES)
     assert not missing, f"oracles without queries: {missing}"
+
+
+def test_window_order_reproduces_r11_records():
+    """The correctness run records the first 50 names of ``queries()``.
+    Deriving the order from the r01–r10 records plus the rows re-recorded
+    in r11 must reproduce the r11 record set, and ``queries()`` must be a
+    permutation of the registry."""
+    import __spark_entry__ as E
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    records = [os.path.join(root, f"CORRECTNESS_r{i:02d}.json") for i in range(1, 11)]
+    rerecord = (
+        "stream_dedup_wm", "stream_session_stream", "stream_slide_stream",
+        "stream_stateful_totals", "stream_stream_join", "graph_triangles",
+        "pagerank", "stream_lakehouse_feed", "lakehouse_dv_merge",
+    )
+    window = E.window_order(QUERIES, records, rerecord)[:50]
+    with open(os.path.join(root, "CORRECTNESS_r11.json")) as fh:
+        assert set(window) == set(json.load(fh))
+
+    served = E.queries()
+    assert sorted(served) == sorted(QUERIES)
+    assert all(served[name] is QUERIES[name] for name in QUERIES)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

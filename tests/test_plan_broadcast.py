@@ -26,12 +26,11 @@ import pytest
 
 from vcf2db_spark.queries import QUERIES
 
-# Whole-surface audit (plans every declared query at sf0.1, ~3 min) —
-# same rationale as test_plan_quality.py: plan-shape gate, opt-in via
-# `-m slow_sweep` so the default suite fits the driver's pytest window.
-pytestmark = pytest.mark.slow_sweep
-
 SF = "/root/testdata/sf0.1"
+
+# Flagship joins whose plans the default run gates (the whole-surface
+# sweep below is opt-in): each plans in seconds and none is executed.
+FLAGSHIP = ("join_star", "tpch_q4", "tpch_q12", "join_range", "bucketed_join")
 
 # Tables whose row count scales with data volume (≥1M rows at sf1).
 FACT_TABLES = ("lineitem", "orders", "events")
@@ -121,6 +120,10 @@ def plans(spark):
     return out
 
 
+# Whole-surface audit (plans every declared query at sf0.1, ~3 min) —
+# same rationale as test_plan_quality.py: opt-in via `-m slow_sweep` so
+# the default suite fits its time window.
+@pytest.mark.slow_sweep
 def test_no_unbounded_fact_broadcast(plans):
     offenders = {
         n: hits
@@ -131,6 +134,13 @@ def test_no_unbounded_fact_broadcast(plans):
         "fact tables broadcast without a bounding filter/aggregate/limit "
         f"(the join_star r5 pathology): {offenders}"
     )
+
+
+@pytest.mark.parametrize("name", FLAGSHIP)
+def test_flagship_has_no_unbounded_fact_broadcast(spark, name):
+    plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+    hits = unbounded_fact_broadcasts(plan)
+    assert not hits, f"{name} broadcasts fact tables {hits}:\n{plan}"
 
 
 def test_guard_fires_on_unhinted_join_star(spark):

@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from vcf2db_spark.registry import dsum6  # noqa: E402
+from vcf2db_spark.registry import dsum  # noqa: E402
 
 N_PASSES = 5
 N_BUCKETS = 64
@@ -50,7 +50,7 @@ def star_logic(l, o, c, n, r):
         .join(F.broadcast(r.select("r_regionkey", "r_name")), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name", "n_name")
         .agg(
-            dsum6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
             F.count("*").alias("n_items"),
         )
     )
@@ -73,7 +73,7 @@ def q5_logic(li, o, c, s, n, r):
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
         .groupBy("n_name")
-        .agg(dsum6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .orderBy(F.col("revenue").desc())
     )
 
@@ -100,7 +100,7 @@ def q5_bucketed_logic(li, o, c, s, n, r):
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
         .groupBy("n_name")
-        .agg(dsum6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .orderBy(F.col("revenue").desc())
     )
 

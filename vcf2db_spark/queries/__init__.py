@@ -1,9 +1,7 @@
 """Declared-query modules. Importing this package populates the registry.
 
-The driver records correctness rows for the FIRST 50 registered queries
-per round. Round 1 recorded the 50 names below (CORRECTNESS_r01.json);
-those keep their green record, so we rotate them to the back and let the
-queries without a driver row yet register first (VERDICT.md r1 item 2).
+``QUERIES`` keeps registration order; the order served for the 50-row
+correctness window is derived in ``__spark_entry__.queries()``.
 """
 
 from vcf2db_spark.queries import (  # noqa: F401
@@ -24,370 +22,3 @@ from vcf2db_spark.queries import (  # noqa: F401
     windows,
 )
 from vcf2db_spark.registry import ORACLES, QUERIES  # noqa: F401
-
-# Names with a green row in CORRECTNESS_r01.json (driver cap = 50/round).
-_RECORDED_R01 = [
-    "rename_project", "prune_columns", "derive_row_stats", "explode_split",
-    "argmax_per_group", "dim_load_join", "max_strlen", "posexplode_long",
-    "layout_zorder", "dedup_exact", "dedup_shingle", "sim_topk",
-    "vec_centroid", "text_tfidf", "stream_tumble", "stream_slide",
-    "stream_session", "dedup_jaccard", "neardup_cosine", "text_quality",
-    "token_count", "doc_fingerprint", "dedup_minhash_lsh", "dedup_simhash",
-    "ann_lsh", "ann_ivf", "lang_id", "sample_frac", "curate_docs",
-    "sample_stratified", "approx_agg", "text_chunk", "text_repetition",
-    "text_scrub", "contam_ngram", "scan_parquet", "filter_pred",
-    "project_expr", "join_inner", "join_star", "join_left", "join_semi",
-    "join_anti", "agg_group", "agg_distinct", "agg_rollup", "agg_cube",
-    "agg_having", "topk_order", "set_union",
-]
-
-
-# Names recorded in CORRECTNESS_r03.json: the first 49 of _PRIORITY_R03
-# plus rename_project (the first r1 name after them filled slot 50).
-_RECORDED_R03_EXTRA = ["rename_project"]
-
-# Round-4 priority (VERDICT r3 item 1): the 11 queries registered past the
-# r3 cap — green locally at every sf but with NO driver record yet — go
-# first so the union reaches 156/156, followed by queries ADDED in r4.
-# After this block: r1-recorded names (oldest records, refresh), then the
-# r2 set, then the r3-recorded set (freshest) last.
-_PRIORITY_R04 = [
-    "dedup_fuzzy", "compact_files", "bucketed_join", "grouped_ols",
-    "anomaly_mad", "runs_encode", "interval_merge", "drift_ks",
-    "funnel_stages", "retention_cohort", "perplexity_lm",
-    # added in round 4:
-    "domain_cap", "sketch_quantile", "split_leakage",
-    "sketch_freq", "sample_bottomk", "drift_psi", "markov_transitions",
-    "embed_covariance", "bpe_train", "recursive_cte", "join_lateral",
-    "sample_weighted", "feature_bucketize", "graph_triangles",
-    "csv_roundtrip",
-]
-
-# Round-3 priority: the two queries whose r2 rows ERRED (now fixed — the
-# driver must re-record them) and queries ADDED this round first, then the
-# r1-recorded set (oldest records, refresh), then the r2-recorded set
-# (freshest records) last. New queries must be listed here to enter the
-# driver's 50-row window.
-_PRIORITY_R03 = [
-    "pagerank", "incr_agg_maintain", "orc_roundtrip", "cogroup_asof",
-    "arrow_normalize", "sketch_distinct", "resample_locf", "constraint_audit", "xml_extract", "search_bm25",
-    "agg_collect", "semdedup", "knn_recall", "tpch_q3", "tpch_q5", "tpch_q6",
-    "dedup_clusters",
-    "tpch_q2", "tpch_q4", "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q10",
-    "tpch_q11", "tpch_q12", "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16",
-    "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q20", "tpch_q21", "tpch_q22",
-    "quant_int8", "pq_error", "cluster_kmeans", "profile_columns",
-    "shuffle_export", "seq_pack", "mix_weights", "stream_upsert",
-    "qualify_topn", "win_percentiles", "unpivot_melt",
-    "merge_upsert", "scd2_dim", "variant_extract",
-]
-
-
-# Round-5 priority (VERDICT r4 items 1-3). Leads with embed_covariance —
-# the single r4 RED row (signed-zero hash fail, fixed via the z6/+0.0
-# convention) — then every query whose Spark code or oracle changed this
-# round (drift_psi oracle LEFT-join totals + epoch-micros split;
-# grouped_ols and win_lag adopted z6), then queries ADDED in r5. After
-# this block: the 24 r1-recorded names r4's window did NOT refresh
-# (oldest records on the board), then the r2 set, then r3-recorded, then
-# r4-recorded (freshest) last. Union r1–r4 = 171/171 recorded; this
-# ordering keeps every record ≤3 rounds old for changed queries.
-_PRIORITY_R05 = [
-    "embed_covariance",
-    # changed in round 5 (oracle and/or Spark expression):
-    "drift_psi", "grouped_ols", "win_lag",
-    # added in round 5:
-    "bpe_encode", "dedup_incremental", "json_roundtrip",
-    "join_skew_salted", "embed_pca_project",
-    "rolling_distinct", "mutual_info", "zipf_slope", "ngram_lm",
-    "token_entropy", "welch_ttest", "autocorr_daily", "seasonal_profile",
-    "nb_classify", "contain_shingle", "kfold_stratified", "survival_km",
-    "corpus_kl", "lorenz_gini",
-    # late-r5 ML-ops batch (queries/mlops.py):
-    "rank_fusion", "churn_label", "null_impute", "pmi_pairs",
-    "hard_negatives", "quantile_normalize", "purge_audit", "winsorize",
-    "log_odds_tokens", "embed_outliers", "twa_value", "whale_share",
-    "rfm_segments", "session_paths", "bootstrap_ci", "ngram_novelty",
-    "calibration_bins", "embed_drift",
-]
-
-# r4's window = _PRIORITY_R04 (26) + _RECORDED_R01[1:25] (rename_project
-# was slot 50 of the r3 window, not r4's).
-_RECORDED_R04 = _PRIORITY_R04 + _RECORDED_R01[1:25]
-
-# r5's window = _PRIORITY_R05 (41) + _RECORDED_R01[25:34] (the next 9 r1
-# names filled the 50).
-_RECORDED_R05 = _PRIORITY_R05 + _RECORDED_R01[25:34]
-
-
-# Round-6 priority (VERDICT r5 item 4): lead with the queries whose plan
-# or expression CHANGED in r6 (rfm_segments boundary rewrite; the four
-# fact-broadcast-guard adoptions — tpch_q4 reorientation, tpch_q12 /
-# join_range SHUFFLE_HASH pins, bucketed_join MERGE pin), then the
-# three lakehouse queries ADDED in r6 (never recorded — must enter the
-# window), then the STALEST records on the board: 16 names whose only
-# driver record is still r1 (the _RECORDED_R01 tail r5's window didn't
-# reach), then the 45 r2-only names in their r2 registration order.
-# That's 69 candidates for 50 slots — the r2 overflow (19 names)
-# carries to r7's refresh block. Union r1–r5 = 208/208 recorded; every
-# window name here has a green latest record, so the union property
-# holds regardless of where the cap lands.
-_PRIORITY_R06 = [
-    # changed in round 6 (plan pins / rewrites — re-record first):
-    "rfm_segments", "tpch_q4", "tpch_q12", "join_range", "bucketed_join",
-    "nb_classify",
-    # added in round 6 (lakehouse table format, VERDICT r5 missing #3):
-    "lakehouse_timetravel", "lakehouse_prune_scan", "lakehouse_changes",
-    # latest record still r1 (recorded-oldest):
-    "contam_ngram", "scan_parquet", "filter_pred", "project_expr",
-    "join_inner", "join_star", "join_left", "join_semi", "join_anti",
-    "agg_group", "agg_distinct", "agg_rollup", "agg_cube", "agg_having",
-    "topk_order", "set_union",
-]
-
-
-# r6's window = the 50 names CORRECTNESS_r06.json actually recorded
-# (_PRIORITY_R06's 25 + the first 25 r2-only names in registration order).
-_RECORDED_R06 = _PRIORITY_R06 + [
-    "media_features", "vocab_topk", "dedup_window", "oov_rate", "knn_exact",
-    "knn_graph", "set_intersect", "set_except", "case_bucket", "null_funcs",
-    "agg_grouping_sets", "pivot_crosstab", "subq_exists",
-    "agg_distinct_salted", "agg_conditional", "stream_dedup_wm",
-    "stream_watermark_append", "stream_session_stream",
-    "stream_stateful_totals", "stream_slide_stream", "stream_stream_join",
-    "stream_sink_parquet", "win_rank", "win_running", "win_moving",
-]
-
-# Round-7 priority (VERDICT r6 item 2): lead with the 19 queries whose
-# LATEST driver record is still r2-era — the exact overflow of r6's
-# window, recomputed from the union of CORRECTNESS_r01..r06 — plus the
-# queries ADDED or CHANGED in r7 (the lakehouse trio re-records because
-# the txlog moved to delta-manifest + checkpoint format; merge() NULL
-# and duplicate-key semantics changed per ADVICE r6). After this block
-# every remaining name's latest record is r3+ and refreshes
-# oldest-first: r3-recorded, then r4, r5, r6 (freshest) last.
-_PRIORITY_R07 = [
-    # latest record still r2 (the r6 overflow, in registration order):
-    "subq_in", "subq_scalar", "array_index_filter", "str_funcs",
-    "date_funcs", "math_funcs", "array_funcs", "json_extract",
-    "agg_percentile", "join_asof", "udf_scalar", "udaf_grouped",
-    "udtf_split", "join_interval", "annotate_overlap", "map_funcs",
-    "win_first_last", "win_ntile_dense", "win_range_frame",
-    # changed in round 7 (lakehouse delta-manifest txlog + merge fixes):
-    "lakehouse_timetravel", "lakehouse_prune_scan", "lakehouse_changes",
-    # added in round 7 (gemini domain layer through the full pipeline;
-    # lakehouse COW DELETE + RESTORE verbs; the lakehouse_feed
-    # streaming SOURCE over the txlog):
-    "gemini_gtfilter", "lakehouse_delete", "stream_lakehouse_feed",
-    "gemini_denovo",
-    # changed in round 7: media_features now emits 6 container kinds
-    # (adds image_jpeg_prog) — its r6 record is for the 5-kind output
-    "media_features",
-]
-
-
-# r7's window = the 50 names CORRECTNESS_r07.json actually recorded
-# (_PRIORITY_R07's 27 + the first 23 still-r3 names in recorded_r03
-# order).
-_RECORDED_R07 = _PRIORITY_R07 + [
-    "pagerank", "incr_agg_maintain", "orc_roundtrip", "cogroup_asof",
-    "arrow_normalize", "sketch_distinct", "resample_locf",
-    "constraint_audit", "xml_extract", "search_bm25", "agg_collect",
-    "semdedup", "knn_recall", "tpch_q3", "tpch_q5", "tpch_q6",
-    "dedup_clusters", "tpch_q2", "tpch_q7", "tpch_q8", "tpch_q9",
-    "tpch_q10", "tpch_q11",
-]
-
-# Round-8 priority (VERDICT r7 item 4): the queries ADDED in r8 (the
-# gemini_comphet inheritance row; the ivfadc_recall ladder), then the 25
-# names whose LATEST driver record is still r3-era — recomputed from the
-# union of CORRECTNESS_r01..r07, exactly the cohort the r7 verdict
-# lists. After this block every remaining name's latest record is r4+
-# and refreshes oldest-first: r4-recorded, then r5, r6, r7 (freshest)
-# last — the window's tail picks up the earliest r4 names, so no latest
-# record will be older than r4 after this round's 50 rows land.
-_PRIORITY_R08 = [
-    # added in round 8:
-    "gemini_comphet", "ivfadc_recall", "gemini_autorec", "gemini_mendelviol",
-    "lakehouse_bloom_lookup", "gemini_xlinked", "gemini_burden",
-    "gemini_roh", "gemini_sfs", "gemini_tstv", "gemini_snptypes",
-    "gemini_annotate",
-    # latest record still r3 (recorded-oldest, in r3 window order):
-    "rename_project", "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16",
-    "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q20", "tpch_q21",
-    "tpch_q22", "quant_int8", "pq_error", "cluster_kmeans",
-    "profile_columns", "shuffle_export", "seq_pack", "mix_weights",
-    "stream_upsert", "qualify_topn", "win_percentiles", "unpivot_melt",
-    "merge_upsert", "scd2_dim", "variant_extract",
-]
-
-
-# r8's window = the 50 names CORRECTNESS_r08.json actually recorded
-# (_PRIORITY_R08's 37 + the first 13 still-r4 names in recorded_r04
-# order).
-_RECORDED_R08 = _PRIORITY_R08 + [
-    "dedup_fuzzy", "compact_files", "anomaly_mad", "runs_encode",
-    "interval_merge", "drift_ks", "funnel_stages", "retention_cohort",
-    "perplexity_lm", "domain_cap", "sketch_quantile", "split_leakage",
-    "sketch_freq",
-]
-
-# Round-9 priority (VERDICT r8 item 5): queries ADDED or CHANGED in r9
-# first (the lakehouse deletion-vector row; ivfadc_recall re-records
-# because the ladder gains an OPQ rung), then the 33 names whose LATEST
-# driver record is still r4-era — exactly the cohort the r8 verdict
-# lists, recomputed from the union of CORRECTNESS_r01..r08. After this
-# block every remaining name's latest record is r5+ and refreshes
-# oldest-first (r5 → r8), so the window tail picks up the earliest r5
-# names and no latest record will be older than r5 after this round.
-_PRIORITY_R09 = [
-    # added in round 9:
-    "lakehouse_dv_delete", "lakehouse_dv_merge",
-    # changed in round 9 (IVFADC ladder gains the OPQ rung; covariance
-    # moved from the 152× explode to the Arrow Gram pass):
-    "ivfadc_recall", "embed_covariance",
-    # latest record still r4 (recorded-oldest, alphabetical = verdict list):
-    "ann_lsh", "argmax_per_group", "bpe_train", "csv_roundtrip",
-    "dedup_exact", "dedup_jaccard", "dedup_minhash_lsh", "dedup_shingle",
-    "dedup_simhash", "derive_row_stats", "dim_load_join",
-    "doc_fingerprint", "explode_split", "feature_bucketize",
-    "graph_triangles", "join_lateral", "layout_zorder",
-    "markov_transitions", "max_strlen", "neardup_cosine",
-    "posexplode_long", "prune_columns", "recursive_cte", "sample_bottomk",
-    "sample_weighted", "sim_topk", "stream_session", "stream_slide",
-    "stream_tumble", "text_quality", "text_tfidf", "token_count",
-    "vec_centroid",
-]
-
-
-# r9's window = the 50 names CORRECTNESS_r09.json recorded
-# (_PRIORITY_R09's 37 + the first 13 still-r5 names in recorded_r05
-# order).
-_RECORDED_R09 = _PRIORITY_R09 + [
-    "drift_psi", "grouped_ols", "win_lag", "bpe_encode",
-    "dedup_incremental", "json_roundtrip", "join_skew_salted",
-    "embed_pca_project", "rolling_distinct", "mutual_info", "zipf_slope",
-    "ngram_lm", "token_entropy",
-]
-
-# Round-10 priority (VERDICT r9 item 5): queries whose OUTPUT or plan
-# CHANGED in r10 first — the comp_hets fold onto the shared build
-# changed the shared cohort's parental genotypes on the k%3==0 subset
-# (comphet + the 7 parent-reading gemini rows re-record; tstv/snptypes/
-# annotate aggregate nothing the subset touches), lakehouse_prune_scan
-# now runs on a DV'd + z-ordered head, layout_zorder's bucket formula
-# moved to the overflow-proof division form (zkey values changed),
-# ivfadc_recall re-records on the single-pass nine-rung plan, and
-# dv_merge/merge gained the NULL-batch + broadcast gates — then the 34
-# names whose LATEST driver record is still r5-era (the exact cohort
-# the r9 verdict lists, recomputed from CORRECTNESS_r01..r09). After
-# this block every remaining name's latest record is r6+ and refreshes
-# oldest-first, so no latest record will be older than r6 after this
-# round's 50 rows land.
-_PRIORITY_R10 = [
-    # changed in round 10:
-    "gemini_comphet", "gemini_gtfilter", "gemini_denovo", "gemini_autorec",
-    "gemini_mendelviol", "gemini_burden", "gemini_roh", "gemini_sfs",
-    "lakehouse_prune_scan", "layout_zorder", "ivfadc_recall",
-    "lakehouse_dv_merge", "merge_upsert",
-    # r10: embed_pca_project converts rows-only → oracle-backed (the
-    # eigh solver is replaced by the deterministic squaring-chain basis
-    # the DuckDB oracle replays bit-for-bit; output values change)
-    "embed_pca_project",
-    # r10 second session: simhash_near_pairs moved the hamming filter
-    # ahead of the duplicate fold (plan changed, rows identical) and
-    # duplicate_clusters materializes its pair set once (execution path
-    # changed) — changed rows lead per the rotation convention
-    "dedup_simhash", "dedup_clusters",
-    # latest record still r5 (recorded-oldest, alphabetical = verdict list):
-    "ann_ivf", "approx_agg", "autocorr_daily", "bootstrap_ci",
-    "calibration_bins", "churn_label", "contain_shingle", "corpus_kl",
-    "curate_docs", "embed_drift", "embed_outliers", "hard_negatives",
-    "kfold_stratified", "lang_id", "log_odds_tokens", "lorenz_gini",
-    "ngram_novelty", "null_impute", "pmi_pairs", "purge_audit",
-    "quantile_normalize", "rank_fusion", "sample_frac",
-    "sample_stratified", "seasonal_profile", "session_paths",
-    "survival_km", "text_chunk", "text_repetition", "text_scrub",
-    "twa_value", "welch_ttest", "whale_share", "winsorize",
-]
-
-
-# r10's window = the 50 names CORRECTNESS_r10.json recorded
-# (_PRIORITY_R10's 48 + autocorr_daily's cohort tail reached 50).
-_RECORDED_R10 = list(_PRIORITY_R10)
-
-# Round-11 priority (VERDICT r10 item 7): rows whose EXECUTION changed in
-# r11 first — the five availableNow drains that now skip their output-free
-# final no-data batch (outputs proven byte-identical, rows-only by
-# contract), graph_triangles + pagerank (loop-invariant relations
-# materialized once; plans 10->5 / 56->10 Exchanges, values oracle-green),
-# and the three lakehouse rows whose COW/DV merge now materializes its
-# update batch once (stream_lakehouse_feed, lakehouse_timetravel,
-# lakehouse_dv_merge — outputs and oracles unchanged) — then the 46 names
-# whose LATEST driver record is still r6-era (recomputed from
-# CORRECTNESS_r01..r10; the exact cohort VERDICT r10 item 7 describes).
-# Window arithmetic: the 5 stream rows are themselves r6-era, so the
-# union is 46 + 5 = 51 for 50 slots — one changed row must yield.
-# lakehouse_changes and lakehouse_timetravel also run the changed merge
-# internally, but their declared output AND plan are unchanged (the
-# merge's batch materialization is invisible to the returned DataFrame)
-# and their latest records are r7-era; timetravel is the changed row
-# deliberately left outside the window (changes was never in it), so no
-# r6-era name is displaced and zero latest record ends older than r7.
-_PRIORITY_R11 = [
-    # changed in round 11 (drain trigger-round removal; rows-only):
-    "stream_dedup_wm", "stream_session_stream", "stream_slide_stream",
-    "stream_stateful_totals", "stream_stream_join",
-    # changed in round 11 (plan shape — loop invariants materialized):
-    "graph_triangles", "pagerank",
-    # changed in round 11 (merge machinery — outputs oracle-lockstepped):
-    "stream_lakehouse_feed", "lakehouse_dv_merge",
-    # latest record still r6 (recorded-oldest, alphabetical; the five
-    # stream rows + graph_triangles above are already in this cohort):
-    "agg_conditional", "agg_cube", "agg_distinct", "agg_distinct_salted",
-    "agg_group", "agg_grouping_sets", "agg_having", "agg_rollup",
-    "bucketed_join", "case_bucket", "contam_ngram", "dedup_window",
-    "filter_pred", "join_anti", "join_inner", "join_left", "join_range",
-    "join_semi", "join_star", "knn_exact", "knn_graph", "nb_classify",
-    "null_funcs", "oov_rate", "pivot_crosstab", "project_expr",
-    "rfm_segments", "scan_parquet", "set_except", "set_intersect",
-    "set_union", "stream_sink_parquet", "stream_watermark_append",
-    "subq_exists", "topk_order", "tpch_q12", "tpch_q4", "vocab_topk",
-    "win_moving", "win_rank", "win_running",
-]
-
-
-def _rotate_for_round() -> None:
-    order = {name: (0, i) for i, name in enumerate(_PRIORITY_R11)}
-    for i, name in enumerate(_RECORDED_R10):
-        order.setdefault(name, (10, i))
-    reg_idx = {name: i for i, name in enumerate(QUERIES)}
-    # Refresh oldest-first: any name without a listed record (new
-    # queries) enters right after the priority block, then r5 → r9.
-    # setdefault loops run NEWEST first so a multiply-recorded name
-    # sorts by its latest record.
-    for i, name in enumerate(_RECORDED_R09):
-        order.setdefault(name, (9, i))  # freshest records → back of line
-    for i, name in enumerate(_RECORDED_R08):
-        order.setdefault(name, (8, i))
-    for i, name in enumerate(_RECORDED_R07):
-        order.setdefault(name, (7, i))
-    for i, name in enumerate(_RECORDED_R06):
-        order.setdefault(name, (6, i))
-    for i, name in enumerate(_RECORDED_R05):
-        order.setdefault(name, (5, i))
-    for i, name in enumerate(_RECORDED_R04):
-        order.setdefault(name, (4, i))
-    recorded_r03 = _PRIORITY_R03[:49] + _RECORDED_R03_EXTRA
-    for i, name in enumerate(recorded_r03):
-        order.setdefault(name, (3, i))
-    reordered = sorted(
-        QUERIES.items(),
-        key=lambda kv: order.get(kv[0], (2, reg_idx[kv[0]])),
-    )
-    snapshot = dict(reordered)
-    QUERIES.clear()
-    QUERIES.update(snapshot)
-
-
-_rotate_for_round()

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from vcf2db_spark.io import table, table_wide
-from vcf2db_spark.registry import OAVG, OSUM, OSUM6, davg, dq, dsum, dsum6, r6
+from vcf2db_spark.registry import OAVG, OSUM, davg, dq, dsum, r6
 
 # --------------------------------------------------------------------------
 # A3 — sanitize/rename projection (vcf2db clean(): lowercase, ./-→_;
@@ -146,7 +146,7 @@ def argmax_per_group(spark, sf_dir):
     "dim_load_join",
     oracle=f"""
     SELECT n.n_name, COUNT(*) AS n_customers,
-           {OSUM6('c.c_acctbal')} AS sum_acctbal
+           {OSUM('c.c_acctbal')} AS sum_acctbal
     FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY n.n_name
     """,
@@ -157,7 +157,7 @@ def dim_load_join(spark, sf_dir):
     return (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
-        .agg(F.count("*").alias("n_customers"), dsum6("c_acctbal").alias("sum_acctbal"))
+        .agg(F.count("*").alias("n_customers"), dsum("c_acctbal").alias("sum_acctbal"))
     )
 
 
@@ -198,7 +198,7 @@ def max_strlen(spark, sf_dir):
       FROM embeddings
     )
     SELECT pos, COUNT(*) AS n,
-           {OSUM6('CAST(val AS DOUBLE)')} AS sum_val,
+           {OSUM('CAST(val AS DOUBLE)')} AS sum_val,
            ROUND({OAVG('CAST(val AS DOUBLE)')}, 6) AS avg_val
     FROM long GROUP BY pos
     """,
@@ -209,7 +209,7 @@ def posexplode_long(spark, sf_dir):
     v = F.col("val").cast("double")
     return long.groupBy("pos").agg(
         F.count("*").alias("n"),
-        dsum6(v).alias("sum_val"),
+        dsum(v).alias("sum_val"),
         r6(davg(v)).alias("avg_val"),
     )
 

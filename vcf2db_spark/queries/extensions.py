@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from vcf2db_spark.io import table, table_wide
-from vcf2db_spark.registry import OAVG, OSUM, OSUM6, davg, dq, dsum, dsum6, r6
+from vcf2db_spark.registry import OAVG, OSUM, davg, dq, dsum, r6
 
 # --------------------------------------------------------------------------
 # C1 — exact dedup, deterministic representative (min doc_id per key).
@@ -192,7 +192,7 @@ def text_tfidf(spark, sf_dir):
     oracle=f"""
     SELECT STRFTIME(DATE_TRUNC('hour', ts), '%Y-%m-%d %H:%M:%S') AS win_start,
            event_type, COUNT(*) AS n_events,
-           {OSUM6('value')} AS sum_value
+           {OSUM('value')} AS sum_value
     FROM events GROUP BY ALL
     """,
 )
@@ -200,7 +200,7 @@ def stream_tumble(spark, sf_dir):
     e = table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count("*").alias("n_events"), dsum6("value").alias("sum_value"))
+        .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
         .select(
             F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
             "event_type",

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from vcf2db_spark.io import table
 from vcf2db_spark.lifecycle import Lifecycle
-from vcf2db_spark.registry import OSUM6, dq, dsum6
+from vcf2db_spark.registry import OSUM, dq, dsum
 from vcf2db_spark.sinks import lakehouse as lh
 
 _TT_LC = Lifecycle()
@@ -61,15 +61,15 @@ def _fresh_root(lc: Lifecycle, tag: str) -> str:
       UNION ALL SELECT o_totalprice FROM ins)
     SELECT CAST(0 AS INTEGER) AS version,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           {OSUM6('o_totalprice')} AS sum_price
+           {OSUM('o_totalprice')} AS sum_price
     FROM sl WHERE o_orderdate < TIMESTAMP '1996-01-01'
     UNION ALL
     SELECT CAST(1 AS INTEGER), CAST(COUNT(*) AS BIGINT),
-           {OSUM6('o_totalprice')}
+           {OSUM('o_totalprice')}
     FROM sl
     UNION ALL
     SELECT CAST(2 AS INTEGER), CAST(COUNT(*) AS BIGINT),
-           {OSUM6('o_totalprice')}
+           {OSUM('o_totalprice')}
     FROM v2
     """,
 )
@@ -112,7 +112,7 @@ def lakehouse_timetravel(spark, sf_dir):
         lh.read(spark, root, v).agg(
             F.lit(v).cast("int").alias("version"),
             F.count(F.lit(1)).alias("n_rows"),
-            dsum6("o_totalprice").alias("sum_price"),
+            dsum("o_totalprice").alias("sum_price"),
         )
         for v in (0, 1, 2)
     ]
@@ -124,7 +124,7 @@ def lakehouse_timetravel(spark, sf_dir):
     oracle=f"""
     SELECT STRFTIME(o_orderdate, '%Y-%m') AS month,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           {OSUM6('o_totalprice')} AS sum_price
+           {OSUM('o_totalprice')} AS sum_price
     FROM orders
     WHERE o_custkey % 3 = 0
       AND o_orderkey % 10 <> 7
@@ -174,7 +174,7 @@ def lakehouse_prune_scan(spark, sf_dir):
         .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            dsum6("o_totalprice").alias("sum_price"),
+            dsum("o_totalprice").alias("sum_price"),
         )
     )
 
@@ -196,10 +196,10 @@ _CDF_LC = Lifecycle()
       FROM orders WHERE o_custkey % 11 = 1 AND o_orderkey % 131 = 0)
     SELECT 'update_postimage' AS _change,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           {OSUM6('new_price')} AS sum_price
+           {OSUM('new_price')} AS sum_price
     FROM upd
     UNION ALL
-    SELECT 'insert', CAST(COUNT(*) AS BIGINT), {OSUM6('o_totalprice')}
+    SELECT 'insert', CAST(COUNT(*) AS BIGINT), {OSUM('o_totalprice')}
     FROM ins
     """,
 )
@@ -243,7 +243,7 @@ def lakehouse_changes(spark, sf_dir):
     feed = table_changes(spark, root, 0, 1, key="o_orderkey")
     return feed.groupBy("_change").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        dsum6("o_totalprice").alias("sum_price"),
+        dsum("o_totalprice").alias("sum_price"),
     )
 
 
@@ -258,11 +258,11 @@ _DEL_LC = Lifecycle()
       FROM orders WHERE o_custkey % 5 = 2)
     SELECT 'after_delete' AS state,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           {OSUM6('o_totalprice')} AS sum_price
+           {OSUM('o_totalprice')} AS sum_price
     FROM s
     WHERE NOT (o_orderdate < TIMESTAMP '1994-01-01' AND o_orderkey % 2 = 0)
     UNION ALL
-    SELECT 'restored', CAST(COUNT(*) AS BIGINT), {OSUM6('o_totalprice')}
+    SELECT 'restored', CAST(COUNT(*) AS BIGINT), {OSUM('o_totalprice')}
     FROM s
     """,
 )
@@ -299,13 +299,13 @@ def lakehouse_delete(spark, sf_dir):
     after = lh.read(spark, root).agg(
         F.lit("after_delete").alias("state"),
         F.count(F.lit(1)).alias("n_rows"),
-        dsum6("o_totalprice").alias("sum_price"),
+        dsum("o_totalprice").alias("sum_price"),
     )
     lh.restore(root, 0)
     restored = lh.read(spark, root).agg(
         F.lit("restored").alias("state"),
         F.count(F.lit(1)).alias("n_rows"),
-        dsum6("o_totalprice").alias("sum_price"),
+        dsum("o_totalprice").alias("sum_price"),
     )
     return after.unionByName(restored)
 
@@ -321,11 +321,11 @@ _FEED_LC = Lifecycle()
       FROM orders WHERE o_custkey % 9 = 4)
     SELECT 'insert' AS _change,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           {OSUM6('o_totalprice')} AS sum_price
+           {OSUM('o_totalprice')} AS sum_price
     FROM s
     UNION ALL
     SELECT 'merge_postimage', CAST(COUNT(*) AS BIGINT),
-           {OSUM6("CASE WHEN o_orderkey % 4 = 0 THEN o_totalprice + 25.0 ELSE o_totalprice END")}
+           {OSUM("CASE WHEN o_orderkey % 4 = 0 THEN o_totalprice + 25.0 ELSE o_totalprice END")}
     FROM s
     """,
 )
@@ -380,7 +380,7 @@ def stream_lakehouse_feed(spark, sf_dir):
         drained.groupBy("_change")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            dsum6("o_totalprice").alias("sum_price"),
+            dsum("o_totalprice").alias("sum_price"),
         )
     )
 
@@ -399,7 +399,7 @@ _BLOOM_LC = Lifecycle()
     SELECT CAST(s.o_orderkey AS BIGINT) AS o_orderkey,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(MAX(s.o_custkey) AS BIGINT) AS custkey,
-           {OSUM6('s.o_totalprice')} AS sum_price
+           {OSUM('s.o_totalprice')} AS sum_price
     FROM s JOIN keys USING (o_orderkey)
     GROUP BY 1 ORDER BY 1
     """,
@@ -445,7 +445,7 @@ def lakehouse_bloom_lookup(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.max("o_custkey").cast("bigint").alias("custkey"),
-            dsum6("o_totalprice").alias("sum_price"),
+            dsum("o_totalprice").alias("sum_price"),
         )
         .orderBy("o_orderkey")
     )
@@ -462,11 +462,11 @@ _DV_LC = Lifecycle()
       FROM orders WHERE o_custkey % 5 = 4)
     SELECT 'pre_delete' AS state,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           {OSUM6('o_totalprice')} AS sum_price
+           {OSUM('o_totalprice')} AS sum_price
     FROM s
     UNION ALL
     SELECT 'after_dv_delete', CAST(COUNT(*) AS BIGINT),
-           {OSUM6('o_totalprice')}
+           {OSUM('o_totalprice')}
     FROM s WHERE NOT (o_orderkey % 97 = 1)
     UNION ALL
     SELECT 'data_files_rewritten', CAST(0 AS BIGINT), 0.0
@@ -510,12 +510,12 @@ def lakehouse_dv_delete(spark, sf_dir):
     pre = lh.read(spark, root, v0).agg(
         F.lit("pre_delete").alias("state"),
         F.count(F.lit(1)).alias("n_rows"),
-        dsum6("o_totalprice").alias("sum_price"),
+        dsum("o_totalprice").alias("sum_price"),
     )
     after = lh.read(spark, root).agg(
         F.lit("after_dv_delete").alias("state"),
         F.count(F.lit(1)).alias("n_rows"),
-        dsum6("o_totalprice").alias("sum_price"),
+        dsum("o_totalprice").alias("sum_price"),
     )
     files_row = spark.createDataFrame(
         [("data_files_rewritten", rewritten, 0.0)],
@@ -545,10 +545,10 @@ _DVM_LC = Lifecycle()
       UNION ALL SELECT o_totalprice FROM ins)
     SELECT 'after_dv_merge' AS state,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           {OSUM6('p')} AS sum_price
+           {OSUM('p')} AS sum_price
     FROM merged
     UNION ALL
-    SELECT 'pre_merge', CAST(COUNT(*) AS BIGINT), {OSUM6('o_totalprice')}
+    SELECT 'pre_merge', CAST(COUNT(*) AS BIGINT), {OSUM('o_totalprice')}
     FROM s
     UNION ALL
     SELECT 'touched_files_rewritten', CAST(0 AS BIGINT), 0.0
@@ -607,12 +607,12 @@ def lakehouse_dv_merge(spark, sf_dir):
     pre = lh.read(spark, root, v0).agg(
         F.lit("pre_merge").alias("state"),
         F.count(F.lit(1)).alias("n_rows"),
-        dsum6("o_totalprice").alias("sum_price"),
+        dsum("o_totalprice").alias("sum_price"),
     )
     after = lh.read(spark, root).agg(
         F.lit("after_dv_merge").alias("state"),
         F.count(F.lit(1)).alias("n_rows"),
-        dsum6("o_totalprice").alias("sum_price"),
+        dsum("o_totalprice").alias("sum_price"),
     )
     files_row = spark.createDataFrame(
         [("touched_files_rewritten", rewritten, 0.0)],

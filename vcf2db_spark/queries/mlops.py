@@ -22,7 +22,7 @@ from vcf2db_spark.functions.text import ws_tokens
 from vcf2db_spark.io import table, table_wide
 from vcf2db_spark.lifecycle import Lifecycle
 from vcf2db_spark.operators.similarity import dot as hof_dot
-from vcf2db_spark.registry import OAVG, OSUM6, davg, dq, dsum6, r6, z6
+from vcf2db_spark.registry import OAVG, OSUM, davg, dq, dsum, r6, z6
 
 _RRF_K = 60.0
 _FUSION_TERMS = ("join", "window", "scan")  # same query as search_bm25
@@ -59,7 +59,7 @@ def _pid_rank(df, order_cols, alias):
     dfs AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
     lex AS (
       SELECT doc_id,
-             {OSUM6("tf * LN((CAST(n AS DOUBLE) + 1.0) / (CAST(df AS DOUBLE) + 1.0))")} AS score
+             {OSUM("tf * LN((CAST(n AS DOUBLE) + 1.0) / (CAST(df AS DOUBLE) + 1.0))")} AS score
       FROM tf JOIN dfs USING (tok), nd GROUP BY doc_id, n
     ),
     lex20 AS (
@@ -101,7 +101,7 @@ def rank_fusion(spark, sf_dir):
     """Reciprocal-rank fusion (k=60) of tf-idf lexical top-20 and
     cosine semantic top-20 (query = embedding 0 / terms 'join window
     scan'). Ranks are integers from fixed-point-deterministic scores
-    (dsum6 lexical, z6 cosine), so 1/(k+rank) is the identical double on
+    (dsum lexical, z6 cosine), so 1/(k+rank) is the identical double on
     both engines; both lists arrive via TakeOrderedAndProject and the
     single-task rank windows are explicit (_pid). At 100 TB the two
     retrieval legs are the scale paths (inverted postings / ANN index);
@@ -122,7 +122,7 @@ def rank_fusion(spark, sf_dir):
         .crossJoin(F.broadcast(nd))
         .groupBy("doc_id")
         .agg(
-            dsum6(
+            dsum(
                 F.col("tf")
                 * F.log(
                     (F.col("n").cast("double") + 1.0)
@@ -507,7 +507,7 @@ def quantile_normalize(spark, sf_dir):
            CAST(COUNT(del.c_custkey) AS BIGINT) AS n_purged,
            CAST(COUNT(CASE WHEN del.c_custkey IS NULL THEN 1 END) AS BIGINT)
              AS n_kept,
-           {OSUM6("CASE WHEN del.c_custkey IS NULL THEN o_totalprice ELSE 0.0 END")}
+           {OSUM("CASE WHEN del.c_custkey IS NULL THEN o_totalprice ELSE 0.0 END")}
              AS kept_value
     FROM orders o LEFT JOIN del ON del.c_custkey = o.o_custkey
     GROUP BY o_orderpriority
@@ -535,7 +535,7 @@ def purge_audit(spark, sf_dir):
         F.count(F.lit(1)).alias("n_total"),
         F.count("c_custkey").alias("n_purged"),
         F.count(F.when(kept, 1)).alias("n_kept"),
-        dsum6(F.when(kept, F.col("o_totalprice")).otherwise(0.0)).alias(
+        dsum(F.when(kept, F.col("o_totalprice")).otherwise(0.0)).alias(
             "kept_value"
         ),
     )
@@ -737,14 +737,14 @@ def log_odds_tokens(spark, sf_dir):
     ),
     d AS (
       SELECT vec_id, cells.label,
-             {OSUM6('(val - c) * (val - c)')} AS d2
+             {OSUM('(val - c) * (val - c)')} AS d2
       FROM cells JOIN cent ON cent.label = cells.label
                           AND cent.pos = cells.pos
       GROUP BY vec_id, cells.label
     ),
     m AS (
       SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-             {OSUM6('d2')} AS s1, {OSUM6('d2 * d2')} AS s2
+             {OSUM('d2')} AS s1, {OSUM('d2 * d2')} AS s2
       FROM d GROUP BY label
     )
     SELECT vec_id, d.label, d2,
@@ -778,12 +778,12 @@ def embed_outliers(spark, sf_dir):
     d = (
         cells.join(F.broadcast(cent), ["label", "pos"])
         .groupBy("vec_id", "label")
-        .agg(dsum6(diff * diff).alias("d2"))
+        .agg(dsum(diff * diff).alias("d2"))
     )
     m = d.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        dsum6("d2").alias("s1"),
-        dsum6(F.col("d2") * F.col("d2")).alias("s2"),
+        dsum("d2").alias("s1"),
+        dsum(F.col("d2") * F.col("d2")).alias("s2"),
     )
     nv = F.col("n_vecs").cast("double")
     mean = F.col("s1") / nv
@@ -1465,7 +1465,7 @@ def ngram_novelty(spark, sf_dir):
     ),
     m AS (
       SELECT {OAVG('value')} AS mu,
-             {OSUM6('value * value')} AS s2,
+             {OSUM('value * value')} AS s2,
              CAST(COUNT(*) AS BIGINT) AS n
       FROM s
     ),
@@ -1509,7 +1509,7 @@ def calibration_bins(spark, sf_dir):
     )
     m = s.agg(
         davg("value").alias("mu"),
-        dsum6(F.col("value") * F.col("value")).alias("s2"),
+        dsum(F.col("value") * F.col("value")).alias("s2"),
         F.count(F.lit(1)).alias("n"),
     )
     z = (F.col("value") - F.col("mu")) / F.sqrt(
@@ -1565,7 +1565,7 @@ def _embed_drift_oracle():
     )
     SELECT label, CAST(MAX(na) AS BIGINT) AS n_a,
            CAST(MAX(nb) AS BIGINT) AS n_b,
-           (ROUND(SQRT({OSUM6('(ca - cb) * (ca - cb)')}), 6) + 0.0)
+           (ROUND(SQRT({OSUM('(ca - cb) * (ca - cb)')}), 6) + 0.0)
              AS l2_shift
     FROM c GROUP BY label
     """
@@ -1607,5 +1607,5 @@ def embed_drift(spark, sf_dir):
     return c.groupBy("label").agg(
         F.max("na").alias("n_a"),
         F.max("nb").alias("n_b"),
-        z6(F.sqrt(dsum6(diff * diff))).alias("l2_shift"),
+        z6(F.sqrt(dsum(diff * diff))).alias("l2_shift"),
     )

@@ -25,7 +25,7 @@ from vcf2db_spark.operators.dedup import (
     simhash_near_pairs,
 )
 from vcf2db_spark.operators.similarity import ivf_topk, lsh_topk
-from vcf2db_spark.registry import OAVG, OSUM, OSUM6, OZ6, davg, dq, dsum6, r6
+from vcf2db_spark.registry import OAVG, OSUM, OZ6, davg, dq, dsum, r6, z6
 
 # --------------------------------------------------------------------------
 # C2 exact twin — token-set Jaccard near-dup pairs (bounded input; the
@@ -1371,7 +1371,7 @@ _BM25_TERMS = ("join", "window", "scan")
               JOIN lens ON tf.doc_id = lens.doc_id
               CROSS JOIN corpus
     )
-    SELECT doc_id, {OSUM6('c')} AS score
+    SELECT doc_id, {OSUM('c')} AS score
     FROM contrib GROUP BY doc_id
     ORDER BY score DESC, doc_id LIMIT 20
     """,
@@ -1414,7 +1414,7 @@ def search_bm25(spark, sf_dir):
     )
     return (
         contrib.groupBy("doc_id")
-        .agg(dsum6("c").alias("score"))
+        .agg(dsum("c").alias("score"))
         .orderBy(F.col("score").desc(), "doc_id")
         .limit(20)
     )
@@ -1791,7 +1791,6 @@ def zipf_slope(spark, sf_dir):
     from pyspark.sql import Window
 
     from vcf2db_spark.functions.text import ws_tokens
-    from vcf2db_spark.registry import dsum, z6
 
     d = table_wide(spark, sf_dir, "documents", "doc_id")
     tok = d.select("lang", F.explode(ws_tokens(F.trim(F.col("text")))).alias("token"))
@@ -1944,7 +1943,6 @@ def token_entropy(spark, sf_dir):
     from pyspark.sql import Window
 
     from vcf2db_spark.functions.text import ws_tokens
-    from vcf2db_spark.registry import dsum
 
     d = table_wide(spark, sf_dir, "documents", "doc_id")
     tok = d.select("doc_id", F.explode(ws_tokens(F.trim(F.col("text")))).alias("token"))
@@ -2085,7 +2083,6 @@ def nb_classify(spark, sf_dir):
     from pyspark.sql import Window
 
     from vcf2db_spark.functions.text import ws_tokens
-    from vcf2db_spark.registry import dsum, z6
 
     d = table_wide(spark, sf_dir, "documents", "doc_id")
     tok = d.select(
@@ -2229,7 +2226,6 @@ def corpus_kl(spark, sf_dir):
     sized exchange is the token count aggregate (partial-aggregated);
     everything downstream is vocabulary-sized then scalar."""
     from vcf2db_spark.functions.text import ws_tokens
-    from vcf2db_spark.registry import dsum, z6
 
     d = table_wide(spark, sf_dir, "documents", "doc_id")
     tok = d.select(

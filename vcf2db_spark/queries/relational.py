@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from vcf2db_spark.io import table
-from vcf2db_spark.registry import OAVG, OSUM, OSUM6, davg, dq, dsum, dsum6, r6
+from vcf2db_spark.registry import OAVG, OSUM, davg, dq, dsum, r6
 
 # --------------------------------------------------------------------------
 # A1 — full scan (source smoke; at scale: parquet vectorized reader,
@@ -106,7 +106,7 @@ def join_inner(spark, sf_dir):
     "join_star",
     oracle=f"""
     SELECT r.r_name, n.n_name,
-           {OSUM6('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
+           {OSUM('l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
            COUNT(*) AS n_items
     FROM lineitem l
     JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -141,7 +141,7 @@ def join_star(spark, sf_dir):
         .join(F.broadcast(r.select("r_regionkey", "r_name")), n.n_regionkey == r.r_regionkey)
         .groupBy("r_name", "n_name")
         .agg(
-            dsum6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
             F.count("*").alias("n_items"),
         )
     )
@@ -160,7 +160,7 @@ def join_star(spark, sf_dir):
     "join_skew_salted",
     oracle=f"""
     SELECT s.s_nationkey, COUNT(*) AS n_lines,
-           {OSUM6('f.l_extendedprice')} AS revenue
+           {OSUM('f.l_extendedprice')} AS revenue
     FROM (SELECT CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE l_suppkey END AS k,
                  l_extendedprice
           FROM lineitem) f
@@ -198,7 +198,7 @@ def join_skew_salted(spark, sf_dir):
     )
     return j.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_lines"),
-        dsum6(F.col("l_extendedprice")).alias("revenue"),
+        dsum(F.col("l_extendedprice")).alias("revenue"),
     )
 
 
@@ -274,10 +274,10 @@ def join_anti(spark, sf_dir):
     "agg_group",
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           {OSUM6('l_quantity')} AS sum_qty,
-           {OSUM6('l_extendedprice')} AS sum_base_price,
-           {OSUM6('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-           {OSUM6('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
+           {OSUM('l_quantity')} AS sum_qty,
+           {OSUM('l_extendedprice')} AS sum_base_price,
+           {OSUM('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+           {OSUM('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
            ROUND({OAVG('l_quantity')}, 6) AS avg_qty,
            ROUND({OAVG('l_extendedprice')}, 6) AS avg_price,
            ROUND({OAVG('l_discount')}, 6) AS avg_disc,
@@ -295,10 +295,10 @@ def agg_group(spark, sf_dir):
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            dsum6("l_quantity").alias("sum_qty"),
-            dsum6("l_extendedprice").alias("sum_base_price"),
-            dsum6(disc_price).alias("sum_disc_price"),
-            dsum6(charge).alias("sum_charge"),
+            dsum("l_quantity").alias("sum_qty"),
+            dsum("l_extendedprice").alias("sum_base_price"),
+            dsum(disc_price).alias("sum_disc_price"),
+            dsum(charge).alias("sum_charge"),
             r6(davg("l_quantity")).alias("avg_qty"),
             r6(davg("l_extendedprice")).alias("avg_price"),
             r6(davg("l_discount")).alias("avg_disc"),
@@ -358,7 +358,7 @@ def agg_rollup(spark, sf_dir):
     "agg_cube",
     oracle=f"""
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
-           {OSUM6('o_totalprice')} AS sum_price
+           {OSUM('o_totalprice')} AS sum_price
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
@@ -366,7 +366,7 @@ def agg_rollup(spark, sf_dir):
 def agg_cube(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count("*").alias("n_orders"), dsum6("o_totalprice").alias("sum_price")
+        F.count("*").alias("n_orders"), dsum("o_totalprice").alias("sum_price")
     )
 
 
@@ -378,7 +378,7 @@ def agg_cube(spark, sf_dir):
 @dq(
     "agg_having",
     oracle=f"""
-    SELECT o_custkey, {OSUM6('o_totalprice')} AS total_spend,
+    SELECT o_custkey, {OSUM('o_totalprice')} AS total_spend,
            COUNT(*) AS n_orders
     FROM orders
     GROUP BY o_custkey
@@ -508,7 +508,7 @@ def case_bucket(spark, sf_dir):
     "null_funcs",
     oracle=f"""
     SELECT c.c_custkey,
-           COALESCE({OSUM6('o.o_totalprice')}, 0.0) AS big_spend,
+           COALESCE({OSUM('o.o_totalprice')}, 0.0) AS big_spend,
            CASE WHEN COUNT(o.o_orderkey) = 0 THEN 1 ELSE 0 END AS no_big_orders,
            COUNT(NULLIF(o.o_orderstatus, 'F')) AS n_open_big
     FROM customer c
@@ -524,7 +524,7 @@ def null_funcs(spark, sf_dir):
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
         .agg(
-            F.coalesce(dsum6("o_totalprice"), F.lit(0.0)).alias("big_spend"),
+            F.coalesce(dsum("o_totalprice"), F.lit(0.0)).alias("big_spend"),
             F.when(F.count("o_orderkey") == 0, 1).otherwise(0).alias("no_big_orders"),
             F.count(F.nullif(F.col("o_orderstatus"), F.lit("F"))).alias("n_open_big"),
         )
@@ -542,7 +542,7 @@ def null_funcs(spark, sf_dir):
     oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
            GROUPING(o_orderstatus, o_orderpriority) AS gid,
-           COUNT(*) AS n_orders, {OSUM6('o_totalprice')} AS sum_price
+           COUNT(*) AS n_orders, {OSUM('o_totalprice')} AS sum_price
     FROM orders
     GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
                             (o_orderstatus), ())
@@ -721,7 +721,7 @@ def agg_conditional(spark, sf_dir):
 @dq(
     "tpch_q6",
     oracle=f"""
-    SELECT {OSUM6('l_extendedprice * l_discount')} AS revenue,
+    SELECT {OSUM('l_extendedprice * l_discount')} AS revenue,
            COUNT(*) AS n_lines
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -743,7 +743,7 @@ def tpch_q6(spark, sf_dir):
         )
         .groupBy()
         .agg(
-            dsum6(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"),
+            dsum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -753,7 +753,7 @@ def tpch_q6(spark, sf_dir):
     "tpch_q3",
     oracle=f"""
     SELECT l_orderkey,
-           {OSUM6('l_extendedprice * (1 - l_discount)')} AS revenue,
+           {OSUM('l_extendedprice * (1 - l_discount)')} AS revenue,
            STRFTIME(o_orderdate, '%Y-%m-%d') AS orderdate,
            o_orderpriority
     FROM customer c
@@ -784,7 +784,7 @@ def tpch_q3(spark, sf_dir):
         .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            dsum6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
         )
         .select(
             "l_orderkey",
@@ -801,7 +801,7 @@ def tpch_q3(spark, sf_dir):
     "tpch_q5",
     oracle=f"""
     SELECT n.n_name,
-           {OSUM6('l_extendedprice * (1 - l_discount)')} AS revenue
+           {OSUM('l_extendedprice * (1 - l_discount)')} AS revenue
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -856,7 +856,7 @@ def tpch_q5(spark, sf_dir):
         )
         .groupBy("n_name")
         .agg(
-            dsum6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
         )
         .orderBy(F.col("revenue").desc())
     )

@@ -18,7 +18,7 @@ fixture's reduced schema (TESTDATA.md):
   ``c_nationkey % 10``.
 
 Every double aggregate uses the repo-wide fixed-point convention
-(registry.dsum6 / OSUM6: round to 10⁻⁶ units, exact BIGINT sum) so the
+(registry.dsum / OSUM: round to 10⁻⁶ units, exact BIGINT sum) so the
 Spark and DuckDB results are bitwise identical regardless of partial-agg
 order — which is also what makes the scalar-subquery comparisons
 (Q11/Q15/Q22) and the min-cost equality join (Q2) deterministic.
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from vcf2db_spark.io import table
-from vcf2db_spark.registry import OAVG, OSUM6, davg, dq, dsum6
+from vcf2db_spark.registry import OAVG, OSUM, davg, dq, dsum
 
 # --------------------------------------------------------------------------
 # partsupp proxy (shared by Q2 / Q11 / Q16 / Q20)
@@ -206,7 +206,7 @@ def tpch_q4(spark, sf_dir):
     oracle=f"""
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            YEAR(l_shipdate) AS l_year,
-           {OSUM6('l_extendedprice * (1 - l_discount)')} AS revenue
+           {OSUM('l_extendedprice * (1 - l_discount)')} AS revenue
     FROM supplier, lineitem, orders, customer, nation n1, nation n2
     WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
       AND c_custkey = o_custkey
@@ -259,7 +259,7 @@ def tpch_q7(spark, sf_dir):
         )
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(
-            dsum6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
         )
     )
 
@@ -273,8 +273,8 @@ def tpch_q7(spark, sf_dir):
     "tpch_q8",
     oracle=f"""
     SELECT YEAR(o_orderdate) AS o_year,
-           ({OSUM6("CASE WHEN n2.n_name = 'NATION_3' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")})
-           / ({OSUM6('l_extendedprice * (1 - l_discount)')}) AS mkt_share
+           ({OSUM("CASE WHEN n2.n_name = 'NATION_3' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")})
+           / ({OSUM('l_extendedprice * (1 - l_discount)')}) AS mkt_share
     FROM part, lineitem, supplier, orders, customer, nation n1, nation n2, region
     WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
       AND l_orderkey = o_orderkey AND o_custkey = c_custkey
@@ -332,8 +332,8 @@ def tpch_q8(spark, sf_dir):
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             (
-                dsum6(F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0.0)))
-                / dsum6(vol)
+                dsum(F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0.0)))
+                / dsum(vol)
             ).alias("mkt_share")
         )
     )
@@ -348,7 +348,7 @@ def tpch_q8(spark, sf_dir):
     "tpch_q9",
     oracle=f"""
     SELECT n_name AS nation, YEAR(o_orderdate) AS o_year,
-           {OSUM6('l_extendedprice * (1 - l_discount) - 0.1 * p_retailprice * l_quantity')} AS sum_profit
+           {OSUM('l_extendedprice * (1 - l_discount) - 0.1 * p_retailprice * l_quantity')} AS sum_profit
     FROM part, supplier, lineitem, orders, nation
     WHERE s_suppkey = l_suppkey AND p_partkey = l_partkey
       AND o_orderkey = l_orderkey AND s_nationkey = n_nationkey
@@ -388,7 +388,7 @@ def tpch_q9(spark, sf_dir):
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year"))
-        .agg(dsum6(amount).alias("sum_profit"))
+        .agg(dsum(amount).alias("sum_profit"))
     )
 
 
@@ -401,7 +401,7 @@ def tpch_q9(spark, sf_dir):
     "tpch_q10",
     oracle=f"""
     SELECT c_custkey, c_name,
-           {OSUM6('l_extendedprice * (1 - l_discount)')} AS revenue,
+           {OSUM('l_extendedprice * (1 - l_discount)')} AS revenue,
            c_acctbal, n_name
     FROM customer, orders, lineitem, nation
     WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
@@ -431,7 +431,7 @@ def tpch_q10(spark, sf_dir):
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
-            dsum6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
         )
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.col("revenue").desc(), "c_custkey")
@@ -453,10 +453,10 @@ def tpch_q10(spark, sf_dir):
            FROM ps, supplier, nation
            WHERE ps.l_suppkey = s_suppkey AND s_nationkey = n_nationkey
              AND n_name = 'NATION_12')
-    SELECT partkey, {OSUM6('val')} AS value
+    SELECT partkey, {OSUM('val')} AS value
     FROM de
     GROUP BY partkey
-    HAVING {OSUM6('val')} > (SELECT {OSUM6('val')} * 0.001 FROM de)
+    HAVING {OSUM('val')} > (SELECT {OSUM('val')} * 0.001 FROM de)
     """,
 )
 def tpch_q11(spark, sf_dir):
@@ -495,7 +495,7 @@ def tpch_q11(spark, sf_dir):
     # the per-part units (exact BIGINT addition — identical to summing the
     # raw rows), so the fact subtree is aggregated once and the total
     # branch reads the reused per-part exchange (n_parts rows) instead of
-    # re-joining all of ps. value = units/1e6 reproduces dsum6 bit-exactly.
+    # re-joining all of ps. value = units/1e6 reproduces dsum bit-exactly.
     per_part = de.groupBy("partkey").agg(
         F.sum(F.round(F.col("val") * 1_000_000.0).cast("long")).alias("_units")
     )
@@ -613,8 +613,8 @@ def tpch_q13(spark, sf_dir):
 @dq(
     "tpch_q14",
     oracle=f"""
-    SELECT (100.0 * ({OSUM6("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")}))
-           / ({OSUM6('l_extendedprice * (1 - l_discount)')}) AS promo_revenue
+    SELECT (100.0 * ({OSUM("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")}))
+           / ({OSUM('l_extendedprice * (1 - l_discount)')}) AS promo_revenue
     FROM lineitem, part
     WHERE l_partkey = p_partkey
       AND l_shipdate >= TIMESTAMP '1997-09-01'
@@ -636,8 +636,8 @@ def tpch_q14(spark, sf_dir):
         .groupBy()
         .agg(
             (
-                (F.lit(100.0) * dsum6(F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0))))
-                / dsum6(vol)
+                (F.lit(100.0) * dsum(F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0))))
+                / dsum(vol)
             ).alias("promo_revenue")
         )
     )
@@ -653,7 +653,7 @@ def tpch_q14(spark, sf_dir):
     oracle=f"""
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
-             {OSUM6('l_extendedprice * (1 - l_discount)')} AS total_revenue
+             {OSUM('l_extendedprice * (1 - l_discount)')} AS total_revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         AND l_shipdate < TIMESTAMP '1997-04-01'
@@ -674,7 +674,7 @@ def tpch_q15(spark, sf_dir):
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        dsum6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
             "total_revenue"
         )
     )
@@ -750,7 +750,7 @@ def tpch_q16(spark, sf_dir):
 @dq(
     "tpch_q17",
     oracle=f"""
-    SELECT {OSUM6('l_extendedprice')} / 7.0 AS avg_yearly
+    SELECT {OSUM('l_extendedprice')} / 7.0 AS avg_yearly
     FROM lineitem, part
     WHERE p_partkey = l_partkey
       AND p_brand = 'Brand#3' AND p_size < 10
@@ -781,7 +781,7 @@ def tpch_q17(spark, sf_dir):
         .join(F.broadcast(avg_qty), F.col("l_partkey") == F.col("t_partkey"))
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .groupBy()
-        .agg((dsum6("l_extendedprice") / F.lit(7.0)).alias("avg_yearly"))
+        .agg((dsum("l_extendedprice") / F.lit(7.0)).alias("avg_yearly"))
     )
 
 
@@ -850,7 +850,7 @@ def tpch_q18(spark, sf_dir):
 @dq(
     "tpch_q19",
     oracle=f"""
-    SELECT {OSUM6('l_extendedprice * (1 - l_discount)')} AS revenue
+    SELECT {OSUM('l_extendedprice * (1 - l_discount)')} AS revenue
     FROM lineitem, part
     WHERE p_partkey = l_partkey
       AND ((p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
@@ -881,7 +881,7 @@ def tpch_q19(spark, sf_dir):
         .filter(cond)
         .groupBy()
         .agg(
-            dsum6(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
         )
     )
 
@@ -1049,7 +1049,7 @@ def tpch_q21(spark, sf_dir):
     thr AS (SELECT {OAVG('c_acctbal')} AS a FROM pool
             WHERE c_acctbal > 0.0)
     SELECT cntrycode, COUNT(*) AS numcust,
-           {OSUM6('c_acctbal')} AS totacctbal
+           {OSUM('c_acctbal')} AS totacctbal
     FROM pool, thr
     WHERE c_acctbal > thr.a
       AND NOT EXISTS (SELECT 1 FROM orders
@@ -1087,6 +1087,6 @@ def tpch_q22(spark, sf_dir):
         .groupBy("cntrycode")
         .agg(
             F.count("*").alias("numcust"),
-            dsum6("c_acctbal").alias("totacctbal"),
+            dsum("c_acctbal").alias("totacctbal"),
         )
     )

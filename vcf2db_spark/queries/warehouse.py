@@ -16,7 +16,7 @@ from pyspark.sql import Window, functions as F
 
 from vcf2db_spark.lifecycle import Lifecycle
 from vcf2db_spark.io import table
-from vcf2db_spark.registry import OSUM6, dq, dsum6
+from vcf2db_spark.registry import OSUM, dq, dsum
 
 # --------------------------------------------------------------------------
 # batch MERGE INTO (upsert): customers refreshed from recent orders, plus
@@ -128,7 +128,7 @@ def scd2_dim(spark, sf_dir):
     "incr_agg_maintain",
     oracle=f"""
     SELECT o_custkey, COUNT(*) AS n_orders,
-           {OSUM6('o_totalprice')} AS total_spend,
+           {OSUM('o_totalprice')} AS total_spend,
            CASE WHEN MIN(o_orderdate) >= TIMESTAMP '1998-01-01' THEN 'new'
                 WHEN MAX(o_orderdate) >= TIMESTAMP '1998-01-01' THEN 'updated'
                 ELSE 'unchanged' END AS upd_state
@@ -498,7 +498,7 @@ def compact_files(spark, sf_dir):
     "bucketed_join",
     oracle=f"""
     SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_lines,
-           {OSUM6('l_extendedprice')} AS revenue
+           {OSUM('l_extendedprice')} AS revenue
     FROM orders JOIN lineitem ON o_orderkey = l_orderkey
     WHERE o_custkey % 11 = 0
     GROUP BY o_orderstatus
@@ -560,6 +560,6 @@ def bucketed_join(spark, sf_dir):
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            dsum6("l_extendedprice").alias("revenue"),
+            dsum("l_extendedprice").alias("revenue"),
         )
     )

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from vcf2db_spark.io import table, table_wide
-from vcf2db_spark.registry import OAVG, OSUM, OSUM6, davg, dq, dsum, dsum6, r6, z6
+from vcf2db_spark.registry import OAVG, OSUM, davg, dq, dsum, r6, z6
 
 # --------------------------------------------------------------------------
 # B14 — ranking windows (rank variants within gene shape). Unique-key
@@ -240,7 +240,7 @@ def str_funcs(spark, sf_dir):
            YEAR(o_orderdate) AS yr,
            MONTH(o_orderdate) AS mon,
            COUNT(*) AS n_orders,
-           {OSUM6('o_totalprice')} AS sum_price
+           {OSUM('o_totalprice')} AS sum_price
     FROM orders
     GROUP BY ALL
     """,
@@ -255,7 +255,7 @@ def date_funcs(spark, sf_dir):
             "o_totalprice",
         )
         .groupBy("month_start", "yr", "mon")
-        .agg(F.count("*").alias("n_orders"), dsum6("o_totalprice").alias("sum_price"))
+        .agg(F.count("*").alias("n_orders"), dsum("o_totalprice").alias("sum_price"))
     )
 
 

@@ -57,6 +57,7 @@ _SCALE = 1_000_000.0
 
 
 def dsum(col: Column | str) -> Column:
+    """Fixed-point sum at 10⁻⁶ resolution (already 6-decimal-exact)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(F.round(c * _SCALE).cast("long")).cast("double") / F.lit(_SCALE)
 
@@ -87,24 +88,14 @@ def z6(col: Column) -> Column:
     return F.round(col, 6) + F.lit(0.0)
 
 
-def dsum6(col: Column | str) -> Column:
-    """Fixed-point sum at 10⁻⁶ resolution (already 6-decimal-exact; the
-    name is kept from the round-1 decimal-space convention)."""
-    return dsum(col)
-
-
 # ---- Oracle-side (DuckDB SQL) twins ----------------------------------------
 
 def OSUM(expr: str) -> str:
+    """Oracle twin of :func:`dsum` (same fixed-point arithmetic)."""
     return (
         f"(CAST(SUM(CAST(ROUND(({expr}) * 1000000.0) AS BIGINT)) AS DOUBLE)"
         " / 1000000.0)"
     )
-
-
-def OSUM6(expr: str) -> str:
-    """Oracle twin of ``dsum6`` (same fixed-point arithmetic)."""
-    return OSUM(expr)
 
 
 def OZ6(expr: str) -> str:

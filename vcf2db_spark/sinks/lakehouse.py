@@ -806,7 +806,10 @@ def merge(
     # materialization job measured faster than lazy-on-first-action at
     # sf0.1 (0.4 vs 0.7 s through bounds+hitlist) and the batch is
     # consumed unconditionally two lines down. Batch-sized state, never
-    # table-sized; blocks free when the merge returns.
+    # table-sized. The blocks outlive the merge: localCheckpoint blocks
+    # are released only once the checkpointed RDD is garbage-collected.
+    # The eager job also runs before the empty-batch gate below, so an
+    # empty batch still pays one materialization job.
     updates = updates.localCheckpoint(eager=True)
     # 1-row bounds aggregate of the update batch (empty-batch gate, the
     # duplicate-key guard, and the fallback pruning bound for
@@ -1172,7 +1175,8 @@ def dv_merge(
     _check_schema(cur, updates, "dv_merge")
     # one materialization of the batch for its four consumers (bounds,
     # bloom probe, matched join, inserts anti-join) — same rationale and
-    # measurement as merge() above; batch-sized, freed on return
+    # measurement as merge() above; batch-sized, and like merge()'s its
+    # blocks are released only when the checkpointed RDD is collected
     updates = updates.localCheckpoint(eager=True)
     bounds = updates.agg(
         F.min(key).alias("lo"),

@@ -341,7 +341,12 @@ def run_to_memory(
     state-store open/commit + WAL) per drain with byte-identical output —
     asserted per operator in tests/test_streaming.py::
     test_final_no_data_batch_output_identity. Callers opt in per QUERY
-    SEMANTICS, never per scale."""
+    SEMANTICS, never per scale.
+
+    The drain saves and restores session-global confs
+    (``noDataMicroBatches``, ``shuffle.partitions``,
+    ``minBatchesToRetain``), so two drains must not run concurrently in
+    one SparkSession."""
     spark = sdf.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain", "100")
