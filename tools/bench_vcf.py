@@ -201,6 +201,7 @@ def main() -> None:
         # derive/pack distributed and the driver streaming executemany
         from vcf2db_spark.sinks.sqlite import write_gemini_db
 
+        tables.cached.unpersist()  # hold one cached parse at a time
         t0 = time.perf_counter()
         tables2 = load_vcf(spark, path, cache_parse=True)
         counts = write_gemini_db(

@@ -1,5 +1,5 @@
 from vcf2db_spark.operators.annotate import annotate_variants
-from vcf2db_spark.operators.impacts import explode_impacts, top_impacts, with_top_impact
+from vcf2db_spark.operators.impacts import explode_impacts, with_top_impact
 from vcf2db_spark.operators.intervals import interval_join
 from vcf2db_spark.operators.variants import (
     assign_variant_id,
@@ -12,7 +12,6 @@ __all__ = [
     "annotate_variants",
     "explode_impacts",
     "interval_join",
-    "top_impacts",
     "window_stats",
     "with_top_impact",
     "assign_variant_id",

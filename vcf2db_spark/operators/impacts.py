@@ -4,8 +4,10 @@ Reimplements the geneimpacts pipeline the reference delegates to
 [U vcf2db.py §gene_info ~L680; geneimpacts Effect.top_severity]: the VEP
 ``CSQ`` (or SnpEff ``ANN``) INFO string is a comma-separated list of
 transcript annotations, each a ``|``-separated record whose keys come from
-the header Description — split → explode → struct, then an argmax per
-variant picks the top-severity impact to denormalize into ``variants``.
+the header Description. ``explode_impacts`` splits and explodes them into
+``variant_impacts``; ``with_top_impact`` picks the top-severity impact
+row-locally (``array_min`` over the same per-annotation columns — no
+shuffle, no join) to denormalize into ``variants``.
 
 Severity order is the published Ensembl VEP consequence ranking collapsed
 to gemini's HIGH/MED/LOW, ties broken by transcript id (lowest first) —
@@ -14,7 +16,7 @@ deterministic, unit-tested against a golden table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vcf2db_spark.sources.header import VCFHeader, clean
@@ -120,102 +122,72 @@ _CANON = {
 }
 
 
+def _impact_columns(toks: Column, subfields: list[str]) -> dict[str, Column]:
+    """The ``variant_impacts`` columns of ONE annotation, in table order,
+    from its ``|``-split tokens. Both the exploded table and the row-local
+    top impact are built from this, so the two cannot drift."""
+    cols = {name: F.nullif(toks.getItem(i), F.lit("")) for i, name in enumerate(subfields)}
+
+    # a VEP Consequence may be '&'-joined; severity = the most severe member
+    so_terms = F.split(F.lower(cols["consequence"]), "&")
+    rank_map = _rank_map_expr()
+    rank = F.array_min(
+        F.transform(so_terms, lambda s: F.coalesce(rank_map[s], F.lit(_UNKNOWN_RANK)))
+    )
+    cols["impact_so"] = F.element_at(so_terms, 1)
+    cols["severity_rank"] = rank
+
+    names = set(cols)
+    for target, candidates in _CANON.items():
+        present = [c for c in candidates if c in names]
+        if present and target not in names:
+            cols[target] = F.coalesce(*[cols[c] for c in present])
+    cols["impact_severity"] = (
+        F.when(rank <= _HIGH_MAX, "HIGH").when(rank <= _MED_MAX, "MED").otherwise("LOW")
+    )
+    for name, terms in (("is_lof", LOF_SO), ("is_exonic", EXONIC_SO), ("is_coding", CODING_SO)):
+        cols[name] = F.arrays_overlap(so_terms, F.array(*[F.lit(s) for s in sorted(terms)]))
+
+    # polyphen/sift arrive as 'probably_damaging(0.957)' → pred + score
+    for tool in ("polyphen", "sift"):
+        if tool in names:
+            raw = cols[tool]
+            cols[f"{tool}_pred"] = F.nullif(F.regexp_extract(raw, r"^([^(]+)", 1), F.lit(""))
+            cols[f"{tool}_score"] = F.regexp_extract(raw, r"\(([\d.]+)\)", 1).cast("double")
+    return cols
+
+
+def _annotations(df: DataFrame, header: VCFHeader) -> tuple[Column, list[str]]:
+    """The annotation items of each row (array of ``|``-joined strings)
+    and the cleaned subfield names."""
+    key = header.annotation_key
+    if key is None:
+        raise ValueError("no annotation INFO field (CSQ/ANN/EFF/BCSQ) in header")
+    ann_col = clean(key)
+    items = F.col(ann_col)
+    if not dict(df.dtypes).get(ann_col, "string").startswith("array"):
+        items = F.split(items, ",")
+    return items, [clean(s) for s in header.annotation_subfields]
+
+
 def explode_impacts(
     df: DataFrame,
     header: VCFHeader,
     id_col: str = "variant_id",
 ) -> DataFrame:
     """One row per (variant, transcript annotation) — the
-    ``variant_impacts`` table. split + explode + struct projection; at
-    scale this is a narrow op (no shuffle)."""
-    key = header.annotation_key
-    if key is None:
-        raise ValueError("no annotation INFO field (CSQ/ANN/EFF/BCSQ) in header")
-    subfields = [clean(s) for s in header.annotation_subfields]
-    ann_col = clean(key)
-
-    ann_type = dict(df.dtypes).get(ann_col, "string")
-    ann_items = (
-        F.col(ann_col) if ann_type.startswith("array") else F.split(F.col(ann_col), ",")
+    ``variant_impacts`` table. split + explode + projection; a narrow op
+    (no shuffle)."""
+    items, subfields = _annotations(df, header)
+    cols = _impact_columns(F.split(F.col("_ann"), r"\|"), subfields)
+    return df.select(id_col, F.explode(items).alias("_ann")).select(
+        id_col, *[c.alias(name) for name, c in cols.items()]
     )
-    out = df.filter(F.col(ann_col).isNotNull()).select(
-        id_col, F.explode(ann_items).alias("_ann")
-    )
-    toks = F.split(F.col("_ann"), r"\|")
-    cols = {name: F.nullif(toks.getItem(i), F.lit("")) for i, name in enumerate(subfields)}
-    out = out.withColumns(cols).drop("_ann")
-
-    # a VEP Consequence may be '&'-joined; severity = the most severe member
-    so_terms = F.transform(F.split(F.lower(F.col("consequence")), "&"), lambda s: s)
-    rank_map = _rank_map_expr()
-    ranks = F.transform(so_terms, lambda s: F.coalesce(rank_map[s], F.lit(_UNKNOWN_RANK)))
-    out = out.withColumns(
-        {
-            "impact_so": F.element_at(so_terms, 1),
-            "severity_rank": F.array_min(ranks),
-        }
-    )
-
-    canon = {}
-    names = set(out.columns)
-    for target, candidates in _CANON.items():
-        present = [c for c in candidates if c in names]
-        if present and target not in names:
-            canon[target] = F.coalesce(*[F.col(c) for c in present])
-    sev_cases = (
-        F.when(F.col("severity_rank") <= _HIGH_MAX, "HIGH")
-        .when(F.col("severity_rank") <= _MED_MAX, "MED")
-        .otherwise("LOW")
-    )
-    lof_arr = F.array(*[F.lit(s) for s in sorted(LOF_SO)])
-    exonic_arr = F.array(*[F.lit(s) for s in sorted(EXONIC_SO)])
-    coding_arr = F.array(*[F.lit(s) for s in sorted(CODING_SO)])
-    canon.update(
-        {
-            "impact_severity": sev_cases,
-            "is_lof": F.arrays_overlap(so_terms, lof_arr),
-            "is_exonic": F.arrays_overlap(so_terms, exonic_arr),
-            "is_coding": F.arrays_overlap(so_terms, coding_arr),
-        }
-    )
-    out = out.withColumns(canon)
-
-    # polyphen/sift arrive as 'probably_damaging(0.957)' → pred + score
-    for tool in ("polyphen", "sift"):
-        if tool in names:
-            out = out.withColumns(
-                {
-                    f"{tool}_pred": F.nullif(
-                        F.regexp_extract(F.col(tool), r"^([^(]+)", 1), F.lit("")
-                    ),
-                    f"{tool}_score": F.regexp_extract(
-                        F.col(tool), r"\(([\d.]+)\)", 1
-                    ).cast("double"),
-                }
-            )
-    return out
-
-
-def top_impacts(impacts: DataFrame, id_col: str = "variant_id") -> DataFrame:
-    """Argmax per variant: most severe impact, ties → lowest transcript —
-    ``min(struct(rank, transcript, ...))`` = one partial-aggregated shuffle,
-    no window sort (geneimpacts Effect.top_severity semantics)."""
-    payload = [c for c in impacts.columns if c != id_col]
-    best = F.min(
-        F.struct(
-            F.col("severity_rank").alias("_r"),
-            F.coalesce(F.col("transcript"), F.lit("~")).alias("_t"),
-            *[F.col(c).alias(c) for c in payload],
-        )
-    ).alias("_best")
-    agg = impacts.groupBy(id_col).agg(best)
-    return agg.select(id_col, *[F.col(f"_best.{c}").alias(c) for c in payload])
 
 
 def with_top_impact(
-    variants: DataFrame,
-    impacts: DataFrame,
-    id_col: str = "variant_id",
+    df: DataFrame,
+    header: VCFHeader,
     columns: tuple[str, ...] = (
         "gene", "transcript", "is_exonic", "is_coding", "is_lof", "exon",
         "codon_change", "aa_change", "aa_length", "biotype", "impact_so",
@@ -223,8 +195,27 @@ def with_top_impact(
         "sift_score",
     ),
 ) -> DataFrame:
-    """Denormalize the top impact onto variants (left join keeps
-    un-annotated variants with null impact columns, as the reference does)."""
-    top = top_impacts(impacts, id_col)
-    keep = [c for c in columns if c in top.columns]
-    return variants.join(top.select(id_col, *keep), on=id_col, how="left")
+    """Denormalize the top impact onto variants, replacing the raw
+    annotation column. The argmax is row-local — ``array_min`` over one
+    struct per annotation, no shuffle and no join: most severe first, ties
+    → lowest transcript, then the remaining columns in table order
+    (geneimpacts Effect.top_severity semantics). Un-annotated variants
+    keep null impact columns, as the reference does."""
+    items, subfields = _annotations(df, header)
+
+    def ranked(toks: Column) -> Column:
+        cols = _impact_columns(toks, subfields)
+        return F.struct(
+            cols["severity_rank"].alias("_r"),
+            F.coalesce(cols["transcript"], F.lit("~")).alias("_t"),
+            *[c.alias(name) for name, c in cols.items()],
+        )
+
+    split = F.transform(items, lambda a: F.split(a, r"\|"))
+    out = df.withColumn("_top", F.array_min(F.transform(split, ranked)))
+    have = set(out.schema["_top"].dataType.names)
+    ann_col = clean(header.annotation_key)
+    return out.select(
+        *[c for c in df.columns if c != ann_col],
+        *[F.col("_top")[c].alias(c) for c in columns if c in have],
+    )

@@ -15,6 +15,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from vcf2db_spark.operators.impacts import explode_impacts, with_top_impact
 from vcf2db_spark.operators.variants import (
@@ -36,9 +37,16 @@ class VCFTables:
     samples: DataFrame | None
     vcf_header: DataFrame
     header: VCFHeader
-    #: the persisted parse stage when ``cache_parse=True`` — callers own
-    #: its lifetime (``tables.cached.unpersist()`` when done)
+    #: the persisted locus-sorted frame that ``variants`` and
+    #: ``variant_impacts`` read — callers own its lifetime
+    #: (``tables.cached.unpersist()`` when done)
     cached: DataFrame | None = None
+
+
+def _header_frame(spark: SparkSession, raw: str) -> DataFrame:
+    """The one-row ``vcf_header`` table as a JVM literal (a local
+    ``createDataFrame`` would cost a Python worker on every drain)."""
+    return spark.range(1).select(F.lit(raw).alias("header_text"))
 
 
 def load_vcf(
@@ -52,11 +60,15 @@ def load_vcf(
     decompose: str = "reject",
     target_partition_bytes: int = 64 << 20,
 ) -> VCFTables:
-    """``cache_parse=True`` persists the parsed stream so the downstream
-    consumers (variant_id's range sampling, the variants sink, the impacts
-    sink) share ONE Python-parse pass instead of re-reading the text. Use
-    when the parsed batch fits cluster memory/disk; at larger scale write
-    the parsed stage to parquet and continue from there instead."""
+    """Parse once, sort by locus into a persisted frame (``cached``), and
+    return ``variants`` / ``variant_impacts`` as JVM projections over it.
+
+    ``cached`` is materialized before this returns (by variant_id's
+    offsets job) and stays until the caller calls
+    ``tables.cached.unpersist()``. ``cache_parse=True`` also persists the
+    parsed stream so variant_id's range sampling and the sort share ONE
+    Python-parse pass; that copy is freed before this returns, once the
+    sort is materialized."""
     header = parse_header(read_header_text(vcf_path))
 
     raw = read_vcf(
@@ -72,26 +84,27 @@ def load_vcf(
     v = with_variant_type(raw)
     if include_genotypes and header.samples:
         v = with_genotype_stats(v)
-    v = assign_variant_id(v, num_partitions=num_partitions)
+    v, cached = assign_variant_id(v, num_partitions=num_partitions)
+    if cache_parse:
+        raw.unpersist()
 
     impacts = None
     ann_key = header.annotation_key
     if ann_key is not None and clean(ann_key) in v.columns:
         impacts = explode_impacts(v, header)
-        v = with_top_impact(v.drop(clean(ann_key)), impacts)
+        v = with_top_impact(v, header)
 
     samples = None
     if ped_path is not None:
         samples = read_ped(spark, ped_path, vcf_samples=header.samples or None)
 
-    vcf_header_df = spark.createDataFrame([(header.raw,)], "header_text string")
     return VCFTables(
         variants=v,
         variant_impacts=impacts,
         samples=samples,
-        vcf_header=vcf_header_df,
+        vcf_header=_header_frame(spark, header.raw),
         header=header,
-        cached=raw if cache_parse else None,
+        cached=cached,
     )
 
 
@@ -107,6 +120,7 @@ def open_artifact(spark: SparkSession, path: str) -> VCFTables:
     """
     import os
 
+    vcf_header = raw = None
     if path.endswith(".db"):
         import sqlite3 as _sq
 
@@ -118,6 +132,8 @@ def open_artifact(spark: SparkSession, path: str) -> VCFTables:
                 r[0]
                 for r in con.execute("SELECT name FROM sqlite_master WHERE type='table'")
             }
+            if "vcf_header" in present:
+                (raw,) = con.execute("SELECT header_text FROM vcf_header LIMIT 1").fetchone()
         finally:
             con.close()
 
@@ -130,20 +146,19 @@ def open_artifact(spark: SparkSession, path: str) -> VCFTables:
             p = os.path.join(path, name)
             return spark.read.parquet(p) if os.path.isdir(p) else None
 
+        vcf_header = load("vcf_header")
+        if vcf_header is not None:
+            raw = vcf_header.collect()[0]["header_text"]
+
     variants = load("variants")
     if variants is None:
         raise ValueError(f"no variants table in artifact {path!r}")
-    vcf_header = load("vcf_header")
-    if vcf_header is not None:
-        raw = vcf_header.collect()[0]["header_text"]
-        header = parse_header(raw)
-    else:  # header-less artifact: SQL works, gt-filters can't resolve samples
-        header = parse_header("##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT")
-        vcf_header = spark.createDataFrame([(header.raw,)], "header_text string")
+    if raw is None:  # header-less artifact: SQL works, gt-filters can't resolve samples
+        raw = "##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT"
     return VCFTables(
         variants=variants,
         variant_impacts=load("variant_impacts"),
         samples=load("samples"),
-        vcf_header=vcf_header,
-        header=header,
+        vcf_header=vcf_header if vcf_header is not None else _header_frame(spark, raw),
+        header=parse_header(raw),
     )
