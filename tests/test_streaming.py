@@ -286,7 +286,7 @@ def test_upsert_drain_batch_equivalence(spark, tmp_path):
 
     # consume each drain's result BEFORE starting the next one: a new
     # drain releases the previous drain's state directory (the documented
-    # lifecycle — at most one live final version, tmpfs never accumulates)
+    # lifecycle — at most one live final version, nothing accumulates)
     multi = canon(
         upsert_latest_drain(
             spark, stage_events_dir_multi(sf, n_files=3), str(tmp_path / "w3")

@@ -1,15 +1,27 @@
-"""Release-on-next-call resource lifecycle (VERDICT r3 item 10).
+"""Scratch space and release-on-next-call resource lifecycle.
 
-Several declared queries return DataFrames whose plans lazily read
-resources created during the call — persisted intermediates
-(anomaly_mad, curate), scratch directories holding written files
-(orc_roundtrip, compact_files, streaming upserts). The resource must
-OUTLIVE the call (the caller hasn't executed the plan yet), but a
-bench/driver sweep calls the same query hundreds of times per session,
-so resources must not accumulate. Contract: each operator owns one
-``Lifecycle``; a new call releases the previous call's holdings first,
-so at most one generation is ever live. Consume (collect/write) each
-returned DataFrame before invoking the same operator again.
+Scratch root: every file the package writes for its own use — format
+round trips, lakehouse tables, stream checkpoints and upsert state, the
+gemini cohort, the fingerprint store, staged stream sources, the worker
+package zip — lives under ONE per-process directory,
+``tempfile.mkdtemp(prefix="vcf2db-")``. It is created on first use, so
+it honours ``TMPDIR`` (and ``tempfile.tempdir``), and it is removed at
+interpreter exit after every ``Lifecycle`` has been released. Nothing
+is cached across processes, so nothing can be read stale or leak past
+the process. Executors write and read these directories too, so the
+root must be on a filesystem they share with the driver (local mode).
+
+Lifecycle: several declared queries return DataFrames whose plans
+lazily read resources created during the call — persisted
+intermediates (anomaly_mad, curate), scratch directories holding
+written files (orc_roundtrip, compact_files, streaming upserts). The
+resource must OUTLIVE the call (the caller hasn't executed the plan
+yet), but a bench/driver sweep calls the same query hundreds of times
+per session, so resources must not accumulate. Contract: each operator
+owns one ``Lifecycle``; a new call releases the previous call's
+holdings first (``fresh_dir`` does this for directories), so at most
+one generation is ever live. Consume (collect/write) each returned
+DataFrame before invoking the same operator again.
 
 Thread-safe: the holdings list swap happens under a lock, so two
 threads racing the same operator cannot double-release or leak a
@@ -21,15 +33,32 @@ from __future__ import annotations
 
 import atexit
 import shutil
+import tempfile
 import threading
 import weakref
 from collections.abc import Callable
 
 #: every Lifecycle registers here so interpreter exit releases the LAST
 #: generation too — release-on-next-call cannot fire after the final
-#: call of a process, which leaked one scratch dir per session per
-#: operator into /dev/shm (observed: ~1,800 dirs after a bench day)
+#: call of a process
 _REGISTRY: list[weakref.ref] = []
+_ROOT: str | None = None
+_ROOT_LOCK = threading.Lock()
+
+
+def scratch_root() -> str:
+    """The per-process scratch root, created on first use."""
+    global _ROOT
+    with _ROOT_LOCK:
+        if _ROOT is None:
+            _ROOT = tempfile.mkdtemp(prefix="vcf2db-")
+        return _ROOT
+
+
+def scratch_dir(tag: str) -> str:
+    """A new empty directory ``<scratch root>/<tag>-<random>`` that lives
+    until the process exits (a ``Lifecycle`` releases it sooner)."""
+    return tempfile.mkdtemp(prefix=f"{tag}-", dir=scratch_root())
 
 
 def _release_all_at_exit() -> None:
@@ -37,6 +66,8 @@ def _release_all_at_exit() -> None:
         lc = ref()
         if lc is not None:
             lc.release()
+    if _ROOT is not None:
+        shutil.rmtree(_ROOT, ignore_errors=True)
 
 
 atexit.register(_release_all_at_exit)
@@ -77,3 +108,9 @@ class Lifecycle:
         with self._lock:
             self.dirs.append(path)
         return path
+
+    def fresh_dir(self, tag: str) -> str:
+        """Release the previous generation, then hold and return a new
+        ``scratch_dir(tag)``."""
+        self.release()
+        return self.hold_dir(scratch_dir(tag))

@@ -36,7 +36,6 @@ public query surface [U vcf2db README; gemini docs].
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -46,7 +45,7 @@ from vcf2db_spark.registry import dq
 
 # one Lifecycle PER artifact build (house contract): building one
 # artifact must not release another's still-live holds (the returned
-# plan lazily reads its /tmp dir + cached parse until the caller
+# plan lazily reads its scratch dir + cached parse until the caller
 # collects). r10 consolidation (VERDICT r9 item 3): comp_hets joined
 # the shared build — the shared generator now decouples the parents on
 # the k%3==0 subset with phased separators — so only the X cohort keeps
@@ -216,10 +215,7 @@ def _write_cohort_vcf(
         .select("s_suppkey")
         .collect()
     )
-    lc.release()
-    d = f"/tmp/vcf2db_gemini_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    lc.hold_dir(d)
-    os.makedirs(d, exist_ok=True)
+    d = lc.fresh_dir("gemini")
     lines = []
     for chrom_sel in (1, 0):  # chroms[0] = odd keys, chroms[1] = even
         for k in keys:

@@ -19,8 +19,6 @@ lakehouse-era shape.
 
 from __future__ import annotations
 
-import os
-import uuid
 from functools import reduce
 
 from pyspark.sql import functions as F
@@ -32,15 +30,6 @@ from vcf2db_spark.sinks import lakehouse as lh
 
 _TT_LC = Lifecycle()
 _PRUNE_LC = Lifecycle()
-
-
-def _fresh_root(lc: Lifecycle, tag: str) -> str:
-    """Per-call scratch table root; the PREVIOUS call's root is released
-    first (release-on-next-call contract — the returned DataFrame lazily
-    reads this root, so it must outlive the call)."""
-    lc.release()
-    root = f"/tmp/vcf2db_lake_{os.getpid()}_{tag}_{uuid.uuid4().hex[:8]}"
-    return lc.hold_dir(root)
 
 
 @dq(
@@ -88,7 +77,7 @@ def lakehouse_timetravel(spark, sf_dir):
         .filter(F.col("o_custkey") % 7 == 0)
         .select("o_orderkey", "o_orderdate", "o_totalprice")
     )
-    root = _fresh_root(_TT_LC, "tt")
+    root = _TT_LC.fresh_dir("lake_tt")
     cut = F.lit("1996-01-01").cast("timestamp")
     lh.create(
         spark, root, o.filter(F.col("o_orderdate") < cut),
@@ -155,7 +144,7 @@ def lakehouse_prune_scan(spark, sf_dir):
         .filter(F.col("o_custkey") % 3 == 0)
         .select("o_orderkey", "o_orderdate", "o_totalprice")
     )
-    root = _fresh_root(_PRUNE_LC, "pr")
+    root = _PRUNE_LC.fresh_dir("lake_pr")
     lh.create(
         spark,
         root,
@@ -220,7 +209,7 @@ def lakehouse_changes(spark, sf_dir):
         .filter(F.col("o_custkey") % 11 == 0)
         .select("o_orderkey", "o_orderdate", "o_totalprice")
     )
-    root = _fresh_root(_CDF_LC, "cdf")
+    root = _CDF_LC.fresh_dir("lake_cdf")
     lh.create(
         spark,
         root,
@@ -283,7 +272,7 @@ def lakehouse_delete(spark, sf_dir):
         .filter(F.col("o_custkey") % 5 == 2)
         .select("o_orderkey", "o_orderdate", "o_totalprice")
     )
-    root = _fresh_root(_DEL_LC, "del")
+    root = _DEL_LC.fresh_dir("lake_del")
     lh.create(
         spark,
         root,
@@ -356,7 +345,7 @@ def stream_lakehouse_feed(spark, sf_dir):
     # action) instead of re-scanning orders per commit; same in-DAG
     # barrier device as knn_recall's exact twin, re-paid every run
     o = o.localCheckpoint(eager=False)
-    root = _fresh_root(_FEED_LC, "feed")
+    root = _FEED_LC.fresh_dir("lake_feed")
     cut = F.lit("1995-01-01").cast("timestamp")
     # ONE file per commit: each file's o_orderkey [min,max] then spans
     # (nearly) the whole cohort keyspace, so the merge's exact-hit
@@ -426,7 +415,7 @@ def lakehouse_bloom_lookup(spark, sf_dir):
         .filter(F.col("o_custkey") % 13 == 6)
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )
-    root = _fresh_root(_BLOOM_LC, "bl")
+    root = _BLOOM_LC.fresh_dir("lake_bl")
     lh.create(
         spark,
         root,
@@ -497,7 +486,7 @@ def lakehouse_dv_delete(spark, sf_dir):
         .filter(F.col("o_custkey") % 5 == 4)
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )
-    root = _fresh_root(_DV_LC, "dv")
+    root = _DV_LC.fresh_dir("lake_dv")
     v0 = lh.create(
         spark, root, o.repartition(6, "o_custkey"), stat_cols=("o_orderkey",)
     )
@@ -578,7 +567,7 @@ def lakehouse_dv_merge(spark, sf_dir):
     # materialization (lazy; the create's write pays it), same device as
     # stream_lakehouse_feed's cohort slice
     o = o.localCheckpoint(eager=False)
-    root = _fresh_root(_DVM_LC, "dvm")
+    root = _DVM_LC.fresh_dir("lake_dvm")
     v0 = lh.create(
         spark, root, o.repartition(6, "o_custkey"),
         stat_cols=("o_orderkey",), bloom_cols=("o_orderkey",),

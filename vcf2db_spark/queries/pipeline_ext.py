@@ -1710,9 +1710,6 @@ def dedup_incremental(spark, sf_dir):
     append-only (xxhash64 shard assignment is stable across runs), a
     batch touches only the shards its own fingerprints hash to, and the
     anti-join shuffles the batch, never the corpus history."""
-    import hashlib
-    import os
-
     from vcf2db_spark.functions.text import doc_fingerprint
     from vcf2db_spark.sinks.export import (
         read_training_shards,
@@ -1721,13 +1718,10 @@ def dedup_incremental(spark, sf_dir):
 
     d = table_wide(spark, sf_dir, "documents", "doc_id")
     fps = d.select("doc_id", doc_fingerprint("text").alias("fp"))
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    base = f"/tmp/vcf2db_fpstore_{os.getpid()}_{tag}"
-    _FPSTORE_LC.release()
+    base = _FPSTORE_LC.fresh_dir("fpstore")
     write_fingerprint_store(
         fps.filter(F.col("doc_id") % 5 != 0), base, n_shards=_FPSTORE_SHARDS
     )
-    _FPSTORE_LC.hold_dir(base)
     store = read_training_shards(spark, base, verify=True)
     new = fps.filter(F.col("doc_id") % 5 == 0).withColumn(
         "shard",

@@ -14,6 +14,7 @@ import pandas as pd  # noqa: F401  (applyInPandasWithState dependency)
 
 from pyspark.sql import DataFrame, functions as F
 
+from vcf2db_spark.lifecycle import Lifecycle, scratch_dir
 from vcf2db_spark.registry import dq
 from vcf2db_spark.streaming import (
     dedup_within_watermark,
@@ -127,7 +128,7 @@ def stream_stream_join(spark, sf_dir):
     )
 
 
-_SINK_CALLS = 0
+_SINK_LC = Lifecycle()
 
 
 @dq("stream_sink_parquet")
@@ -135,25 +136,18 @@ def stream_sink_parquet(spark, sf_dir):
     """C7 with the PRODUCTION sink: drain the tumbling-window aggregation
     through the exactly-once parquet file sink (checkpointed offsets +
     file-manifest commit protocol), then read the committed files back
-    and reduce per event_type. Output and checkpoint are wiped per call,
+    and reduce per event_type. Output and checkpoint are fresh per call,
     so the drain is a deterministic batch-equivalent run; rows-only (the
     file-sink mechanics are the thing under test — window values are
     hash-checked via stream_tumble's oracle)."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
     s = read_events_stream(spark, stage_events_dir(sf_dir))
     agg = tumbling_counts(s, watermark="10 minutes")
-    # one FRESH directory per invocation: wiping a shared path would
-    # invalidate still-live DataFrames returned by earlier calls (lazy
-    # plans re-read the sink files at action time)
-    global _SINK_CALLS
-    _SINK_CALLS += 1
-    base = os.path.join("/tmp", f"vcf2db_sinkdq_{os.getpid()}_{_SINK_CALLS}")
+    base = _SINK_LC.fresh_dir("sinkdq")
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
@@ -198,8 +192,6 @@ def stream_upsert(spark, sf_dir):
     computes. One of the few oracle-backed STREAMING queries: the merge
     is associative and tie-free (unique event_id), so batch boundaries
     cannot change the answer."""
-    import os
-
     from pyspark.sql import functions as F
 
     from vcf2db_spark.streaming.pipelines import (
@@ -207,11 +199,9 @@ def stream_upsert(spark, sf_dir):
         upsert_latest_drain,
     )
 
-    global _SINK_CALLS
-    _SINK_CALLS += 1
-    work = os.path.join("/tmp", f"vcf2db_upsert_{os.getpid()}_{_SINK_CALLS}")
     src = stage_events_dir_multi(sf_dir, n_files=3)
-    final = upsert_latest_drain(spark, src, work)
+    # the drain holds its work dir until the next drain
+    final = upsert_latest_drain(spark, src, scratch_dir("upsert"))
     return final.select(
         "user_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_ts"),

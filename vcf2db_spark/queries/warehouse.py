@@ -202,20 +202,9 @@ def orc_roundtrip(spark, sf_dir):
     distributed part (one file per input partition, no coalesce-to-1
     bottleneck); the read-back scan prunes to the two referenced
     columns like any columnar scan."""
-    import hashlib
-    import os
-
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
-    # pid in the path: two processes on the same sf_dir (driver sweep +
-    # a local check) must not overwrite each other's directory mid-scan.
-    # The previous call's dir is released on the NEXT call (the returned
-    # DataFrame reads the files lazily — same lifecycle contract as
-    # streaming/pipelines._ACTIVE_UPSERT_DIRS).
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = f"/tmp/vcf2db_orc_rt_{os.getpid()}_{tag}"
-    _ORC_RT_LC.release()
+    path = _ORC_RT_LC.fresh_dir("orc_rt")
     d.write.format("orc").mode("overwrite").save(path)
-    _ORC_RT_LC.hold_dir(path)
     back = spark.read.orc(path)
     return back.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -246,13 +235,8 @@ def csv_roundtrip(spark, sf_dir):
     exactly. multiLine handles embedded newlines; the write is one file
     per input partition (no coalesce bottleneck), the read splits by
     file."""
-    import hashlib
-    import os
-
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = f"/tmp/vcf2db_csv_rt_{os.getpid()}_{tag}"
-    _CSV_RT_LC.release()
+    path = _CSV_RT_LC.fresh_dir("csv_rt")
     (
         d.write.format("csv")
         .mode("overwrite")
@@ -265,7 +249,6 @@ def csv_roundtrip(spark, sf_dir):
         .option("ignoreTrailingWhiteSpace", "false")
         .save(path)
     )
-    _CSV_RT_LC.hold_dir(path)
     back = spark.read.csv(
         path,
         header=True,
@@ -307,15 +290,9 @@ def json_roundtrip(spark, sf_dir):
     hash match proves JSON string escaping (quotes, backslashes,
     control characters, non-ASCII) and typed integer read-back are
     lossless. Splittable on read (line-delimited, many files)."""
-    import hashlib
-    import os
-
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = f"/tmp/vcf2db_json_rt_{os.getpid()}_{tag}"
-    _JSON_RT_LC.release()
+    path = _JSON_RT_LC.fresh_dir("json_rt")
     d.write.format("json").mode("overwrite").save(path)
-    _JSON_RT_LC.hold_dir(path)
     back = spark.read.json(
         path,
         schema="doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
@@ -449,17 +426,13 @@ def compact_files(spark, sf_dir):
     aggregate from the original parquet, so a hash match proves the
     fragment→compact round trip lost nothing. File-count reduction is
     asserted in tests/test_sinks_scale.py."""
-    import hashlib
     import math
     import os
-    import shutil
 
     # bounded slice (harness convention): the small-file pathology and
     # the bin-pack live at file granularity, not row count
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    base = f"/tmp/vcf2db_compact_{os.getpid()}_{tag}"
-    _COMPACT_LC.release()
+    base = _COMPACT_LC.fresh_dir("compact")
     frag, comp = os.path.join(base, "frag"), os.path.join(base, "comp")
     d.repartition(64).write.mode("overwrite").parquet(frag)
     nbytes = sum(
@@ -478,7 +451,6 @@ def compact_files(spark, sf_dir):
         frag_df.coalesce(n_out) if read_parts >= n_out else frag_df.repartition(n_out)
     )
     packed.write.mode("overwrite").parquet(comp)
-    _COMPACT_LC.hold_dir(base)
     back = spark.read.parquet(comp)
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -183,25 +183,15 @@ def _ship_package(spark: SparkSession) -> None:
     driver only had the repo on ``sys.path`` (not ``$PYTHONPATH``, which
     is what worker processes inherit). ``addPyFile`` of a package zip is
     the environment-independent fix: workers prepend shipped files to
-    their ``sys.path``. Cheap (one ~100 KB zip per session), idempotent
-    via the pin guard."""
-    import hashlib
+    their ``sys.path``. Cheap (one ~360 KB zip per process, built under the
+    scratch root), idempotent via the pin guard."""
     import os
     import zipfile
 
+    from vcf2db_spark.lifecycle import scratch_root
+
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    # content-address the zip by source mtimes so edits invalidate the
-    # cached artifact across sessions (it lives in /tmp)
-    stamp = [pkg_dir]
-    for root, _dirs, files in os.walk(pkg_dir):
-        if "__pycache__" in root:
-            continue
-        for f in sorted(files):
-            if f.endswith(".py"):
-                p = os.path.join(root, f)
-                stamp.append(f"{os.path.relpath(p, pkg_dir)}:{os.path.getmtime(p)}")
-    tag = hashlib.md5("|".join(stamp).encode()).hexdigest()[:10]
-    zpath = os.path.join("/tmp", f"vcf2db_spark_pkg_{tag}.zip")
+    zpath = os.path.join(scratch_root(), "vcf2db_spark_pkg.zip")
     if not os.path.exists(zpath):
         tmp = zpath + ".tmp"
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:

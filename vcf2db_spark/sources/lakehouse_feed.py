@@ -78,14 +78,6 @@ _CHANGE_TAG = {
     "restore": "restore",
 }
 
-def _trace(msg: str) -> None:
-    """Debug hook (SPARK_GRAFT_FEED_TRACE=1): records the engine→reader
-    call order — how the restart-replays-partitions-first behavior the
-    admission-control design relies on was measured."""
-    if os.environ.get("SPARK_GRAFT_FEED_TRACE"):
-        with open("/tmp/feed_calls.log", "a") as fh:
-            fh.write(f"[pid {os.getpid()}] {msg}\n")
-
 
 class _FilePartition(InputPartition):
     def __init__(
@@ -199,7 +191,6 @@ class LakehouseFeedStreamReader(DataSourceStreamReader):
         return v, i
 
     def initialOffset(self) -> dict:
-        _trace(f"initialOffset start={self.start_version}")
         self._engine_pos = (self.start_version + 1, 0)
         return {"version": self.start_version + 1, "index": 0}
 
@@ -207,7 +198,6 @@ class LakehouseFeedStreamReader(DataSourceStreamReader):
         from vcf2db_spark.sinks import lakehouse as lh
 
         head = lh.latest_version(self.root)
-        _trace(f"latestOffset head={head} pos={self._engine_pos} max={self.max_files}")
         # engine position: what initialOffset/partitions/commit showed
         # us; before any of them (= the first trigger of a FRESH query —
         # a restarted engine always replays the last logged batch
@@ -229,7 +219,6 @@ class LakehouseFeedStreamReader(DataSourceStreamReader):
         from vcf2db_spark.sinks import lakehouse as lh
 
         (sv, si), (ev, ei) = _pos(start), _pos(end)
-        _trace(f"partitions {start} {end}")
         if (ev, ei) < (sv, si):
             # an end offset behind its start can only mean an engine
             # flow that never revealed its checkpointed position before

@@ -14,8 +14,6 @@ batch twins in ``queries/extensions.py`` are the correctness oracles.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
 import shutil
 from typing import Iterator
@@ -33,22 +31,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-# Ephemeral tmpfs scratch (checkpoints / drain state): cleared at the
-# START of each reuse (release-on-next-call) AND at interpreter exit —
-# the last call of a process has no next call, which leaked one dir per
-# session per drain into /dev/shm (~1,800 observed after a bench day).
-_EPHEMERAL_DIRS: set[str] = set()
-
-
-def _ephemeral_dir(path: str) -> str:
-    shutil.rmtree(path, ignore_errors=True)
-    _EPHEMERAL_DIRS.add(path)
-    return path
-
-
-atexit.register(
-    lambda: [shutil.rmtree(p, ignore_errors=True) for p in _EPHEMERAL_DIRS]
-)
+from vcf2db_spark.lifecycle import Lifecycle, scratch_dir
 
 # Schema of the events fixture AFTER ts normalization (streaming file
 # sources need an explicit schema — there is no inference pass).
@@ -121,21 +104,35 @@ def read_events_stream(
 #: the next local drain (every DQ stream stages right before draining)
 _LAST_SOURCE_BYTES: int | None = None
 
+#: staged source dir per (fixture path, mtime, n_files) — reused by
+#: later calls in this process; a regenerated fixture stages afresh
+_STAGED: dict[tuple, str] = {}
+
+
+def _stage(sf_dir: str, n_files: int, write) -> str:
+    """Stage <sf_dir>/events.parquet once per process under the scratch
+    root as ``write(src, dir)`` lays it out; returns the directory."""
+    global _LAST_SOURCE_BYTES
+    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    key = (src, os.stat(src).st_mtime_ns, n_files)
+    d = _STAGED.get(key)
+    if d is None:
+        d = scratch_dir("stream")
+        write(src, d)
+        _STAGED[key] = d
+    _LAST_SOURCE_BYTES = sum(
+        os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
+    )
+    return d
+
 
 def stage_events_dir(sf_dir: str) -> str:
     """The file-stream source lists a DIRECTORY; fixtures are single
-    parquet files. Stage <sf_dir>/events.parquet into a content-addressed
-    /tmp dir once and reuse it across calls."""
-    global _LAST_SOURCE_BYTES
-    src = os.path.join(sf_dir, "events.parquet")
-    tag = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
-    d = os.path.join("/tmp", f"vcf2db_stream_{tag}")
-    dst = os.path.join(d, "part-000.parquet")
-    if not os.path.exists(dst):
-        os.makedirs(d, exist_ok=True)
-        shutil.copy(src, dst)
-    _LAST_SOURCE_BYTES = os.path.getsize(dst)
-    return d
+    parquet files. Stage <sf_dir>/events.parquet into a directory once
+    per process and reuse it across calls."""
+    return _stage(
+        sf_dir, 1, lambda src, d: shutil.copy(src, os.path.join(d, "part-000.parquet"))
+    )
 
 
 def _drain_partitions(sdf: DataFrame) -> int:
@@ -314,6 +311,9 @@ class state_store_provider:
 # test/backfill harness
 # -------------------------------------------------------------------------
 
+# checkpoint of the most recent memory drain (dead once it returns)
+_CKPT_LC = Lifecycle()
+
 
 def run_to_memory(
     sdf: DataFrame, name: str, output_mode: str = "append",
@@ -371,14 +371,9 @@ def run_to_memory(
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    # checkpoint+state to tmpfs when available: the WAL/state fsyncs are
-    # pure fixed cost for an ephemeral local drain (a real deployment
-    # points this at durable object storage instead)
-    if os.path.isdir("/dev/shm"):
-        ckpt = _ephemeral_dir(
-            os.path.join("/dev/shm", f"vcf2db_ckpt_{name}_{os.getpid()}")
-        )
-        writer = writer.option("checkpointLocation", ckpt)
+    # an ephemeral local drain checkpoints under the scratch root (a
+    # real deployment points this at durable object storage instead)
+    writer = writer.option("checkpointLocation", _CKPT_LC.fresh_dir("ckpt"))
     try:
         q = writer.start()
         q.awaitTermination()
@@ -438,31 +433,15 @@ def stage_events_dir_multi(sf_dir: str, n_files: int = 4) -> str:
     maxFilesPerTrigger=1 drain yields a genuine multi-batch incremental
     run (the single-file staging gives foreachBatch only one batch)."""
     import pyarrow.parquet as pq
-    import pyarrow as pa
 
-    src = os.path.join(sf_dir, "events.parquet")
-    tag = hashlib.md5((os.path.abspath(src) + f"#{n_files}").encode()).hexdigest()[:12]
-    d = os.path.join("/tmp", f"vcf2db_stream_multi_{tag}")
-    if not os.path.isdir(d) or len(os.listdir(d)) != n_files:
-        shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d, exist_ok=True)
+    def write(src: str, d: str) -> None:
         t = pq.read_table(src)
         step = -(-t.num_rows // n_files)
         for i in range(n_files):
             pq.write_table(t.slice(i * step, step), os.path.join(d, f"part-{i:03d}.parquet"))
-    global _LAST_SOURCE_BYTES
-    _LAST_SOURCE_BYTES = sum(
-        os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
-    )
-    return d
 
+    return _stage(sf_dir, n_files, write)
 
-# Work dirs of the most recent drain: the returned DataFrame lazily
-# reads the final state version, so the dir must outlive the call; each
-# NEW drain (and an explicit release) deletes the previous one — at most
-# one final-version dir is ever live, nothing accumulates across a
-# bench/driver sweep (tmpfs is RAM).
-from vcf2db_spark.lifecycle import Lifecycle
 
 # key-hash buckets for the versioned upsert state: enough that a small
 # batch touches a strict subset (the rewrite-only-changed-buckets
@@ -471,11 +450,11 @@ from vcf2db_spark.lifecycle import Lifecycle
 # way a table chooses its bucket count.
 UPSERT_STATE_BUCKETS = 16
 
+# Work dir of the most recent drain: the returned DataFrame lazily
+# reads the final state version, so the dir must outlive the call; each
+# NEW drain (and an explicit release) deletes the previous one — at most
+# one final-version dir is ever live across a bench/driver sweep.
 _UPSERT_LC = Lifecycle()
-
-
-def _release_upsert_dirs() -> None:
-    _UPSERT_LC.release()
 
 
 def upsert_latest_drain(
@@ -496,23 +475,15 @@ def upsert_latest_drain(
 
     Lifecycle: the returned DataFrame lazily reads the final state
     version on disk; a SUBSEQUENT drain (any caller, same process)
-    releases the previous drain's directory — consume (collect/write)
-    each result before starting the next drain, exactly like the
-    curate-cache contract (curate.py::release_curate_cache)."""
+    deletes the previous drain's ``work_dir``, and interpreter exit
+    deletes the last one — consume (collect/write) each result before
+    starting the next drain, exactly like the curate-cache contract
+    (curate.py::release_curate_cache)."""
     from pyspark.sql import Window
 
-    # ephemeral drain: versioned state + checkpoint on tmpfs when
-    # available (same rationale as run_to_memory — WAL/commit fsyncs are
-    # pure fixed cost locally; production points both at object storage).
-    # The tmpfs path keys on a hash of the caller's FULL path (+pid), so
-    # two callers with distinct work dirs but equal basenames — or two
-    # processes — can never clobber each other's live state.
-    if os.path.isdir("/dev/shm"):
-        tag = hashlib.md5(os.path.abspath(work_dir).encode()).hexdigest()[:12]
-        work_dir = _ephemeral_dir(
-            os.path.join("/dev/shm", f"vcf2db_upsert_{os.getpid()}_{tag}")
-        )
-    _release_upsert_dirs()
+    # versioned state + checkpoint live under the caller's work_dir
+    # (production points it at object storage)
+    _UPSERT_LC.release()
     shutil.rmtree(work_dir, ignore_errors=True)
     os.makedirs(work_dir, exist_ok=True)
     # State is BUCKETED by key hash (VERDICT r3 item 5): once the state
