@@ -1802,7 +1802,7 @@ def test_dv_compact_below_ratio_keeps_dv(spark, root):
 
 def test_dv_vacuum_reclaims_superseded_sidecars(spark, root):
     """DV sidecars follow the data-file retention window: superseded
-    generations (older bitmaps of the same file) and retired DVs are
+    generations (older sidecars of the same file) and retired DVs are
     reclaimed; the retained version's sidecars survive."""
     _dv_table(spark, root)
     lh.dv_delete(spark, root, "k = 1")
@@ -1819,6 +1819,42 @@ def test_dv_vacuum_reclaims_superseded_sidecars(spark, root):
     assert on_disk == live, f"sidecars on disk {on_disk} != live {live}"
     got = lh.read(spark, root)
     assert got.count() == 398 and got.filter("k in (1,2)").count() == 0
+
+
+def test_dv_vacuum_reclaims_crashed_dv_writes(spark, root):
+    """A crash between a DV write and its commit leaves a staging
+    directory or a tmp file under ``_dv/``; vacuum reclaims every such
+    non-live entry past ``min_age_seconds`` and spares younger ones (an
+    in-flight build, judged by the newest file inside a directory) and
+    the live sidecars."""
+    import time
+
+    _dv_table(spark, root)
+    lh.dv_delete(spark, root, "k = 1")
+    dv_dir = os.path.join(root, "_dv")
+    live = set(os.listdir(dv_dir))
+
+    def leftovers(tag):
+        stage = os.path.join(dv_dir, f"_staging-{tag}")
+        os.makedirs(os.path.join(stage, "__i=0"))
+        part = os.path.join(stage, "__i=0", "part-00000.parquet")
+        tmp = os.path.join(dv_dir, f"{tag}.json.tmp-123")
+        for p in (part, tmp):
+            with open(p, "w") as fh:
+                fh.write("x")
+        return stage, part, tmp
+
+    stale = leftovers("stale")
+    fresh = leftovers("fresh")
+    old = time.time() - 7200
+    for p in (stale[1], os.path.dirname(stale[1]), stale[0], stale[2], fresh[0]):
+        os.utime(p, (old, old))
+    removed = lh.vacuum(root, retain_versions=1, min_age_seconds=3600.0)
+    assert removed == 2
+    assert not os.path.exists(stale[0]) and not os.path.exists(stale[2])
+    assert os.path.exists(fresh[1]) and os.path.exists(fresh[2])
+    assert live <= set(os.listdir(dv_dir))
+    assert lh.read(spark, root).count() == 399
 
 
 def test_dv_read_pruned_and_point_apply_mask(spark, root):
@@ -2102,15 +2138,15 @@ def test_merge_all_null_key_batch_inserts_both_verbs(spark, root, tmp_path):
 
 
 def test_dv_merge_correct_past_broadcast_gate(spark, root, monkeypatch):
-    """dv_merge's update-batch broadcast is gated on the batch row count
-    (O(batch)-bounded writes must not imply batch-sized executor
-    memory); past the gate the planner picks the strategy and the
-    result is unchanged."""
+    """dv_merge's update-batch broadcast is gated on the batch's
+    estimated bytes (O(batch)-bounded writes must not imply batch-sized
+    executor memory); past the gate the planner picks the strategy and
+    the result is unchanged."""
     lh.create(
         spark, root, _mk(spark, 0, 500).repartition(3),
         stat_cols=("k",), bloom_cols=("k",),
     )
-    monkeypatch.setattr(lh, "_MERGE_BROADCAST_ROWS", 1)  # force the fallback
+    monkeypatch.setattr(lh, "_MERGE_BROADCAST_BYTES", 1)  # force the fallback
     upd = spark.createDataFrame(
         [(5, 55.0), (9000, 90.0), (17, 77.0)], "k long, v double"
     )
@@ -2118,6 +2154,37 @@ def test_dv_merge_correct_past_broadcast_gate(spark, root, monkeypatch):
     rows = {r["k"]: r["v"] for r in lh.read(spark, root).collect()}
     assert rows[5] == 55.0 and rows[17] == 77.0 and rows[9000] == 90.0
     assert len(rows) == 501 and rows[6] == 6.0
+
+
+def test_merge_broadcast_gate_is_sized_by_bytes(spark):
+    """The update-batch broadcast gate compares rows × the schema's
+    estimated row width against a byte bound: at the same row count a
+    wide batch over the bound plans a shuffled join, a narrow one a
+    broadcast (the planner's own size threshold is off, so only the
+    gate's hint can broadcast)."""
+    rows = 20_000
+    narrow = spark.range(rows).select(
+        F.col("id").alias("__k"), F.col("id").cast("double").alias("v")
+    )
+    wide = spark.range(rows).select(
+        F.col("id").alias("__k"), *[F.lit("x").alias(f"c{i}") for i in range(200)]
+    )
+    target = spark.range(10).select(F.col("id").alias("k"))
+
+    def plan(side):
+        side = lh._broadcast_if_small(spark, side, rows)
+        joined = target.join(side, target["k"] == side["__k"])
+        return joined._jdf.queryExecution().executedPlan().toString()
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert "BroadcastHashJoin" in plan(narrow)
+        wide_plan = plan(wide)
+        assert "BroadcastHashJoin" not in wide_plan
+        assert "SortMergeJoin" in wide_plan or "ShuffledHashJoin" in wide_plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 # ---- cross-process CONFLICTING DV writers (r10, VERDICT r9 item 4) -----------

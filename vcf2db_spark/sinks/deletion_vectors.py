@@ -2,128 +2,108 @@
 
 Copy-on-write DELETE rewrites every file holding a matching row: a 1-row
 GDPR delete in a 1 GB file rewrites 1 GB, and at 100 TB with trickle
-deletes the write amplification is the cost center. The modern public
-pattern is Delta's deletion vectors / Iceberg v2 position deletes:
-commit a POSITION BITMAP sidecar per touched file, apply it at read,
-and compact lazily once a file's deleted ratio crosses a threshold.
+deletes the write amplification is the cost center. The public pattern
+is Iceberg v2's position delete files / Delta's deletion vectors: commit
+the deleted row POSITIONS of each touched file as a sidecar, apply it at
+read, and compact lazily once a file's deleted ratio crosses a threshold.
 
-Layout and lifecycle (mirrors the bloom-sidecar design):
+Layout and lifecycle:
 
-- A DV is an immutable JSON sidecar ``_dv/<hex>.json`` holding a packed
-  little-endian bitmap of the file's row positions (bit i set = row i
-  deleted) — ``n_rows/8`` bytes per file, NEVER inlined into the txlog
-  (commit bytes stay O(delta), the checkpoint-design bound).
-- The manifest FILE ENTRY carries only a tiny ref
-  ``{"dv": {"path": rel, "n_deleted": k}}``; a later delete on the same
-  file writes a NEW sidecar (old ∪ new positions — bitmaps are OR-able)
-  and the commit replaces the entry (remove+add of the same data path),
-  so snapshots stay immutable and time travel reads the old DV.
-- DV bytes are written EXECUTOR-side (one ``applyInPandas`` group per
-  touched file); the driver collects one (file, dv_ref, count) row per
-  file — file-count-bounded, like the bloom build.
-- Readers subtract positions with a LEFT ANTI join on
-  ``(_metadata.file_name, _metadata.row_index)`` against a positions
-  DataFrame exploded executor-side from the sidecars — whole plan stays
-  JVM + one Arrow-batched decode; files WITHOUT a DV take the untouched
-  fast path (the common case: compaction keeps the DV'd fraction small).
-- ``vacuum`` reclaims sidecars referenced by no retained version, the
-  same retention window as data files.
+- A DV is an immutable Iceberg-style position-delete file
+  ``_dv/<hex>.parquet``: one ``pos long`` column holding the 0-based
+  deleted row positions of ONE data file, sorted ascending. It is NEVER
+  inlined into the txlog (commit bytes stay O(delta)).
+- The manifest FILE ENTRY carries only ``{"dv": {"path": rel,
+  "n_deleted": k}}``, ``k`` being the sidecar's footer row count. A later
+  delete on the same file writes a NEW sidecar (old ∪ new positions) and
+  the commit replaces the entry, so time travel reads the old DV.
+- ``write_dvs`` writes every sidecar of a build in ONE Spark write
+  (``partitionBy`` the touched-file index into a staging directory under
+  ``_dv/``, then a driver-side rename); ``positions_df`` reads them with
+  ONE parquet scan for the readers' LEFT ANTI join on
+  ``(_metadata.file_name, _metadata.row_index)``. No Python worker runs
+  and nothing is collected. Files without a DV take the plain-scan path.
+- ``vacuum`` reclaims every ``_dv/`` entry no retained version
+  references (superseded sidecars, crashed staging directories).
 
-Determinism: positions come from parquet's physical row order
-(``_metadata.row_index``), which is immutable for an immutable file.
-
-Reference parity: Delta Lake deletion vectors (delta.enableDeletionVectors),
-Iceberg v2 position delete files [public Delta/Iceberg docs].
+Positions come from parquet's physical row order (``_metadata.row_index``),
+which is immutable for an immutable file.
 """
 
 from __future__ import annotations
 
-import base64
-import json
 import os
+import shutil
 import uuid
 
-import numpy as np
-
-
-def encode_dv(positions, n_rows: int) -> dict:
-    """Sidecar payload from 0-based row positions: packed little-endian
-    bitmap (bit i of byte j = row 8j+i), base64 for JSON transport."""
-    bits = np.zeros(int(n_rows), dtype=bool)
-    pos = np.asarray(positions, dtype=np.int64)
-    if pos.size:
-        bits[pos] = True
-    return {
-        "bits": base64.b64encode(
-            np.packbits(bits, bitorder="little").tobytes()
-        ).decode(),
-        "n_rows": int(n_rows),
-        "n_deleted": int(bits.sum()),
-    }
-
-
-def decode_mask(dv: dict) -> np.ndarray:
-    """Boolean deleted-mask of length ``n_rows`` from a sidecar payload."""
-    raw = np.frombuffer(base64.b64decode(dv["bits"]), dtype=np.uint8)
-    return np.unpackbits(raw, bitorder="little")[: int(dv["n_rows"])].astype(bool)
-
-
-def merge_positions(old_dv: dict | None, positions, n_rows: int) -> dict:
-    """OR new positions into an existing sidecar payload (idempotent —
-    re-deleting an already-deleted position is a no-op)."""
-    if old_dv is None:
-        return encode_dv(positions, n_rows)
-    mask = decode_mask(old_dv)
-    pos = np.asarray(positions, dtype=np.int64)
-    if pos.size:
-        mask[pos] = True
-    return encode_dv(np.flatnonzero(mask), n_rows)
-
-
-def write_dv_sidecar(root: str, dv: dict) -> str:
-    """Persist one sidecar under ``_dv/`` (tmp + os.replace — whole or
-    absent, the bloom-sidecar atomicity contract); returns the rel path
-    the manifest entry references. Runs executor-side."""
-    rel = os.path.join("_dv", f"{uuid.uuid4().hex}.json")
-    full = os.path.join(root, rel)
-    os.makedirs(os.path.dirname(full), exist_ok=True)
-    tmp = full + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump(dv, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, full)
-    return rel
-
-
-def read_dv_sidecar(root: str, rel: str) -> dict:
-    with open(os.path.join(root, rel)) as fh:
-        return json.load(fh)
+import pyarrow.parquet as pq
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 
 def positions_df(spark, root: str, entries: list[dict]):
     """(__dv_base, __dv_pos) rows for every deleted position of the
-    DV-carrying ``entries`` — the anti-join's right side. The seed is
-    one row PER FILE (file-count-bounded); sidecar decode and the
-    explode to ``n_deleted`` rows happen executor-side in one
-    Arrow-batched pass, so DV bytes never touch the driver."""
-    import pandas as pd
-
-    seed = spark.createDataFrame(
-        [
-            (os.path.basename(e["path"]), os.path.join(root, e["dv"]["path"]))
+    DV-carrying ``entries`` — the anti-join's right side: one parquet
+    scan of their sidecars, each sidecar's file name mapped to its data
+    file's basename through a literal map (file-count-bounded)."""
+    base_of = F.create_map(
+        *[
+            F.lit(x)
             for e in entries
-        ],
-        "__dv_base string, __dv_path string",
-    ).repartition(max(1, min(len(entries), 64)))
+            for x in (os.path.basename(e["dv"]["path"]), os.path.basename(e["path"]))
+        ]
+    )
+    return (
+        spark.read.schema("pos long")
+        .parquet(*[os.path.join(root, e["dv"]["path"]) for e in entries])
+        .select(
+            base_of[F.col("_metadata.file_name")].alias("__dv_base"),
+            F.col("pos").alias("__dv_pos"),
+        )
+    )
 
-    def gen(batches):
-        for pdf in batches:
-            for b, p in zip(pdf["__dv_base"], pdf["__dv_path"]):
-                with open(p) as fh:
-                    dv = json.load(fh)
-                pos = np.flatnonzero(decode_mask(dv)).astype("int64")
-                if pos.size:
-                    yield pd.DataFrame({"__dv_base": b, "__dv_pos": pos})
 
-    return seed.mapInPandas(gen, schema="__dv_base string, __dv_pos long")
+def write_dvs(
+    root: str, new, old, n_files: int
+) -> dict[int, tuple[str, int]]:
+    """Write the sidecars of one DV build in ONE Spark write; returns
+    ``{index: (rel path, n_deleted)}``, the count read from the footer.
+
+    ``new`` holds the build's newly deleted (``__i`` file index, ``pos``)
+    rows; ``old`` (or None) the existing positions of the touched files
+    that already carry a DV. A file's old positions are kept only when
+    it has at least one new row, so a file with no new hit gets no
+    sidecar. New rows come from a DV-aware scan, so they never repeat an
+    old position and every (index, pos) lands once."""
+    rows = new.select("__i", "pos", F.lit(True).alias("__new"))
+    if old is not None:
+        rows = rows.unionByName(old.select("__i", "pos", F.lit(False).alias("__new")))
+    # one sort serves the window, the per-index split and the ascending
+    # ``pos`` order of each sidecar (the window keeps its input order)
+    rows = rows.repartition(max(1, min(n_files, 64)), "__i").sortWithinPartitions(
+        "__i", "pos"
+    )
+    if old is not None:
+        rows = rows.withColumn(
+            "__hit", F.max("__new").over(Window.partitionBy("__i"))
+        ).filter("__hit")
+    staging = os.path.join(root, "_dv", f"_staging-{uuid.uuid4().hex}")
+    rows.select("__i", "pos").write.partitionBy("__i").parquet(staging)
+    out = {}
+    for d in sorted(os.listdir(staging)):
+        if not d.startswith("__i="):
+            continue
+        files = [
+            f for f in os.listdir(os.path.join(staging, d)) if f.endswith(".parquet")
+        ]
+        if len(files) != 1:
+            raise RuntimeError(
+                f"deletion vector build wrote {len(files)} files for {d} "
+                "(expected exactly one)"
+            )
+        rel = os.path.join("_dv", f"{uuid.uuid4().hex}.parquet")
+        full = os.path.join(root, rel)
+        os.replace(os.path.join(staging, d, files[0]), full)
+        out[int(d[len("__i="):])] = (rel, pq.ParquetFile(full).metadata.num_rows)
+    shutil.rmtree(staging)
+    return out

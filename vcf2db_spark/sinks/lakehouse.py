@@ -35,9 +35,9 @@ store with nothing but parquet files and a JSON transaction log:
   update batch are rewritten; untouched file entries carry into the new
   manifest verbatim (tests assert the paths are identical objects on disk).
 - **Merge-on-read DELETE (deletion vectors, r9)** — ``dv_delete`` commits
-  a position-bitmap sidecar per touched file instead of rewriting it
-  (the Delta DV / Iceberg v2 position-delete pattern); every reader
-  applies the bitmap through ``_scan_entries``, ``compact`` purges files
+  a parquet position-delete sidecar per touched file instead of
+  rewriting it (the Iceberg v2 position-delete / Delta DV pattern); every
+  reader applies it through ``_scan_entries``, ``compact`` purges files
   past a deleted-ratio threshold, and ``vacuum`` reclaims unreferenced
   sidecars — sparse deletes cost KBs of sidecar, not COW gigabytes (see
   sinks/deletion_vectors.py).
@@ -61,9 +61,11 @@ query the previous build" workflow.
 
 from __future__ import annotations
 
+import glob
 import json
 import math
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -567,10 +569,20 @@ def append(
 #: total deleted positions (16 bytes/row → ~64 MB at the bound); larger
 #: DV sets fall back to a shuffled anti-join (AQE can still re-plan)
 _DV_BROADCAST_POSITIONS = 4_000_000
-# dv_merge broadcasts its update batch into the matched-position join only
-# while the batch row count (already known from the 1-row bounds aggregate)
-# stays under this; larger batches fall back to the planner's choice
-_MERGE_BROADCAST_ROWS = 2_000_000
+# merge / dv_merge broadcast their update batch into the key join only
+# while the batch's estimated size — exact row count (from the 1-row
+# bounds aggregate) × the schema's estimated row width — stays under
+# this; larger or wider batches fall back to the planner's choice
+_MERGE_BROADCAST_BYTES = 64 << 20
+
+
+def _broadcast_if_small(spark: SparkSession, df: DataFrame, rows: int):
+    """``df`` with a broadcast hint while rows × Spark's estimated row
+    width for its schema (``DataType.defaultSize``) fits the bound."""
+    width = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
+        df.schema.json()
+    ).defaultSize()
+    return F.broadcast(df) if rows * width <= _MERGE_BROADCAST_BYTES else df
 
 
 def _scan_entries(
@@ -930,9 +942,8 @@ def merge(
     # row count is exact (the bounds aggregate above), while Catalyst
     # only has the upstream scan estimate — broadcast the bounded batch
     # so the TARGET side is never shuffled (same gate dv_merge uses;
-    # larger batches fall back to the planner's choice).
-    if bounds["total"] <= _MERGE_BROADCAST_ROWS:
-        upd = F.broadcast(upd)
+    # larger or wider batches fall back to the planner's choice).
+    upd = _broadcast_if_small(spark, upd, bounds["total"])
     merged = target.join(upd, target[key] == upd["__k"], "left").select(
         key,
         *[
@@ -1045,7 +1056,7 @@ def dv_delete(
     """Merge-on-read DELETE via deletion vectors (VERDICT r8 item 4 —
     the Delta DV / Iceberg v2 position-delete pattern): instead of
     rewriting every file holding a matching row (COW ``delete``), commit
-    a position-bitmap SIDECAR per touched file and apply it at read.
+    a position-delete SIDECAR per touched file and apply it at read.
     A 1-row delete in a 1 GB file writes a KB-scale sidecar and ZERO
     data files — at 100 TB with GDPR-style trickle deletes this removes
     the COW write-amplification cost center entirely; ``compact``'s
@@ -1053,13 +1064,13 @@ def dv_delete(
     threshold (amortized, like Delta's OPTIMIZE on DV'd tables).
 
     Mechanics: one DV-aware scan of the pruned candidates finds matching
-    LIVE rows' ``(file, _metadata.row_index)`` positions; one
-    ``applyInPandas`` group per touched file ORs them into the file's
-    existing bitmap (re-deleting a masked row is a no-op) and writes the
-    new sidecar EXECUTOR-side; the driver collects one (file, ref,
-    count) row per touched file — file-count-bounded, like the bloom
-    build — and commits a manifest that REPLACES each touched entry
-    (remove+add of the same data path with the new ``dv`` ref). A file
+    LIVE rows' ``(file, _metadata.row_index)`` positions; one Spark
+    write unions them with the file's existing positions and writes one
+    sorted parquet position-delete sidecar per file with a hit
+    (``_build_dvs``); the driver renames the sidecars into place, reads
+    each count from its footer, and commits a manifest that REPLACES
+    each touched entry (remove+add of the same data path with the new
+    ``dv`` ref). No Python worker runs and nothing is collected. A file
     whose every row is now deleted is dropped from the manifest outright
     (no empty-file tombstones). Snapshots stay immutable: time travel to
     the pre-delete version reads the OLD entry and its old (or no) DV.
@@ -1089,44 +1100,33 @@ def dv_delete(
 
 
 def _build_dvs(root: str, hits: DataFrame, touched: list[dict]) -> dict:
-    """Executor-side DV construction shared by ``dv_delete`` and
-    ``dv_merge``: group the (__base, __pos) hit rows per file, OR them
-    into the file's existing bitmap, write the new sidecar where the
-    group runs, and hand the driver ONE (file, ref, count) row per
-    touched file — file-count-bounded, like the bloom build; the DV
-    bytes themselves never leave the executors."""
-    by_base = {
-        os.path.basename(e["path"]): (
-            int(e["rows"]),
-            e["dv"]["path"] if e.get("dv") else None,
-        )
-        for e in touched
-    }
+    """DV construction shared by ``dv_delete`` and ``dv_merge``: the
+    (__base, __pos) hit rows, plus the existing positions of touched
+    files that already carry a DV, become one new sidecar per file with
+    a hit, all in one Spark write (deletion_vectors.write_dvs). Returns
+    {basename: (dv ref, n_deleted)}; the driver only reads footers."""
+    from vcf2db_spark.sinks.deletion_vectors import positions_df, write_dvs
 
-    def build(pdf):
-        import pandas as pd
-
-        from vcf2db_spark.sinks.deletion_vectors import (
-            merge_positions,
-            read_dv_sidecar,
-            write_dv_sidecar,
-        )
-
-        base = pdf["__base"].iloc[0]
-        n_rows, old_rel = by_base[base]
-        old = read_dv_sidecar(root, old_rel) if old_rel else None
-        dv = merge_positions(old, pdf["__pos"].to_numpy(), n_rows)
-        rel = write_dv_sidecar(root, dv)
-        return pd.DataFrame(
-            {"base": [base], "dv_rel": [rel], "n_deleted": [dv["n_deleted"]]}
-        )
-
-    rows = (
-        hits.groupBy("__base")
-        .applyInPandas(build, schema="base string, dv_rel string, n_deleted long")
-        .collect()
+    if not touched:
+        return {}
+    bases = [os.path.basename(e["path"]) for e in touched]
+    idx_of = F.create_map(
+        *[F.lit(x) for i, b in enumerate(bases) for x in (b, i)]
     )
-    return {r["base"]: (r["dv_rel"], r["n_deleted"]) for r in rows}
+    new = hits.select(
+        idx_of[F.col("__base")].alias("__i"), F.col("__pos").alias("pos")
+    )
+    dved = [e for e in touched if e.get("dv")]
+    old = (
+        positions_df(hits.sparkSession, root, dved).select(
+            idx_of[F.col("__dv_base")].alias("__i"),
+            F.col("__dv_pos").alias("pos"),
+        )
+        if dved
+        else None
+    )
+    written = write_dvs(root, new, old, len(touched))
+    return {bases[i]: ref for i, ref in written.items()}
 
 
 def _apply_dvs(
@@ -1160,7 +1160,7 @@ def dv_merge(
     data file, so the bytes written are O(update batch), never O(touched
     files). COW ``merge`` rewrites every file containing a matched key
     (bloom-refined, but a 3-row update spread across 3 × 1 GB files
-    still rewrites 3 GB); this verb writes KB-scale bitmaps + the batch.
+    still rewrites 3 GB); this verb writes KB-scale sidecars + the batch.
 
     Semantics match ``merge`` exactly: matched target rows take the
     update's non-key columns (every copy of a duplicated target key is
@@ -1170,7 +1170,7 @@ def dv_merge(
     rows match nothing and insert. Candidate files narrow through the
     same stats + bloom tiers as ``merge``; the matched-position scan and
     the DV build are the ``dv_delete`` machinery. Reads apply the
-    bitmaps; ``compact`` purges them past the deleted-ratio threshold."""
+    sidecars; ``compact`` purges them past the deleted-ratio threshold."""
     cur = snapshot(root)
     _check_schema(cur, updates, "dv_merge")
     # one materialization of the batch for its four consumers (bounds,
@@ -1239,10 +1239,7 @@ def dv_merge(
     # WRITES, not batch-sized executor memory) — past the gate let
     # AQE/autoBroadcastJoinThreshold pick the join strategy, same policy
     # as the DV-positions join's _DV_BROADCAST_POSITIONS gate
-    upd_side = (
-        F.broadcast(upd) if bounds["total"] <= _MERGE_BROADCAST_ROWS
-        else upd
-    )
+    upd_side = _broadcast_if_small(spark, upd, bounds["total"])
     matched = target.join(upd_side, target[key] == upd["__k"])
     # matched feeds BOTH the DV build and the replacement rows — without
     # a barrier the touched-file scan + join runs twice. Batch-bounded
@@ -1621,24 +1618,33 @@ def vacuum(
                             pass
                 except OSError:
                     continue
-    # deletion-vector sidecars follow the SAME retention window: a DV
-    # referenced by no retained version (superseded by a later delete,
-    # retired by a purge rewrite, or orphaned by a crashed commit) is
-    # reclaimed; the min-age guard protects in-flight dv_delete commits
-    # exactly as it protects staged data files
+    # everything under _dv/ follows the SAME retention window: a sidecar
+    # no retained version references (superseded, retired by a purge, or
+    # orphaned by a crashed commit) and a crashed DV write's staging
+    # directory are reclaimed; the min-age guard, on the newest mtime
+    # inside a directory, protects in-flight DV builds
     dv_root = os.path.join(root, "_dv")
-    if os.path.isdir(dv_root):
-        for name in os.listdir(dv_root):
-            rel = os.path.join("_dv", name)
-            if not name.endswith(".json") or rel in live_dv:
+    names = os.listdir(dv_root) if os.path.isdir(dv_root) else []
+    for name in names:
+        full = os.path.join(dv_root, name)
+        if os.path.join("_dv", name) in live_dv:
+            continue
+        try:
+            is_dir = os.path.isdir(full)
+            paths = (
+                glob.glob(os.path.join(full, "**"), recursive=True)
+                if is_dir
+                else [full]
+            )
+            if max(map(os.path.getmtime, paths)) > cutoff:
                 continue
-            full = os.path.join(dv_root, name)
-            try:
-                if os.path.getmtime(full) <= cutoff:
-                    os.unlink(full)
-                    removed += 1
-            except OSError:
-                continue
+            if is_dir:
+                shutil.rmtree(full)
+            else:
+                os.unlink(full)
+            removed += 1
+        except OSError:
+            continue
     # record the watermark: every version >= keep_from still has its
     # full file set on disk. restore() and the streaming feed check
     # this ONE marker instead of stat-ing files (VERDICT/ADVICE r7).

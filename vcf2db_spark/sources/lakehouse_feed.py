@@ -304,13 +304,14 @@ class LakehouseFeedStreamReader(DataSourceStreamReader):
             # merge-on-read: subtract the entry's deletion-vector
             # positions before emitting (one vectorized mask per file,
             # executor-side — the same pyarrow pass that read the file)
-            from vcf2db_spark.sinks.deletion_vectors import (
-                decode_mask,
-                read_dv_sidecar,
-            )
+            import numpy as np
 
-            mask = decode_mask(read_dv_sidecar(partition.root, dv_rel))
-            table = table.filter(pa.array(~mask[: table.num_rows]))
+            pos = pq.read_table(
+                os.path.join(partition.root, dv_rel), columns=["pos"]
+            )["pos"].to_numpy()
+            keep = np.ones(table.num_rows, dtype=bool)
+            keep[pos] = False
+            table = table.filter(pa.array(keep))
         n = table.num_rows
         data_schema = StructType(self.schema.fields[:-2])
         target = to_arrow_schema(data_schema)
