@@ -2,8 +2,9 @@
 position-delete sidecars written by one Spark write and read by one
 parquet scan. The gate walks the plan graph of every SQL execution a
 create → dv_merge → dv_delete → compact → read cycle leaves in the status
-store and fails on any Python/Pandas/Arrow node; a ``mapInPandas``
-identity over the same read is the negative control. It also pins the
+store and fails on any Python/Pandas/Arrow node or Python DataSource
+scan (``tests/plan_gates.py``); a ``mapInPandas`` identity over the same
+read is the negative control. It also pins the
 sidecar shape: one sorted ``pos`` parquet file per DV, directly under
 ``_dv/``, whose row count is the entry's ``n_deleted``.
 """
@@ -11,39 +12,13 @@ sidecar shape: one sorted ``pos`` parquet file per DV, directly under
 from __future__ import annotations
 
 import os
-import re
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from tests.plan_gates import last_execution_id, plan_nodes, python_nodes
 from vcf2db_spark.sinks import lakehouse as lh
-
-_PYTHON_NODE = re.compile(r"Python|Pandas|Arrow")
-
-
-def _last_execution_id(spark) -> int:
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    n = execs.size()
-    return execs.apply(n - 1).executionId() if n else -1
-
-
-def _python_nodes(spark, after: int, upto: int | None = None) -> list[str]:
-    """Names of the Python-boundary plan nodes of every SQL execution
-    with ``after < id <= upto`` (no upper bound when ``upto`` is None)."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    execs = store.executionsList()
-    found = []
-    for i in range(execs.size()):
-        eid = execs.apply(i).executionId()
-        if eid <= after or (upto is not None and eid > upto):
-            continue
-        it = store.planGraph(eid).allNodes().iterator()
-        while it.hasNext():
-            name = it.next().name()
-            if _PYTHON_NODE.search(name):
-                found.append(name)
-    return found
 
 
 def _mk(spark, lo, hi, scale=1.0):
@@ -57,7 +32,7 @@ def cycle(spark, tmp_path_factory):
     """Run the verb cycle once; yield (root, (first, last) execution id
     bounds, the version after dv_delete, the manifest at that version)."""
     root = str(tmp_path_factory.mktemp("jvm_only") / "tbl")
-    start = _last_execution_id(spark)
+    start = last_execution_id(spark)
     lh.create(spark, root, _mk(spark, 0, 400).repartition(4), stat_cols=("k",))
     lh.dv_merge(spark, root, _mk(spark, 390, 410, scale=10.0), key="k")
     v_del = lh.dv_delete(spark, root, "k % 7 = 0")
@@ -65,23 +40,23 @@ def cycle(spark, tmp_path_factory):
     lh.compact(spark, root)
     assert lh.read(spark, root).count() == 410 - len(range(0, 410, 7))
     assert lh.read(spark, root, v_del).count() == 410 - len(range(0, 410, 7))
-    yield root, (start, _last_execution_id(spark)), v_del, man
+    yield root, (start, last_execution_id(spark)), v_del, man
 
 
 def test_no_lake_verb_runs_python(spark, cycle):
     _root, (start, end), _v, _man = cycle
     assert end > start, "the cycle ran no SQL execution"
-    assert _python_nodes(spark, start, end) == []
+    assert python_nodes(plan_nodes(spark, start, end)) == []
 
 
 def test_negative_control_mapinpandas_trips_gate(spark, cycle):
     root, _start, v_del, _man = cycle
-    before = _last_execution_id(spark)
+    before = last_execution_id(spark)
     df = lh.read(spark, root, v_del)
     df.mapInPandas(lambda batches: batches, schema=df.schema).write.format(
         "noop"
     ).mode("overwrite").save()
-    assert any("Pandas" in n for n in _python_nodes(spark, before))
+    assert any("Pandas" in n for n in python_nodes(plan_nodes(spark, before)))
 
 
 def test_dv_sidecar_is_one_sorted_parquet_file(cycle):

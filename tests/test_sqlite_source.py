@@ -1,5 +1,6 @@
 """Gemini-DB SQLite source (sources/sqlite.py): round-trip through the
-sink and back, rowid-range partitioning, blob→array decode, pushdown."""
+sink and back, rowid-range partitioning, blob→array decode, and filters
+applied by Spark after the read (nothing is pushed into SQLite)."""
 
 from __future__ import annotations
 

@@ -1,0 +1,177 @@
+"""The two VCF builders give the same rows: the JVM column builder
+(``sources.vcf.vcf_columns``, which ``read_vcf`` and the stream use for
+text VCF) and the Python row builder (``_row_builder``, which the
+DataSource uses for BCF and indexed BGZF). Every fixture of
+test_vcf_edge_cases, test_decompose and test_vcf_stream, plus the edge
+cases below, is parsed by both; the rows must be equal value for value
+and the JVM frame's schema must equal ``build_schema``, nullability
+included. Records the Python builder rejects must fail the JVM read with
+the same message.
+"""
+
+from __future__ import annotations
+
+import gzip
+import shutil
+
+import pytest
+
+from tests import test_decompose, test_vcf_edge_cases
+from tests.fixtures import make_mini_vcf as mini
+from tests.test_bgzf_tabix import _mk_vcf_text
+from tests.test_vcf_stream import SHARD2
+from vcf2db_spark.sources.bgzf import compress_file
+from vcf2db_spark.sources.header import build_schema, parse_header, read_header_text
+from vcf2db_spark.sources.tabix import index_vcf
+from vcf2db_spark.sources.vcf import _row_builder, read_vcf
+
+HEADER = """\
+##fileformat=VCFv4.2
+##contig=<ID=chr1,length=1000000>
+##contig=<ID=chr2,length=1000000>
+##INFO=<ID=DP,Number=1,Type=Integer,Description="depth">
+##INFO=<ID=AF,Number=A,Type=Float,Description="freq">
+##INFO=<ID=S,Number=1,Type=String,Description="string">
+##INFO=<ID=FLAGX,Number=0,Type=Flag,Description="flag">
+##INFO=<ID=LISTY,Number=.,Type=Integer,Description="list">
+##INFO=<ID=RD,Number=R,Type=Integer,Description="per-allele depth">
+##INFO=<ID=GL,Number=G,Type=Float,Description="likelihoods">
+##FORMAT=<ID=GT,Number=1,Type=String,Description="gt">
+##FORMAT=<ID=GQ,Number=1,Type=Integer,Description="gq">
+##FORMAT=<ID=DP,Number=1,Type=Integer,Description="dp">
+##FORMAT=<ID=AD,Number=R,Type=Integer,Description="ad">
+#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2
+"""
+
+EDGE = {
+    # the last of a duplicated INFO or FORMAT key wins, as in a dict
+    "duplicate_keys": (
+        "chr1\t10\t.\tA\tT\t5\tPASS\tDP=3;S=a;DP=5;S=b;FLAGX;FLAGX\tGT:DP:DP\t0/1:4:7\t1/1:8:9\n"
+        "chr1\t20\t.\tC\tG\t5\tPASS\tDP=3;DP=6\tGT:GT:GQ\t0/0:1/1:20\t0/1:0/0:30\n"
+    ),
+    # zip() cuts a sample shorter than FORMAT; a record may lack FORMAT
+    "short_sample": (
+        "chr1\t10\t.\tA\tT\t5\tPASS\tDP=3\tGT:GQ:DP:AD\t0/1:30\t.\n"
+        "chr1\t20\t.\tC\tG\t5\tPASS\tDP=3\tGQ:GT\t40\t50:1/1:extra\n"
+        "chr1\t30\t.\tG\tC\t5\tPASS\tDP=3\n"
+    ),
+    # an INFO value is everything after the first '='
+    "equals_in_value": "chr1\t10\t.\tA\tT\t5\tPASS\tS=a=b;DP=2\tGT\t0/1\t0/0\n",
+    # an absent Flag is NULL; a Flag with a value is still set
+    "flags": (
+        "chr1\t10\t.\tA\tT\t5\tPASS\tDP=1\tGT\t0/1\t0/0\n"
+        "chr1\t20\t.\tC\tG\t5\tPASS\tFLAGX=1;DP=1\tGT\t0/1\t0/0\n"
+    ),
+    # '.' and empty values everywhere
+    "dots_and_empties": (
+        "chr1\t10\t.\tA\tT\t.\t.\tDP=.;S=;LISTY=1,.,3;;RD=\tGT:GQ:DP:AD\t0/1::.:.\t./.:.::,\n"
+        "chr1\t20\t.\tC\tG\t\tPASS\tS=.;LISTY;AF=.\tGT:AD\t0/1:.,4\t1/1:5,.\n"
+        "chr1\t30\t.\tG\tC\t7.5\tPASS\t.\tGT:AD\t0/1:3\t./.:\n"
+    ),
+    # haploid, phased, half-missing, an allele index past ALT
+    "genotypes": (
+        "chr2\t10\t.\tA\tT\t5\tPASS\tDP=1\tGT\t1\t0\n"
+        "chr2\t20\t.\tC\tG\t5\tPASS\tDP=1\tGT\t0|1\t1|.\n"
+        "chr2\t30\t.\tG\tC\t5\tPASS\tDP=1\tGT\t./1\t0/2\n"
+        "chr2\t40\t.\tG\tC\t5\tPASS\tDP=1\tGT\t0/1/1\t.|.\n"
+    ),
+    # split: A/R slices, G without a value, counts that do not match
+    "multiallelic": (
+        "chr1\t10\t.\tA\tG,T\t5\tPASS\tAF=0.1,0.2;RD=1,2,3;GL;DP=4\tGT:AD\t1/2:1,2,3\t0/1:4,5\n"
+        "chr1\t20\t.\tC\tG,T,A\t5\tPASS\tAF=0.1;RD=1,2;GL=1,2,3,4,5,6\tGT:AD\t0/3:.\t2|1:1,2,3,4\n"
+        "chr1\t30\t.\tG\tC\t5\tPASS\tAF=0.3;RD=7,8;GL=1,2,3\tGT:AD\t0/1:7,8\t0/2:1,2\n"
+    ),
+}
+
+# the multi-allelic shard of test_vcf_stream.test_stream_decompose_split
+STREAM_MULTI = (
+    "chr1\t700\t.\tA\tG,T\t40.0\tPASS\tAC=1,2;AF=0.167,0.333;DP=21"
+    "\tGT:GQ:DP:AD\t1/2:50:9:1,4,4\t0/1:60:8:4,4,0\t0/0:70:7:7,0,0\n"
+)
+
+CASES = {
+    **{f"edge_{k}": (test_vcf_edge_cases.HEADER, v, "reject")
+       for k, v in test_vcf_edge_cases.BODIES.items()},
+    "decompose_split": (test_decompose.HEADER, test_decompose.BODY, "split"),
+    "decompose_reject": (test_decompose.HEADER, test_decompose.BODY, "reject"),
+    "stream_mini": (mini.HEADER, mini.BODY, "reject"),
+    "stream_shard2": (mini.HEADER, SHARD2, "reject"),
+    "stream_multi_split": (mini.HEADER, STREAM_MULTI, "split"),
+    **{f"new_{k}": (HEADER, v, "split" if k == "multiallelic" else "reject")
+       for k, v in EDGE.items()},
+    "new_multiallelic_reject": (HEADER, EDGE["multiallelic"], "reject"),
+    "new_scalar_list_reject": (
+        HEADER, "chr1\t10\t.\tA\tT\t5\tPASS\tS=a,b\tGT\t0/1\t0/0\n", "reject"
+    ),
+    # a rejected value is rejected even when a later duplicate would win
+    "new_duplicate_list_reject": (
+        HEADER, "chr1\t10\t.\tA\tT\t5\tPASS\tDP=3,4;DP=6\tGT\t0/1\t0/0\n", "reject"
+    ),
+    "new_af_count_split": (
+        HEADER, "chr1\t10\t.\tA\tT,G\t5\tPASS\tAF=1,2,3\tGT\t0/1\t0/0\n", "split"
+    ),
+}
+
+
+def python_rows(path: str, decompose: str) -> list[tuple]:
+    """The Python builder over the file's records, read as the
+    DataSource's text scan read them (universal newlines)."""
+    header = parse_header(read_header_text(path))
+    build = _row_builder(header, build_schema(header), decompose)
+    with open(path) as fh:
+        return [
+            row
+            for line in fh
+            if line.strip("\n") and not line.startswith("#")
+            for row in build(line.rstrip("\n").split("\t"))
+        ]
+
+
+def jvm_rows(spark, path: str, decompose: str) -> list[tuple]:
+    df = read_vcf(spark, path, decompose=decompose)
+    assert df.schema == build_schema(parse_header(read_header_text(path)))
+    assert "BatchScan" not in df._jdf.queryExecution().executedPlan().toString()
+    return [tuple(r) for r in df.collect()]
+
+
+def same_rows(a: list[tuple], b: list[tuple]) -> bool:
+    return sorted(a, key=repr) == sorted(b, key=repr)
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_jvm_builder_matches_python_builder(spark, tmp_path, case):
+    header, body, decompose = CASES[case]
+    path = tmp_path / "case.vcf"
+    path.write_text(header + body)
+    try:
+        want = python_rows(str(path), decompose)
+    except ValueError as exc:
+        with pytest.raises(Exception) as got:
+            jvm_rows(spark, str(path), decompose)
+        assert str(exc) in str(got.value)
+        return
+    assert want, "fixture parsed to no rows"
+    assert same_rows(jvm_rows(spark, str(path), decompose), want)
+
+
+def test_plain_gzip_and_bgzf_parse_alike(spark, tmp_path):
+    """The test_bgzf_tabix fixture as plain text, plain gzip and BGZF
+    (JVM builder) and as indexed BGZF (the DataSource): one row set."""
+    plain = tmp_path / "c.vcf"
+    plain.write_text(_mk_vcf_text(300, seed=3))
+    gz = tmp_path / "c.gzip.vcf.gz"
+    with open(plain, "rb") as src, gzip.open(gz, "wb") as dst:
+        shutil.copyfileobj(src, dst)
+    bgz = str(tmp_path / "c.vcf.gz")
+    compress_file(str(plain), bgz)
+    indexed = str(tmp_path / "i.vcf.gz")
+    shutil.copy(bgz, indexed)
+    index_vcf(indexed)
+
+    want = python_rows(str(plain), "reject")
+    assert len(want) == 600
+    for path in (str(plain), str(gz), bgz):
+        assert same_rows(jvm_rows(spark, path, "reject"), want), path
+    src = read_vcf(spark, indexed)
+    assert "BatchScan vcf" in src._jdf.queryExecution().executedPlan().toString()
+    assert same_rows([tuple(r) for r in src.collect()], want)

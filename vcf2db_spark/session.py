@@ -171,25 +171,32 @@ def pin_session_conf(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except Exception:
         pass  # static conf on some builds; VCF pushdown then stays off
-    _ship_package(spark)
+    ship_package(spark)
     spark._vcf2db_pinned = True
 
 
-def _ship_package(spark: SparkSession) -> None:
+def ship_package(spark: SparkSession) -> None:
     """Make ``vcf2db_spark`` importable on Python WORKERS regardless of the
     driver environment. Closures that reference this package by module
-    (mapInPandas media stages, applyInPandasWithState) unpickle on the
-    worker with a plain ``import vcf2db_spark`` — which fails if the
-    driver only had the repo on ``sys.path`` (not ``$PYTHONPATH``, which
-    is what worker processes inherit). ``addPyFile`` of a package zip is
-    the environment-independent fix: workers prepend shipped files to
-    their ``sys.path``. Cheap (one ~360 KB zip per process, built under the
-    scratch root), idempotent via the pin guard."""
-    import os
+    (pandas UDFs, mapInArrow/mapInPandas stages, applyInPandasWithState)
+    unpickle on the worker with a plain ``import vcf2db_spark`` — which
+    fails if the driver only had the repo on ``sys.path`` (not
+    ``$PYTHONPATH``, which is what worker processes inherit). ``addPyFile``
+    of a package zip is the environment-independent fix: workers prepend
+    shipped files to their ``sys.path``. Every code path that creates such
+    a closure calls this (``pin_session_conf`` for the query path, the
+    SQLite sink and source for ingest). Cheap (one ~360 KB zip per
+    process, built under the scratch root) and once per SparkContext."""
     import zipfile
 
     from vcf2db_spark.lifecycle import scratch_root
 
+    try:
+        sc = spark.sparkContext
+    except Exception:
+        return  # Spark Connect sessions have no SparkContext
+    if getattr(sc, "_vcf2db_shipped", False):
+        return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zpath = os.path.join(scratch_root(), "vcf2db_spark_pkg.zip")
     if not os.path.exists(zpath):
@@ -204,7 +211,5 @@ def _ship_package(spark: SparkSession) -> None:
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         z.write(full, rel)
         os.replace(tmp, zpath)
-    try:
-        spark.sparkContext.addPyFile(zpath)
-    except Exception:
-        pass  # e.g. Spark Connect sessions without a SparkContext
+    sc.addPyFile(zpath)
+    sc._vcf2db_shipped = True

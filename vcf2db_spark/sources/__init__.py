@@ -1,7 +1,7 @@
 from vcf2db_spark.sources.bed import read_bed
 from vcf2db_spark.sources.header import VCFHeader, build_schema, clean, parse_header
 from vcf2db_spark.sources.ped import read_ped
-from vcf2db_spark.sources.sqlite import GeminiDBDataSource, read_gemini_db
+from vcf2db_spark.sources.sqlite import read_gemini_db
 from vcf2db_spark.sources.vcf import VCFDataSource, read_vcf
 
 __all__ = [
@@ -11,7 +11,6 @@ __all__ = [
     "parse_header",
     "read_bed",
     "read_ped",
-    "GeminiDBDataSource",
     "read_gemini_db",
     "VCFDataSource",
     "read_vcf",

@@ -176,6 +176,15 @@ GT_COLUMNS: tuple[tuple[str, T.DataType], ...] = (
 )
 
 
+def info_fields(
+    header: VCFHeader, black_list: tuple[str, ...] = ()
+) -> list[tuple[str, FieldDef]]:
+    """The header's INFO definitions that become columns, in header order
+    (IDs in ``black_list`` dropped, case-insensitively)."""
+    blacklisted = {b.lower() for b in black_list}
+    return [(fid, fd) for fid, fd in header.infos.items() if fid.lower() not in blacklisted]
+
+
 def build_schema(
     header: VCFHeader,
     black_list: tuple[str, ...] = (),
@@ -193,10 +202,7 @@ def build_schema(
         T.StructField("qual", T.DoubleType(), True),
         T.StructField("filter", T.StringType(), True),
     ]
-    blacklisted = {b.lower() for b in black_list}
-    for fid, fd in header.infos.items():
-        if fid.lower() in blacklisted:
-            continue
+    for fid, fd in info_fields(header, black_list):
         fields.append(T.StructField(clean(fid), fd.spark_type(), True))
     if include_genotypes and header.samples:
         for name, dtype in GT_COLUMNS:

@@ -13,12 +13,16 @@ Spark-first design:
 - **partitions = rowid ranges**: SQLite tables are rowid B-trees, so
   ``WHERE rowid BETWEEN lo AND hi`` is an index-range scan, not a table
   scan — N partitions each read only their slice. The driver samples
-  min/max rowid once; executors open the file read-only in parallel
-  (SQLite supports unlimited concurrent readers).
-- **predicate pushdown**: simple comparisons/IN are translated to a WHERE
-  clause evaluated inside SQLite — against the reference's own post-load
-  indexes (chrom/start, gene) when present. Spark re-applies every filter
-  afterwards, so partial translation is always safe.
+  min/max rowid once; the read is ``spark.range(n, numPartitions=n)
+  .mapInArrow(...)``, whose task i opens the file read-only (SQLite
+  supports unlimited concurrent readers), reads range i and hands Spark
+  Arrow batches. A ``mapInArrow`` worker starts in a fraction of a
+  second; a Python DataSource costs seconds on its first use in a
+  process.
+- **no SQLite-side predicate pushdown**: every range is read whole and
+  Spark applies the query's filters after the read, so results are the
+  same as with pushdown; a selective query over a large ``.db`` reads
+  more rows than it keeps.
 - At cluster scale the `.db` file must be on a shared filesystem (the
   same constraint any single-file format has); the intended 100 TB flow
   is one migration read → ``write_parquet`` → native columnar layout.
@@ -28,24 +32,14 @@ from __future__ import annotations
 
 import sqlite3
 import zlib
-from dataclasses import dataclass
 
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-)
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from vcf2db_spark.session import ship_package
 
 #: BLOB columns that decode to int32 arrays (our sink's and the
 #: reference's genotype matrices; `_blob` twins from the CLI path).
@@ -99,121 +93,46 @@ def _quote(name: str) -> str:
     return '"' + name.replace('"', '""') + '"'
 
 
-def _sql_literal(v: object) -> str | None:
-    if isinstance(v, bool):
-        return "1" if v else "0"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    return None
+#: rows per Arrow batch handed to Spark
+_BATCH_ROWS = 4096
 
 
-def _filter_to_sql(f: Filter) -> str | None:
-    """Best-effort translation; None → not pushed (Spark re-applies all)."""
-    if len(f.attribute) != 1:
-        return None
-    col = _quote(f.attribute[0])
-    if isinstance(f, In):
-        lits = [_sql_literal(v) for v in f.value]
-        if any(x is None for x in lits) or not lits:
-            return None
-        return f"{col} IN ({', '.join(lits)})"
-    op = {
-        EqualTo: "=",
-        GreaterThan: ">",
-        GreaterThanOrEqual: ">=",
-        LessThan: "<",
-        LessThanOrEqual: "<=",
-    }.get(type(f))
-    if op is None:
-        return None
-    lit = _sql_literal(f.value)
-    return None if lit is None else f"{col} {op} {lit}"
+def _rowid_ranges(db_path: str, table: str, n_partitions: int) -> list[tuple[int, int]]:
+    """Up to ``n_partitions`` equal, inclusive rowid ranges covering the
+    table; one empty range for an empty table."""
+    con = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
+    try:
+        row = con.execute(f"SELECT min(rowid), max(rowid) FROM {_quote(table)}").fetchone()
+    finally:
+        con.close()
+    if row is None or row[0] is None:
+        return [(1, 0)]
+    lo, hi = int(row[0]), int(row[1])
+    n = max(1, min(n_partitions, hi - lo + 1))
+    step = (hi - lo + 1 + n - 1) // n
+    return [(lo + i * step, min(hi, lo + (i + 1) * step - 1)) for i in range(n)]
 
 
-@dataclass
-class RowidRange(InputPartition):
-    lo: int
-    hi: int  # inclusive
+def _read_range(db_path: str, table: str, arrow_schema, lo: int, hi: int):
+    """Arrow batches of the rows with ``lo <= rowid <= hi``; genotype
+    blobs decoded to int32 lists."""
+    import pyarrow as pa
 
-
-class GeminiDBReader(DataSourceReader):
-    def __init__(self, schema: T.StructType, options: dict):
-        self.schema_ = schema
-        self.path = options["path"]
-        self.table = options["table"]
-        self.n_partitions = int(options.get("n_partitions", "8"))
-        self.decode_blobs = options.get("decode_blobs", "true").lower() == "true"
-        self.where: list[str] = []
-
-    def pushFilters(self, filters: list[Filter]):
-        for f in filters:
-            sql = _filter_to_sql(f)
-            if sql is not None:
-                self.where.append(sql)
-        # Spark re-applies everything we don't claim; claim nothing so a
-        # lossy translation can never drop rows.
-        return filters
-
-    def _where_sql(self) -> str:
-        return (" AND " + " AND ".join(self.where)) if self.where else ""
-
-    def partitions(self):
-        con = sqlite3.connect(f"file:{self.path}?mode=ro", uri=True)
-        try:
-            row = con.execute(
-                f"SELECT min(rowid), max(rowid) FROM {_quote(self.table)}"
-            ).fetchone()
-        finally:
-            con.close()
-        if row is None or row[0] is None:
-            return [RowidRange(1, 0)]  # empty table → one empty range
-        lo, hi = int(row[0]), int(row[1])
-        n = max(1, min(self.n_partitions, hi - lo + 1))
-        step = (hi - lo + 1 + n - 1) // n
-        return [RowidRange(lo + i * step, min(hi, lo + (i + 1) * step - 1)) for i in range(n)]
-
-    def read(self, partition: RowidRange):
-        cols = ", ".join(_quote(f.name) for f in self.schema_.fields)
-        decode = [
-            i
-            for i, f in enumerate(self.schema_.fields)
-            if isinstance(f.dataType, T.ArrayType)
-        ]
-        con = sqlite3.connect(f"file:{self.path}?mode=ro", uri=True)
-        try:
-            cur = con.execute(
-                f"SELECT {cols} FROM {_quote(self.table)} "
-                f"WHERE rowid BETWEEN ? AND ?{self._where_sql()}",
-                (partition.lo, partition.hi),
-            )
-            for row in cur:
-                if decode:
-                    row = list(row)
-                    for i in decode:
-                        row[i] = _decode_int_blob(row[i])
-                    yield tuple(row)
-                else:
-                    yield row
-        finally:
-            con.close()
-
-
-class GeminiDBDataSource(DataSource):
-    """``spark.read.format("gemini_db").option("table", "variants")
-    .load("cohort.db")`` after ``spark.dataSource.register``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "gemini_db"
-
-    def schema(self) -> T.StructType:
-        decode = self.options.get("decode_blobs", "true").lower() == "true"
-        return _table_schema(self.options["path"], self.options["table"], decode)
-
-    def reader(self, schema: T.StructType) -> GeminiDBReader:
-        return GeminiDBReader(schema, dict(self.options))
+    cols = ", ".join(_quote(f.name) for f in arrow_schema)
+    decode = [pa.types.is_list(f.type) for f in arrow_schema]
+    con = sqlite3.connect(f"file:{db_path}?mode=ro", uri=True)
+    try:
+        cur = con.execute(
+            f"SELECT {cols} FROM {_quote(table)} WHERE rowid BETWEEN ? AND ?", (lo, hi)
+        )
+        while rows := cur.fetchmany(_BATCH_ROWS):
+            arrays = [
+                pa.array([_decode_int_blob(b) for b in col] if dec else col, type=f.type)
+                for col, dec, f in zip(zip(*rows), decode, arrow_schema)
+            ]
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+    finally:
+        con.close()
 
 
 def read_gemini_db(
@@ -223,16 +142,16 @@ def read_gemini_db(
     n_partitions: int = 8,
     decode_blobs: bool = True,
 ) -> DataFrame:
-    """Library entry point: one gemini-DB table as a DataFrame."""
-    spark.dataSource.register(GeminiDBDataSource)
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    return (
-        spark.read.format("gemini_db")
-        .option("table", table)
-        .option("n_partitions", str(n_partitions))
-        .option("decode_blobs", "true" if decode_blobs else "false")
-        .load(db_path)
-    )
+    """Library entry point: one gemini-DB table as a DataFrame, one
+    partition per rowid range."""
+    schema = _table_schema(db_path, table, decode_blobs)
+    ranges = _rowid_ranges(db_path, table, n_partitions)
+    arrow_schema = to_arrow_schema(schema)
+    ship_package(spark)
+
+    def read(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from _read_range(db_path, table, arrow_schema, *ranges[i])
+
+    return spark.range(len(ranges), numPartitions=len(ranges)).mapInArrow(read, schema)

@@ -1,31 +1,41 @@
-"""VCF DataSource for Spark (SURVEY.md §2A A1).
+"""VCF reader for Spark (SURVEY.md §2A A1).
 
 Spark-first replacement for the reference's cyvcf2/htslib streaming loop
-[U vcf2db.py §VCFDB.load ~L640]: a Python DataSource (Spark 4
-``pyspark.sql.datasource``) whose schema comes from the VCF header (A2) and
-whose partitions are contigs — mirroring tabix seek semantics, so a
-contig/locus predicate prunes partitions.
+[U vcf2db.py §VCFDB.load ~L640]. The schema comes from the VCF header
+(A2, ``header.build_schema``); the records take one of two paths.
 
-Scale design (100 TB): one partition per (contig, tabix chunk-range). With
-a BGZF input and a ``.tbi`` index (``sources.bgzf`` / ``sources.tabix`` —
-pure-Python readers of the htslib formats), each partition **seeks** to its
-contig's virtual-offset range and inflates only those blocks; pushed-down
-``chrom``/``start``/``end`` predicates (Spark 4 DataSource
-``pushFilters``) prune partitions and narrow the chunk ranges — the
-distributed twin of a tabix region query. Plain-text/plain-gzip inputs
-fall back to per-partition filtered scans (same row protocol, so the two
-paths stay interchangeable). Genotype matrices land as typed arrays;
-Parquet page compression replaces the reference's snappy blobs (A8) — the
-byte-parity codec lives in ``functions.codecs``.
+**Plain text, plain gzip, and BGZF with no index: one JVM column
+builder** (``vcf_columns``). ``spark.read.text`` lines are split on tab
+and typed by Spark expressions: INFO fields by their header type,
+per-sample GT/GQ/DP/AD through ``transform``, and ``decompose='split'``
+as a ``posexplode`` over ALT. No Python worker runs, so a cold load pays
+no Python DataSource start-up (several seconds for the first one in a
+process). With ``partition_by_contig`` the lines are hash-partitioned
+by contig into one partition per header contig before the parse.
+
+**BCF, and BGZF with a ``.tbi``/``.csi`` index: the Python DataSource**
+(``VCFDataSource``). Each partition is one (contig, index chunk range):
+it seeks to its virtual-offset range and inflates only those blocks
+(``sources.bgzf`` / ``sources.tabix`` / ``sources.csi``), so a
+multi-gigabyte file decompresses in parallel, and pushed-down
+``chrom``/``start``/``end`` predicates (``pushFilters``) prune partitions
+and narrow the chunk ranges — the distributed twin of a tabix region
+query. Records feed the Python row builder (``_row_builder``).
+
+Both builders give the same rows (``tests/test_vcf_builders.py``).
+Genotype matrices land as typed arrays; Parquet page compression
+replaces the reference's snappy blobs (A8) — the byte-parity codec lives
+in ``functions.codecs``.
 """
 
 from __future__ import annotations
 
-import gzip
 import os
-from dataclasses import dataclass, field
+import re
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
@@ -41,15 +51,27 @@ from pyspark.sql.datasource import (
 )
 
 from vcf2db_spark.sources.header import (
+    GT_COLUMNS,
     VCFHeader,
     build_schema,
     clean,
+    info_fields,
     parse_header,
     read_header_text,
 )
 
 MISSING_INT = -1  # cyvcf2's missing-depth/qual sentinel
 _MAX_POS = 1 << 29  # tabix coordinate ceiling
+
+#: how both builders tell the user to decompose: a multi-allelic record
+#: under decompose='reject', a multi-value Number=1/A INFO value
+_SPLIT_HINT = (
+    "input must be decomposed — run `vt decompose` first, or read with decompose='split'."
+)
+_DECOMPOSED_HINT = (
+    "input must be decomposed (one ALT per record) — "
+    "run `vt decompose` / `bcftools norm -m-` first."
+)
 
 
 @dataclass
@@ -61,10 +83,6 @@ class ContigPartition(InputPartition):
     #: residual locus window [beg, end) applied during the seek-read
     beg: int = 0
     end: int = _MAX_POS
-
-
-def _open(path: str):
-    return gzip.open(path, "rt") if path.endswith(".gz") else open(path, "rt")
 
 
 def _header_text(path: str) -> str:
@@ -109,8 +127,7 @@ def _parse_info(raw: str, header: VCFHeader) -> dict[str, object]:
             if val is not None and "," in val:
                 raise ValueError(
                     f"INFO field {key} (Number={fd.number}) has multiple values "
-                    f"({val!r}); input must be decomposed (one ALT per record) — "
-                    "run `vt decompose` / `bcftools norm -m-` first."
+                    f"({val!r}); {_DECOMPOSED_HINT}"
                 )
             out[key] = _typed_scalar(val, fd.type) if val is not None else None
     return out
@@ -270,9 +287,7 @@ def _row_builder(header: VCFHeader, schema: T.StructType, decompose: str = "reje
             return [build_one(parts)]
         if decompose != "split":
             raise ValueError(
-                f"multi-allelic record at {parts[0]}:{parts[1]} (ALT={alt!r}); "
-                "input must be decomposed — run `vt decompose` first, or "
-                "read with decompose='split'."
+                f"multi-allelic record at {parts[0]}:{parts[1]} (ALT={alt!r}); {_SPLIT_HINT}"
             )
         alts = alt.split(",")
         return [
@@ -283,24 +298,226 @@ def _row_builder(header: VCFHeader, schema: T.StructType, decompose: str = "reje
     return build
 
 
-def _iter_records(
-    path: str,
+# ---------------------------------------------------------------------------
+# JVM builder: the same rows as ``_row_builder``, as Spark expressions
+# ---------------------------------------------------------------------------
+
+
+def _q(text: str) -> str:
+    """A Spark SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_format(template: str) -> str:
+    """SQL ``concat`` of ``template`` with each ``{expr}`` replaced by that
+    SQL expression's value."""
+    pieces = re.split(r"\{([^{}]*)\}", template)
+    return "concat(" + ", ".join(p if i % 2 else _q(p) for i, p in enumerate(pieces)) + ")"
+
+
+def _int_or_missing(val: str) -> str:
+    """A FORMAT integer: absent, '.' or '' → the -1 sentinel."""
+    return (
+        f"CASE WHEN {val} IS NULL OR {val} IN ('.', '') THEN {MISSING_INT} "
+        f"ELSE CAST({val} AS INT) END"
+    )
+
+
+def _last_index(key: str) -> str:
+    """0-based index of the LAST ``key`` in FORMAT (``dict(zip(...))``
+    keeps the last duplicate), -1 when absent."""
+    hit = f"array_position(reverse(_fmt), {_q(key)})"
+    return f"size(_fmt) - coalesce(nullif({hit}, 0), size(_fmt) + 1)"
+
+
+def vcf_columns(
+    lines: DataFrame,
     header: VCFHeader,
-    schema: T.StructType,
-    contig: str | None,
+    black_list: tuple[str, ...] = (),
+    include_genotypes: bool = True,
     decompose: str = "reject",
-):
-    """Filtered full scan (plain text / plain gzip, or no index): each
-    partition streams the file and keeps only its contig."""
-    build = _row_builder(header, schema, decompose)
-    with _open(path) as fh:
-        for line in fh:
-            if line.startswith("#"):
-                continue
-            parts = line.rstrip("\n").split("\t")
-            if contig is not None and parts[0] != contig:
-                continue
-            yield from build(parts)
+) -> DataFrame:
+    """Parse a frame of VCF text lines (one ``value`` column, as
+    ``spark.read.text`` / ``readStream.text`` give it) into the variants
+    schema, ``build_schema(header, black_list, include_genotypes)``
+    exactly, nullability included.
+
+    The expressions follow ``_row_builder`` rule for rule: a duplicate
+    INFO or FORMAT key keeps its last value, a sample shorter than FORMAT
+    is cut short, an INFO value is everything after the first '=', an
+    absent Flag is NULL. Header and empty lines are skipped. A
+    multi-allelic record under ``decompose='reject'``, a multi-value
+    Number=1/A INFO field and a malformed line raise (``raise_error``)
+    with the Python builder's texts, whichever columns a query keeps.
+    ``decompose='split'`` is a ``posexplode`` over ALT that slices
+    Number=A/R values and drops Number=G ones, as ``_decompose_parts``
+    does. The expressions are SQL text: one call into the JVM per column
+    rather than one per function."""
+    split = decompose.lower() == "split"
+    schema = build_schema(header, black_list=black_list, include_genotypes=include_genotypes)
+    infos = info_fields(header, black_list)
+    has_gts = "gts" in schema.fieldNames()
+
+    # Header and empty lines become NULL rather than being filtered out
+    # first: Spark merges a query's pushed-down predicates into the same
+    # filter and may evaluate their casts before this one, and a cast of
+    # "POS" would raise.
+    parts = lines.selectExpr(
+        r"split(CASE WHEN value <> '' AND NOT startswith(value, '#') THEN value END, '\t') AS _p"
+    )
+    parsed = parts.selectExpr(
+        "_p IS NOT NULL AS _record",
+        "size(_p) AS _ncols",
+        "get(_p, 0) AS _chrom",
+        "get(_p, 1) AS _pos",
+        "get(_p, 3) AS _ref",
+        "get(_p, 4) AS _alts",
+        "size(split(get(_p, 4), ',')) AS _nalts",
+        "get(_p, 5) AS _qual",
+        "get(_p, 6) AS _filter",
+        # [key, value] per INFO item: the value is everything after the
+        # first '=', NULL for a bare key
+        "transform(split(get(_p, 7), ';'), x -> split(x, '=', 2)) AS _info",
+        "CASE WHEN size(_p) > 8 THEN split(get(_p, 8), ':') "
+        "ELSE CAST(array() AS ARRAY<STRING>) END AS _fmt",
+        "transform(slice(_p, 10, size(_p)), x -> split(x, ':')) AS _samples",
+    )
+    # a record is rewritten per alt only when it has several
+    multi = "_nalts > 1" if split else "false"
+    where = "{concat_ws(':', _chrom, _pos)}"
+    checks = [
+        ("_ncols < 8", f"malformed VCF record (fewer than 8 columns) at {where}"),
+        ("try_cast(_pos AS BIGINT) IS NULL", f"malformed VCF POS at {where}"),
+    ]
+    if not split:
+        checks.append((
+            "_nalts > 1", "multi-allelic record at {_chrom}:{_pos} (ALT='{_alts}'); " + _SPLIT_HINT
+        ))
+    scalars = [(fid, fd) for fid, fd in infos if fd.type != "Flag" and not fd.is_list]
+    if scalars:
+        # a comma in a Number=1/A value (after the per-alt slice, in split
+        # mode) is a record the builder rejects
+        def ids(defs):
+            return ", ".join(_q(fid) for fid, _fd in defs) or "NULL"
+
+        sliced_a = [(fid, fd) for fid, fd in scalars if split and fd.number == "A"]
+        others = [(fid, fd) for fid, fd in scalars if not (split and fd.number == "A")]
+        bad = (
+            f"e -> instr(get(e, 1), ',') > 0 AND (e[0] IN ({ids(others)}) OR "
+            f"(e[0] IN ({ids(sliced_a)}) AND "
+            f"NOT ({multi} AND size(split(get(e, 1), ',')) = _nalts)))"
+        )
+        first = f"filter(_info, {bad})[0]"
+        numbers = "map(" + ", ".join(f"{_q(fid)}, {_q(fd.number)}" for fid, fd in scalars) + ")"
+        checks.append((
+            f"exists(_info, {bad})",
+            f"INFO field {{{first}[0]}} (Number={{try_element_at({numbers}, {first}[0])}}) "
+            f"has multiple values ('{{get({first}, 1)}}'); " + _DECOMPOSED_HINT,
+        ))
+    guard = "CASE WHEN NOT _record THEN false " + " ".join(
+        f"WHEN {cond} THEN raise_error({_sql_format(msg)})" for cond, msg in checks
+    ) + " ELSE true END"
+    parsed = parsed.filter(F.expr(guard))
+
+    indices = [f"{_last_index(k)} AS _i{k}" for k in ("GT", "GQ", "DP", "AD")]
+    if split:
+        parsed = parsed.selectExpr(
+            "*", *indices, f"{multi} AS _multi", "posexplode(split(_alts, ',')) AS (_ai, _alt)"
+        )
+    else:
+        parsed = parsed.selectExpr("*", *indices, "false AS _multi", "0 AS _ai", "_alts AS _alt")
+
+    # stage 1: the string value of each INFO field (its last item), and
+    # the per-sample calls
+    stage1 = ["_chrom", "_pos", "_ref", "_alt", "_qual", "_filter", "_multi", "_nalts", "_ai"]
+    for i, (fid, fd) in enumerate(infos):
+        keep = f"e[0] = {_q(fid)}"
+        if split and fd.number == "G":
+            keep += " AND (NOT _multi OR get(e, 1) IS NULL)"  # dropped when split
+        items = f"filter(_info, e -> {keep})"
+        if fd.type == "Flag":
+            stage1.append(f"CASE WHEN size({items}) > 0 THEN true END AS _v{i}")
+        else:
+            stage1.append(f"get(try_element_at({items}, -1), 1) AS _v{i}")
+    if has_gts:
+        # vt decompose -s on a split record: allele 0 → 0, this alt → 1,
+        # any other alt → '.'
+        allele = (
+            "t -> CASE WHEN t IN ('.', '') THEN NULL WHEN NOT _multi THEN CAST(t AS INT) "
+            "WHEN CAST(t AS INT) = 0 THEN 0 WHEN CAST(t AS INT) = _ai + 1 THEN 1 END"
+        )
+        sample = (
+            "s -> named_struct("
+            "'gt', coalesce(get(s, _iGT), './.'), "
+            "'a', transform(split(translate(coalesce(get(s, _iGT), './.'), '|', '/'), '/'), "
+            f"{allele}), "
+            "'gq', get(s, _iGQ), 'dp', get(s, _iDP), 'ad', split(get(s, _iAD), ','))"
+        )
+        bases = (
+            "transform(c.a, x -> CASE WHEN x IS NULL THEN '.' WHEN x = 0 THEN _ref ELSE _alt END)"
+        )
+        alt_slot = "CASE WHEN _multi AND size(c.ad) = _nalts + 1 THEN _ai + 1 ELSE 1 END"
+        call = (
+            "c -> named_struct("
+            f"'gts', CASE WHEN instr(c.gt, '|') > 0 THEN array_join({bases}, '|') "
+            f"ELSE array_join({bases}, '/') END, "
+            "'gt_types', CASE WHEN exists(c.a, x -> x IS NULL) THEN 2 "
+            "WHEN forall(c.a, x -> x = 0) THEN 0 WHEN forall(c.a, x -> x > 0) THEN 3 ELSE 1 END, "
+            "'gt_phases', instr(c.gt, '|') > 0, "
+            f"'gt_depths', {_int_or_missing('c.dp')}, "
+            f"'gt_ref_depths', CASE WHEN size(c.ad) >= 2 "
+            f"THEN {_int_or_missing('get(c.ad, 0)')} ELSE {MISSING_INT} END, "
+            f"'gt_alt_depths', CASE WHEN size(c.ad) >= 2 "
+            f"THEN {_int_or_missing(f'get(c.ad, {alt_slot})')} ELSE {MISSING_INT} END, "
+            f"'gt_quals', {_int_or_missing('c.gq')})"
+        )
+        stage1.append(f"transform(transform(_samples, {sample}), {call}) AS _calls")
+    stage1_df = parsed.selectExpr(*stage1)
+
+    # stage 2: the columns in schema order, typed by a cast to the
+    # schema's type ('.' → NULL first). The locus columns are non-nullable
+    # as in build_schema: the guard raised on any record their defaults
+    # could stand in for.
+    start = "CAST(_pos AS BIGINT) - 1"
+    out = [
+        "coalesce(_chrom, '')",
+        f"coalesce({start}, 0)",
+        f"coalesce({start} + length(_ref), 0)",
+        "coalesce(_ref, '')",
+        "coalesce(_alt, '')",
+        "CASE WHEN _qual IN ('.', '') THEN NULL ELSE _qual END",
+        "CASE WHEN _filter IN ('.', 'PASS') THEN NULL ELSE _filter END",
+    ]
+    for i, (fid, fd) in enumerate(infos):
+        val = f"_v{i}"
+        if fd.type == "Flag":
+            out.append(val)
+            continue
+        if split and fd.number == "A":
+            val = (
+                f"CASE WHEN _multi AND size(split({val}, ',')) = _nalts "
+                f"THEN get(split({val}, ','), _ai) ELSE {val} END"
+            )
+        elif split and fd.number == "R":
+            val = (
+                f"CASE WHEN _multi AND size(split({val}, ',')) = _nalts + 1 "
+                f"THEN concat(get(split({val}, ','), 0), ',', get(split({val}, ','), _ai + 1)) "
+                f"ELSE {val} END"
+            )
+        if fd.is_list:
+            out.append(
+                f"CASE WHEN {val} IS NULL OR {val} = '' THEN NULL "
+                f"ELSE transform(split({val}, ','), x -> nullif(x, '.')) END"
+            )
+        else:
+            out.append(f"nullif({val}, '.')")
+    out += [f"_calls.{name}" for name, _dt in GT_COLUMNS] if has_gts else []
+    return stage1_df.selectExpr(
+        *[
+            f"CAST({e} AS {f.dataType.simpleString()}) AS `{f.name}`"
+            for e, f in zip(out, schema.fields)
+        ]
+    )
 
 
 def _iter_chunks(
@@ -378,7 +595,6 @@ class VCFReader(DataSourceReader):
         self.header = parse_header(_header_text(self.path))
         split = opt("partitionByContig", "true").lower() == "true"
         self.decompose = opt("decompose", "reject").lower()
-        self.arrow = opt("arrowBatches", "true").lower() == "true"
         self.contigs = self.header.contigs if split else []
         #: target COMPRESSED bytes per partition for intra-contig splitting
         #: (VERDICT r5 item 5): a whole-genome single-contig VCF must not
@@ -388,6 +604,11 @@ class VCFReader(DataSourceReader):
         self.chrom_in: set[str] | None = None
         self.beg, self.end = 0, _MAX_POS
         self.index = self._load_index(options.get("index", "auto").lower())
+        if self.index is None and not self.is_bcf:
+            raise ValueError(
+                f"{self.path}: a text VCF without a .tbi/.csi index is parsed "
+                "by read_vcf's JVM builder, not this source"
+            )
 
     def _load_index(self, mode: str):
         """Index handling: ``auto`` uses ``{path}.tbi`` (text VCF) or
@@ -495,27 +716,19 @@ class VCFReader(DataSourceReader):
         return [ContigPartition(None)]
 
     def read(self, partition: ContigPartition):
+        """Columnar RecordBatches rather than per-row tuples: no per-row
+        pickle on the executor↔Python boundary."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         if self.is_bcf:
             rows = _iter_bcf(
                 self.path, self.header, self.schema_, partition, self.decompose
             )
-        elif partition.chunks is not None:
+        else:
             rows = _iter_chunks(
                 self.path, self.header, self.schema_, partition, self.decompose
             )
-        else:
-            rows = _iter_records(
-                self.path, self.header, self.schema_, partition.contig, self.decompose
-            )
-        if not self.arrow:
-            yield from rows
-            return
-        # Arrow fast path: hand Spark columnar RecordBatches instead of
-        # per-row tuples — skips per-row pickling and row→columnar
-        # conversion on the JVM side.
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         arrow_schema = to_arrow_schema(self.schema_)
         buf: list[tuple] = []
         for row in rows:
@@ -543,8 +756,10 @@ class VCFDataSource(DataSource):
     Options: ``black_list`` (comma-separated INFO IDs to drop — the
     reference's ``--black-list`` [U vcf2db.py §main ~L1150]);
     ``partitionByContig`` (default true); ``include_genotypes``
-    (default true); ``index`` (``auto`` = use ``{path}.tbi`` when present,
-    ``build`` = create it if missing, ``none`` = filtered scans only)."""
+    (default true); ``index`` (``auto`` = use ``{path}.tbi``/``.csi``
+    when present, ``build`` = create it if missing, ``none`` = filtered
+    scans only, BCF only). ``read_vcf`` picks this source for BCF and for
+    indexed BGZF only."""
 
     @classmethod
     def name(cls) -> str:
@@ -560,31 +775,68 @@ class VCFDataSource(DataSource):
         return VCFReader(schema, dict(self.options))
 
 
+def _uses_source(path: str, index: str) -> bool:
+    """True for the inputs the Python DataSource reads: BCF, and BGZF
+    with (or, under ``index='build'``, to be given) a ``.tbi``/``.csi``."""
+    from vcf2db_spark.sources.bcf import is_bcf
+    from vcf2db_spark.sources.bgzf import is_bgzf
+
+    if is_bcf(path):
+        return True
+    if index == "none" or not path.endswith(".gz") or not is_bgzf(path):
+        return False
+    return index == "build" or any(os.path.exists(path + ext) for ext in (".tbi", ".csi"))
+
+
+def _text_lines(
+    spark: SparkSession, path: str, header: VCFHeader, partition_by_contig: bool
+) -> DataFrame:
+    """The file's lines; with ``partition_by_contig``, hash-partitioned
+    by their first field into one partition per header contig, the
+    partition count the source gives. The shuffle lets a gzip file,
+    which Spark reads in one task, be parsed on every core."""
+    lines = spark.read.text(path)
+    if not partition_by_contig or not header.contigs:
+        return lines
+    return lines.repartition(len(header.contigs), F.substring_index("value", "\t", 1))
+
+
 def read_vcf(
     spark: SparkSession,
     path: str,
     black_list: tuple[str, ...] = (),
     include_genotypes: bool = True,
     partition_by_contig: bool = True,
-    arrow_batches: bool = True,
     index: str = "auto",
     decompose: str = "reject",
     target_partition_bytes: int | None = None,
 ) -> DataFrame:
     """Library entry point (reference entry point 2, [U §VCFDB.__init__ ~L580]).
 
+    Plain text, plain gzip and BGZF with no index (or ``index='none'``)
+    are parsed by the JVM builder (``vcf_columns``): a cold read then
+    starts no Python worker. BCF, and BGZF with a ``.tbi``/``.csi`` index
+    (or ``index='build'``, which writes one), go through
+    ``VCFDataSource``: its seek partitions inflate only their own blocks,
+    in parallel, and prune on pushed-down locus predicates, which a
+    whole-file gzip text scan cannot. ``target_partition_bytes`` sizes
+    the seek partitions; ``partition_by_contig`` gives either path one
+    partition (or, with an index, more) per header contig.
+
     ``decompose='split'`` decomposes multi-allelic records in-engine
     (vt decompose -s semantics: per-alt INFO A/R slicing, GT allele
     remap with other-alt→'.', AD subsetting, Number=G dropped) — the
     preprocessing step the reference requires users to run externally.
-    The default ``'reject'`` preserves the reference's precondition.
-
-    ``arrow_batches`` hands Spark columnar RecordBatches instead of
-    per-row tuples. Measured locally the two are within noise (the Python
-    line-parse dominates, ~220k variants/sec/32 threads warm); the Arrow
-    shape is kept because it removes the per-row pickle on the
-    executor↔Python boundary, which matters once the parse itself is
-    cheaper (bgzip block readers, tabix seeks)."""
+    The default ``'reject'`` preserves the reference's precondition."""
+    if not _uses_source(path, index):
+        header = parse_header(read_header_text(path))
+        return vcf_columns(
+            _text_lines(spark, path, header, partition_by_contig),
+            header,
+            black_list=black_list,
+            include_genotypes=include_genotypes,
+            decompose=decompose,
+        )
     if target_partition_bytes is None:
         # Adaptive split target: the Python decode (not IO) is the scan
         # bottleneck, so a small-but-expensive file should fan out across
@@ -613,7 +865,6 @@ def read_vcf(
         .option("black_list", ",".join(black_list))
         .option("include_genotypes", str(include_genotypes).lower())
         .option("partitionByContig", str(partition_by_contig).lower())
-        .option("arrowBatches", str(arrow_batches).lower())
         .option("index", index)
         .option("decompose", decompose)
         .option("targetPartitionBytes", str(target_partition_bytes))

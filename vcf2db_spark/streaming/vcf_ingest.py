@@ -15,8 +15,9 @@ Preconditions (documented, asserted where cheap):
   the batch path).
 
 Scale: the file source lists incrementally (no re-scan of processed
-files); parse is Arrow-batched ``mapInPandas`` per shard-split, so
-throughput matches the batch reader (~220k variants/sec/32 threads warm).
+files); each micro-batch is parsed by the batch reader's JVM builder
+(``sources.vcf.vcf_columns``), so text VCF has one parse semantics across
+batch and stream and no Python worker runs.
 ``variant_id`` is deliberately absent in stream mode — a global ordinal
 needs a total order over an unbounded stream; consumers key on
 (chrom, start, ref, alt) or assign ids in a batch compaction pass
@@ -25,15 +26,11 @@ needs a total order over an unbounded stream; consumers key on
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 
 from vcf2db_spark.operators.variants import with_genotype_stats, with_variant_type
-from vcf2db_spark.sources.header import build_schema, parse_header, read_header_text
-from vcf2db_spark.sources.vcf import _row_builder
+from vcf2db_spark.sources.header import parse_header, read_header_text
+from vcf2db_spark.sources.vcf import vcf_columns
 
 
 def read_vcf_stream(
@@ -49,29 +46,16 @@ def read_vcf_stream(
     arriving under ``watch_dir`` (plain ``.vcf``; header lines in shards
     are skipped — the binding header comes from ``header_path``)."""
     header = parse_header(read_header_text(header_path))
-    schema = build_schema(
-        header,
-        black_list=black_list,
-        include_genotypes=include_genotypes and bool(header.samples),
-    )
-    build = _row_builder(header, schema, decompose)
-    names = schema.fieldNames()
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                row
-                for line in pdf["value"]
-                if line and not line.startswith("#")
-                for row in build(line.rstrip("\n").split("\t"))
-            ]
-            yield pd.DataFrame(rows, columns=names)
-
     reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    lines = reader.text(watch_dir)
-    return lines.mapInPandas(parse, schema)
+    return vcf_columns(
+        reader.text(watch_dir),
+        header,
+        black_list=black_list,
+        include_genotypes=include_genotypes,
+        decompose=decompose,
+    )
 
 
 def stream_load_vcf(
