@@ -59,6 +59,21 @@ def test_bcf_rows_identical_to_text(spark, paths):
     assert _rows(read_vcf(spark, vcf)) == _rows(read_vcf(spark, bcf))
 
 
+def test_load_vcf_reads_bcf(spark, paths):
+    """``load_vcf`` (and so the CLI) takes a BCF: the header is read
+    from the binary container, and the ``variants`` rows equal those of
+    the text twin, ``variant_id`` included."""
+    from vcf2db_spark.pipeline import load_vcf
+
+    vcf, bcf = paths
+    got = {}
+    for path in (vcf, bcf):
+        tables = load_vcf(spark, path)
+        got[path] = _rows(tables.variants)
+        tables.cached.unpersist()
+    assert len(got[vcf]) == 6 and got[bcf] == got[vcf]
+
+
 def test_bcf_magic_and_framing(paths):
     """Spec-level container bytes: BGZF-wrapped magic + l_text + header
     text, then l_shared/l_indiv framed records whose shared prefix
@@ -114,13 +129,10 @@ def test_bcf_contig_scan_and_gt_decode(paths):
 def test_csi_partition_pruning(spark, paths):
     """Pushed-down chrom/locus predicates prune PARTITIONS through the
     CSI (not just rows through the residual filter)."""
-    from vcf2db_spark.sources.header import build_schema, parse_header
-    from vcf2db_spark.sources.vcf import VCFReader, _header_text
+    from vcf2db_spark.sources.vcf import VCFReader
 
     _, bcf = paths
-    header = parse_header(_header_text(bcf))
-    schema = build_schema(header)
-    reader = VCFReader(schema, {"path": bcf})
+    reader = VCFReader({"path": bcf})
     assert reader.is_bcf and reader.index is not None
     assert len(reader.partitions()) == 2  # one per contig
     reader.chrom_in = {"chr2"}
@@ -128,7 +140,7 @@ def test_csi_partition_pruning(spark, paths):
     assert len(parts) == 1 and parts[0].contig == "chr2"
     # locus window inside chr1: the other contig is gone and the chunk
     # read applies the [beg, end) residual
-    reader2 = VCFReader(schema, {"path": bcf})
+    reader2 = VCFReader({"path": bcf})
     reader2.chrom_in, reader2.beg, reader2.end = {"chr1"}, 250, 350
     rows = [
         tuple(p[:2])

@@ -206,6 +206,28 @@ def test_pushdown_prunes_partitions(spark, vcf_paths):
     assert rows == want and 0 < len(rows) < N_PER_CONTIG
 
 
+@pytest.mark.parametrize("container", ["bgzf", "bcf"])
+def test_pushdown_plans_one_partition(spark, vcf_paths, tmp_path, container):
+    """A locus predicate on the parsed frame still reaches the source's
+    pushFilters through the parser: the chr2 region plans 1 of the 2
+    contig partitions, in either indexed container. The same region with
+    ``chrom`` behind an expression cannot be pushed, so it plans both."""
+    from vcf2db_spark.sources.bcf import write_bcf
+
+    plain, path = vcf_paths
+    if container == "bcf":
+        path = str(tmp_path / "cohort.bcf")
+        write_bcf(plain, path, index_path=path + ".csi")
+    region = "{} = 'chr2' AND start >= 300000 AND start < 900000"
+    df = read_vcf(spark, path)
+    assert df.rdd.getNumPartitions() == 2
+    pruned = df.filter(region.format("chrom"))
+    control = df.filter(region.format("concat(chrom, '')"))
+    assert pruned.rdd.getNumPartitions() == 1
+    assert control.rdd.getNumPartitions() == 2
+    assert _collect_sorted(pruned) == _collect_sorted(control)
+
+
 def test_pushdown_empty_region(spark, vcf_paths):
     _, gz = vcf_paths
     assert read_vcf(spark, gz).filter("chrom = 'chrM'").count() == 0
@@ -265,3 +287,31 @@ def test_intra_contig_split_with_pushdown(spark, vcf_paths):
         read_vcf(spark, gz, target_partition_bytes=2048).filter(pred)
     )
     assert got == want and len(got) > 0
+
+
+def test_load_vcf_keeps_adaptive_split(spark, tmp_path, monkeypatch):
+    """``load_vcf`` reads an indexed BGZF with ``read_vcf``'s adaptive
+    partition size (``fsize // (2 · cores)``, at least 256 KB), not one
+    task per contig: a ~1 MB file over 2 contigs splits further."""
+    import os
+
+    from vcf2db_spark import pipeline
+
+    plain = str(tmp_path / "wide.vcf")
+    open(plain, "w").write(_mk_vcf_text(75000, seed=7))
+    gz = plain + ".gz"
+    compress_file(plain, gz)
+    index_vcf(gz)
+    assert os.path.getsize(gz) > 1_000_000
+    reads = []
+
+    def recording_read_vcf(*args, **kwargs):
+        reads.append(read_vcf(*args, **kwargs))
+        return reads[-1]
+
+    monkeypatch.setattr(pipeline, "read_vcf", recording_read_vcf)
+    tables = pipeline.load_vcf(spark, gz)
+    tables.cached.unpersist()
+    assert tables.variants.count() == 150000
+    (raw,) = reads
+    assert raw.rdd.getNumPartitions() == read_vcf(spark, gz).rdd.getNumPartitions() > 2

@@ -156,6 +156,44 @@ def test_contig_partitions(spark, fixture_paths):
     assert df.rdd.getNumPartitions() == 2  # one per header contig
 
 
+def test_contig_partitions_capped_by_shuffle_partitions(spark, tmp_path):
+    """A GRCh38 header with alt, decoy and HLA contigs declares 3,366
+    contigs: the lines shuffle into at most spark.sql.shuffle.partitions
+    partitions, each contig still in one, with the rows of an
+    unpartitioned read."""
+    from pyspark.sql import functions as F
+
+    from vcf2db_spark.sources.vcf import read_vcf
+
+    contigs = [f"chr{i}" for i in range(1, 23)] + [f"chrUn_{i:04d}" for i in range(3344)]
+    lines = ["##fileformat=VCFv4.2"]
+    lines += [f"##contig=<ID={c},length=1000000>" for c in contigs]
+    lines += [
+        '##INFO=<ID=DP,Number=1,Type=Integer,Description="depth">',
+        '##FORMAT=<ID=GT,Number=1,Type=String,Description="gt">',
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1",
+    ]
+    lines += [
+        f"{contigs[i % 40 * 80]}\t{100 + i}\t.\tA\tG\t5\tPASS\tDP={i}\tGT\t0/1"
+        for i in range(400)
+    ]
+    path = tmp_path / "grch38.vcf"
+    path.write_text("\n".join(lines) + "\n")
+    assert len(parse_header(path.read_text()).contigs) == 3366
+
+    df = read_vcf(spark, str(path))
+    assert df.rdd.getNumPartitions() <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+    per_contig = (
+        df.withColumn("pid", F.spark_partition_id())
+        .groupBy("chrom")
+        .agg(F.countDistinct("pid").alias("n"))
+    )
+    assert {r["n"] for r in per_contig.collect()} == {1}
+    whole = read_vcf(spark, str(path), partition_by_contig=False)
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, whole.collect()))
+    assert df.count() == 400
+
+
 # ---- A6/A7: impacts -------------------------------------------------------
 
 

@@ -1,12 +1,14 @@
-"""The two VCF builders give the same rows: the JVM column builder
-(``sources.vcf.vcf_columns``, which ``read_vcf`` and the stream use for
-text VCF) and the Python row builder (``_row_builder``, which the
-DataSource uses for BCF and indexed BGZF). Every fixture of
+"""One VCF record parser, checked against its Python oracle in every
+container. ``read_vcf`` types every record with the same Spark SQL
+builder (``sources.vcf.vcf_columns``); ``tests/vcf_row_oracle.py`` keeps
+the plain-Python statement of the same rules. Every fixture of
 test_vcf_edge_cases, test_decompose and test_vcf_stream, plus the edge
-cases below, is parsed by both; the rows must be equal value for value
-and the JVM frame's schema must equal ``build_schema``, nullability
-included. Records the Python builder rejects must fail the JVM read with
-the same message.
+cases below, is read as plain text, plain gzip and BGZF (lines from
+``spark.read.text``), as indexed BGZF and, where ``write_bcf`` can encode
+it, as BCF (lines from ``VCFDataSource``). Each read must equal the
+oracle row for row, with the schema ``build_schema`` gives, nullability
+included; records the oracle rejects must fail the read with the same
+message.
 """
 
 from __future__ import annotations
@@ -20,10 +22,12 @@ from tests import test_decompose, test_vcf_edge_cases
 from tests.fixtures import make_mini_vcf as mini
 from tests.test_bgzf_tabix import _mk_vcf_text
 from tests.test_vcf_stream import SHARD2
+from tests.vcf_row_oracle import _row_builder
+from vcf2db_spark.sources.bcf import iter_bcf_parts, write_bcf
 from vcf2db_spark.sources.bgzf import compress_file
 from vcf2db_spark.sources.header import build_schema, parse_header, read_header_text
 from vcf2db_spark.sources.tabix import index_vcf
-from vcf2db_spark.sources.vcf import _row_builder, read_vcf
+from vcf2db_spark.sources.vcf import read_vcf
 
 HEADER = """\
 ##fileformat=VCFv4.2
@@ -113,24 +117,62 @@ CASES = {
 }
 
 
-def python_rows(path: str, decompose: str) -> list[tuple]:
-    """The Python builder over the file's records, read as the
-    DataSource's text scan read them (universal newlines)."""
-    header = parse_header(read_header_text(path))
-    build = _row_builder(header, build_schema(header), decompose)
+#: BCF stores a sample shorter than FORMAT padded with missing values:
+#: an absent GT reads back as '.', which the text rule spells './.'
+BCF_LOSSY = {"new_short_sample"}
+
+#: the containers whose lines ``VCFDataSource`` reads
+SOURCE_CONTAINERS = ("indexed_bgzf", "bcf")
+
+
+def text_records(path: str) -> list[list[str]]:
+    """The file's records as tab-split fields (universal newlines)."""
     with open(path) as fh:
         return [
-            row
+            line.rstrip("\n").split("\t")
             for line in fh
             if line.strip("\n") and not line.startswith("#")
-            for row in build(line.rstrip("\n").split("\t"))
         ]
 
 
-def jvm_rows(spark, path: str, decompose: str) -> list[tuple]:
+def oracle(path: str, records: list[list[str]], decompose: str):
+    """The oracle's rows for ``records`` under ``path``'s header, or the
+    message it rejects them with."""
+    header = parse_header(read_header_text(path))
+    build = _row_builder(header, build_schema(header), decompose)
+    try:
+        return [row for parts in records for row in build(parts)], None
+    except ValueError as exc:
+        return None, str(exc)
+
+
+def containers(tmp_path, text: str) -> dict[str, str]:
+    """The fixture as every container ``read_vcf`` reads."""
+    plain = tmp_path / "case.vcf"
+    plain.write_text(text)
+    gz = tmp_path / "case.gzip.vcf.gz"
+    with open(plain, "rb") as src, gzip.open(gz, "wb") as dst:
+        shutil.copyfileobj(src, dst)
+    bgz = str(tmp_path / "case.vcf.gz")
+    compress_file(str(plain), bgz)
+    indexed = str(tmp_path / "indexed.vcf.gz")
+    shutil.copy(bgz, indexed)
+    index_vcf(indexed)
+    out = {"text": str(plain), "gzip": str(gz), "bgzf": bgz, "indexed_bgzf": indexed}
+    bcf = str(tmp_path / "case.bcf")
+    try:
+        write_bcf(str(plain), bcf)
+    except KeyError:  # an undeclared key has no slot in the BCF dictionary
+        return out
+    out["bcf"] = bcf
+    return out
+
+
+def read_rows(spark, container: str, path: str, decompose: str) -> list[tuple]:
     df = read_vcf(spark, path, decompose=decompose)
-    assert df.schema == build_schema(parse_header(read_header_text(path)))
-    assert "BatchScan" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.schema == build_schema(parse_header(read_header_text(path))), container
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert ("BatchScan vcf" in plan) == (container in SOURCE_CONTAINERS), container
     return [tuple(r) for r in df.collect()]
 
 
@@ -141,37 +183,33 @@ def same_rows(a: list[tuple], b: list[tuple]) -> bool:
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_jvm_builder_matches_python_builder(spark, tmp_path, case):
     header, body, decompose = CASES[case]
-    path = tmp_path / "case.vcf"
-    path.write_text(header + body)
-    try:
-        want = python_rows(str(path), decompose)
-    except ValueError as exc:
-        with pytest.raises(Exception) as got:
-            jvm_rows(spark, str(path), decompose)
-        assert str(exc) in str(got.value)
-        return
-    assert want, "fixture parsed to no rows"
-    assert same_rows(jvm_rows(spark, str(path), decompose), want)
+    paths = containers(tmp_path, header + body)
+    text = oracle(paths["text"], text_records(paths["text"]), decompose)
+    assert text[1] or text[0], "fixture parsed to no rows"
+    expected = dict.fromkeys(paths, text)
+    if "bcf" in paths:
+        # the oracle over the records the BCF holds: the text records,
+        # unless the container cannot represent them
+        expected["bcf"] = oracle(paths["bcf"], list(iter_bcf_parts(paths["bcf"])), decompose)
+        if case not in BCF_LOSSY:
+            (rows, error), (text_rows, text_error) = expected["bcf"], text
+            assert error == text_error and (error or same_rows(rows, text_rows))
+    for container, path in paths.items():
+        rows, error = expected[container]
+        if error:
+            with pytest.raises(Exception) as got:
+                read_rows(spark, container, path, decompose)
+            assert error in str(got.value), container
+        else:
+            assert same_rows(read_rows(spark, container, path, decompose), rows), container
 
 
 def test_plain_gzip_and_bgzf_parse_alike(spark, tmp_path):
-    """The test_bgzf_tabix fixture as plain text, plain gzip and BGZF
-    (JVM builder) and as indexed BGZF (the DataSource): one row set."""
-    plain = tmp_path / "c.vcf"
-    plain.write_text(_mk_vcf_text(300, seed=3))
-    gz = tmp_path / "c.gzip.vcf.gz"
-    with open(plain, "rb") as src, gzip.open(gz, "wb") as dst:
-        shutil.copyfileobj(src, dst)
-    bgz = str(tmp_path / "c.vcf.gz")
-    compress_file(str(plain), bgz)
-    indexed = str(tmp_path / "i.vcf.gz")
-    shutil.copy(bgz, indexed)
-    index_vcf(indexed)
-
-    want = python_rows(str(plain), "reject")
-    assert len(want) == 600
-    for path in (str(plain), str(gz), bgz):
-        assert same_rows(jvm_rows(spark, path, "reject"), want), path
-    src = read_vcf(spark, indexed)
-    assert "BatchScan vcf" in src._jdf.queryExecution().executedPlan().toString()
-    assert same_rows([tuple(r) for r in src.collect()], want)
+    """The test_bgzf_tabix fixture, multi-block, in every container:
+    one row set, the oracle's."""
+    paths = containers(tmp_path, _mk_vcf_text(300, seed=3))
+    want, error = oracle(paths["text"], text_records(paths["text"]), "reject")
+    assert error is None and len(want) == 600
+    assert set(paths) == {"text", "gzip", "bgzf", "indexed_bgzf", "bcf"}
+    for container, path in paths.items():
+        assert same_rows(read_rows(spark, container, path, "reject"), want), container

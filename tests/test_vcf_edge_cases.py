@@ -1,9 +1,9 @@
 """VCF parser edge-case robustness (sources/vcf.py): the messy inputs a
 real decomposed+annotated VCF contains — missing values, unknown INFO
 keys, haploid/phased genotypes, CRLF, flag-only INFO, multi-allelic
-rejection. Each case pins behavior the batch and streaming paths share
-(same JVM builder, ``vcf_columns``); ``tests/test_vcf_builders.py``
-checks every case against the Python row builder too."""
+rejection. Each case pins behavior every container and the streaming
+path share (one parser, ``vcf_columns``); ``tests/test_vcf_builders.py``
+checks every case in every container against the Python oracle too."""
 
 from __future__ import annotations
 

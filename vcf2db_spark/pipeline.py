@@ -58,17 +58,18 @@ def load_vcf(
     num_partitions: int | None = None,
     cache_parse: bool = False,
     decompose: str = "reject",
-    target_partition_bytes: int = 64 << 20,
 ) -> VCFTables:
     """Parse once, sort by locus into a persisted frame (``cached``), and
     return ``variants`` / ``variant_impacts`` as JVM projections over it.
 
-    ``cached`` is materialized before this returns (by variant_id's
-    offsets job) and stays until the caller calls
+    ``vcf_path`` is any container ``read_vcf`` reads: plain text, gzip,
+    BGZF with or without an index, or BCF; ``read_vcf`` picks the
+    partitioning. ``cached`` is materialized before this returns (by
+    variant_id's offsets job) and stays until the caller calls
     ``tables.cached.unpersist()``. ``cache_parse=True`` also persists the
-    parsed stream so variant_id's range sampling and the sort share ONE
-    Python-parse pass; that copy is freed before this returns, once the
-    sort is materialized."""
+    parsed frame so variant_id's range sampling and the sort share one
+    read and parse of the file; that copy is freed before this returns,
+    once the sort is materialized."""
     header = parse_header(read_header_text(vcf_path))
 
     raw = read_vcf(
@@ -77,7 +78,6 @@ def load_vcf(
         black_list=black_list,
         include_genotypes=include_genotypes and bool(header.samples),
         decompose=decompose,
-        target_partition_bytes=target_partition_bytes,
     )
     if cache_parse:
         raw = raw.persist()

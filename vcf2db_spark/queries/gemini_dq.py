@@ -264,7 +264,7 @@ def _build_engine(
         refalt=refalt,
     )
     # cache_parse: variants + impacts + the variant-id offsets job all
-    # share ONE Python-parse pass; released on the NEXT call (Lifecycle,
+    # share ONE read and parse of the VCF; released on the NEXT call (Lifecycle,
     # after the dir hold) or at interpreter exit
     t = load_vcf(spark, vcf, ped_path=ped, num_partitions=2, cache_parse=True)
     lc.hold_df(t.cached)

@@ -19,9 +19,12 @@ speaks the on-disk BCF2.2 format (hts-specs VCFv4.x §6 "BCF encoding"):
   END-OF-VECTOR sentinels.
 
 Decode strategy: each binary record is converted to the TEXT fields of
-the equivalent VCF line and fed to the SAME row builder the text source
-uses (sources/vcf.py ``_row_builder``) — one parsing semantics, two
-containers. Floats format through numpy's shortest float32 round-trip
+the equivalent VCF line (``BCFCodec.decode_record``). ``VCFDataSource``
+joins them back into the line, and the same parser that types text VCF
+(``sources.vcf.vcf_columns``) types it — one parsing semantics for every
+container. ``iter_bcf_parts`` is the full framed scan and
+``iter_bcf_chunk_parts`` the CSI-seek read of a partition's chunk
+ranges. Floats format through numpy's shortest float32 round-trip
 repr, so a value written as ``0.333`` reads back as ``0.333`` (htslib's
 ``bcftools view`` prints the same shortest form); sub-ULP float32
 precision is a property of the container, not this reader.
@@ -273,8 +276,8 @@ class BCFCodec:
     # ---- decode ----
 
     def decode_record(self, shared: bytes, indiv: bytes) -> list[str]:
-        """One binary record → the text ``parts`` list the row builder
-        consumes (CHROM..FORMAT + one field per sample)."""
+        """One binary record → the text fields of its VCF line
+        (CHROM..FORMAT + one field per sample)."""
         rid, pos, _rlen = struct.unpack_from("<iii", shared, 0)
         (qual_bits,) = struct.unpack_from("<I", shared, 12)
         (n_allele_info,) = struct.unpack_from("<I", shared, 16)
@@ -701,7 +704,7 @@ def iter_bcf_parts(path: str, contig: str | None = None):
 def iter_bcf_chunk_parts(path: str, chunks, beg: int, end: int):
     """CSI-seek decode: inflate only the partition's chunk ranges and
     yield records overlapping [beg, end) — the htslib region-query loop
-    over binary framing (the BCF twin of vcf.py ``_iter_chunks``)."""
+    over binary framing (the BCF twin of vcf.py ``_bgzf_records``)."""
     from vcf2db_spark.sources.bgzf import BGZFReader
 
     header_text = read_bcf_header_text(path)

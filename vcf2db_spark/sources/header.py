@@ -152,7 +152,12 @@ def parse_header(text: str) -> VCFHeader:
 
 
 def read_header_text(path: str) -> str:
-    """Read just the header block of a (possibly gzipped) VCF file."""
+    """Read just the header block of a VCF file: plain text, gzip/BGZF,
+    or BCF, which embeds the same header text."""
+    from vcf2db_spark.sources.bcf import is_bcf, read_bcf_header_text
+
+    if is_bcf(path):
+        return read_bcf_header_text(path)
     opener = gzip.open if path.endswith(".gz") else open
     lines: list[str] = []
     with opener(path, "rt") as fh:  # type: ignore[operator]

@@ -2,27 +2,33 @@
 
 Spark-first replacement for the reference's cyvcf2/htslib streaming loop
 [U vcf2db.py §VCFDB.load ~L640]. The schema comes from the VCF header
-(A2, ``header.build_schema``); the records take one of two paths.
+(A2, ``header.build_schema``). One function, ``vcf_columns``, turns VCF
+record lines into typed rows, whatever container the lines came from:
+Spark SQL over a frame with a ``value`` column, split on tab and typed by
+Spark expressions (INFO fields by their header type, per-sample
+GT/GQ/DP/AD through ``transform``, ``decompose='split'`` as a
+``posexplode`` over ALT). No Python worker types a record.
 
-**Plain text, plain gzip, and BGZF with no index: one JVM column
-builder** (``vcf_columns``). ``spark.read.text`` lines are split on tab
-and typed by Spark expressions: INFO fields by their header type,
-per-sample GT/GQ/DP/AD through ``transform``, and ``decompose='split'``
-as a ``posexplode`` over ALT. No Python worker runs, so a cold load pays
-no Python DataSource start-up (several seconds for the first one in a
-process). With ``partition_by_contig`` the lines are hash-partitioned
-by contig into one partition per header contig before the parse.
+The lines come from one of two places.
+
+**Plain text, plain gzip, and BGZF with no index:** ``spark.read.text``.
+With ``partition_by_contig`` the lines are hash-partitioned by contig
+before the parse, into one partition per header contig (at most
+``spark.sql.shuffle.partitions``).
 
 **BCF, and BGZF with a ``.tbi``/``.csi`` index: the Python DataSource**
-(``VCFDataSource``). Each partition is one (contig, index chunk range):
-it seeks to its virtual-offset range and inflates only those blocks
-(``sources.bgzf`` / ``sources.tabix`` / ``sources.csi``), so a
-multi-gigabyte file decompresses in parallel, and pushed-down
-``chrom``/``start``/``end`` predicates (``pushFilters``) prune partitions
-and narrow the chunk ranges — the distributed twin of a tabix region
-query. Records feed the Python row builder (``_row_builder``).
+(``VCFDataSource``), for what only Python code here can do. Each
+partition is one (contig, index chunk range): it seeks to its
+virtual-offset range and inflates only those blocks (``sources.bgzf`` /
+``sources.tabix`` / ``sources.csi``), so a multi-gigabyte file
+decompresses in parallel; BCF records are decoded back to their text
+fields (``sources.bcf``). Pushed-down ``chrom``/``start``/``end``
+predicates (``pushFilters``) prune partitions and narrow the chunk
+ranges — the distributed twin of a tabix region query. The source's rows
+are the record lines plus their locus (``LINE_SCHEMA``); ``vcf_columns``
+passes that locus through untouched, so Spark still pushes locus
+predicates on the parsed frame down to the source.
 
-Both builders give the same rows (``tests/test_vcf_builders.py``).
 Genotype matrices land as typed arrays; Parquet page compression
 replaces the reference's snappy blobs (A8) — the byte-parity codec lives
 in ``functions.codecs``.
@@ -54,7 +60,6 @@ from vcf2db_spark.sources.header import (
     GT_COLUMNS,
     VCFHeader,
     build_schema,
-    clean,
     info_fields,
     parse_header,
     read_header_text,
@@ -63,7 +68,7 @@ from vcf2db_spark.sources.header import (
 MISSING_INT = -1  # cyvcf2's missing-depth/qual sentinel
 _MAX_POS = 1 << 29  # tabix coordinate ceiling
 
-#: how both builders tell the user to decompose: a multi-allelic record
+#: how the parser tells the user to decompose: a multi-allelic record
 #: under decompose='reject', a multi-value Number=1/A INFO value
 _SPLIT_HINT = (
     "input must be decomposed — run `vt decompose` first, or read with decompose='split'."
@@ -72,6 +77,15 @@ _DECOMPOSED_HINT = (
     "input must be decomposed (one ALT per record) — "
     "run `vt decompose` / `bcftools norm -m-` first."
 )
+
+#: what ``VCFDataSource`` reads: each record line with its locus (0-based
+#: start, end = start + len(REF)) for pushdown
+LINE_SCHEMA = T.StructType([
+    T.StructField("chrom", T.StringType(), False),
+    T.StructField("start", T.LongType(), False),
+    T.StructField("end", T.LongType(), False),
+    T.StructField("value", T.StringType(), True),
+])
 
 
 @dataclass
@@ -83,224 +97,6 @@ class ContigPartition(InputPartition):
     #: residual locus window [beg, end) applied during the seek-read
     beg: int = 0
     end: int = _MAX_POS
-
-
-def _header_text(path: str) -> str:
-    """Header text for either container: BCF embeds the identical VCF
-    header text, so schema inference (A2) is container-agnostic."""
-    from vcf2db_spark.sources.bcf import is_bcf, read_bcf_header_text
-
-    if is_bcf(path):
-        return read_bcf_header_text(path)
-    return read_header_text(path)
-
-
-def _typed_scalar(val: str, vtype: str):
-    if val == ".":
-        return None
-    if vtype == "Integer":
-        return int(val)
-    if vtype == "Float":
-        return float(val)
-    return val
-
-
-def _parse_info(raw: str, header: VCFHeader) -> dict[str, object]:
-    out: dict[str, object] = {}
-    if raw == ".":
-        return out
-    for item in raw.split(";"):
-        if not item:
-            continue
-        if "=" in item:
-            key, val = item.split("=", 1)
-        else:
-            key, val = item, None
-        fd = header.infos.get(key)
-        if fd is None:
-            continue
-        if fd.type == "Flag":
-            out[key] = True
-        elif fd.is_list:
-            out[key] = [_typed_scalar(v, fd.type) for v in val.split(",")] if val else None
-        else:
-            if val is not None and "," in val:
-                raise ValueError(
-                    f"INFO field {key} (Number={fd.number}) has multiple values "
-                    f"({val!r}); {_DECOMPOSED_HINT}"
-                )
-            out[key] = _typed_scalar(val, fd.type) if val is not None else None
-    return out
-
-
-def _gt_type(alleles: list[int | None]) -> int:
-    """cyvcf2 coding: 0=hom_ref, 1=het, 2=unknown, 3=hom_alt.
-    Any missing allele (``./1``, ``./.``) → unknown, as cyvcf2 codes it."""
-    if any(a is None for a in alleles):
-        return 2
-    if all(a == 0 for a in alleles):
-        return 0
-    if all(a > 0 for a in alleles):
-        return 3
-    return 1
-
-
-def _parse_sample(
-    fmt_keys: list[str], raw: str, ref: str, alt: str
-) -> tuple[str, int, bool, int, int, int, int]:
-    """One sample's FORMAT blob → (gt_bases, gt_type, phased, depth,
-    ref_depth, alt_depth, qual)."""
-    vals = raw.split(":")
-    d = dict(zip(fmt_keys, vals))
-    gt_raw = d.get("GT", "./.")
-    phased = "|" in gt_raw
-    sep = "|" if phased else "/"
-    alleles: list[int | None] = []
-    for tok in gt_raw.replace("|", "/").split("/"):
-        alleles.append(None if tok in (".", "") else int(tok))
-    allele_bases = {0: ref, 1: alt}
-    bases = sep.join("." if a is None else allele_bases.get(a, alt) for a in alleles)
-    gq = d.get("GQ", ".")
-    dp = d.get("DP", ".")
-    ad = d.get("AD", ".")
-    ref_d = alt_d = MISSING_INT
-    if ad not in (".", "") and "," in ad:
-        parts = ad.split(",")
-        if parts[0] not in (".", ""):
-            ref_d = int(parts[0])
-        if parts[1] not in (".", ""):
-            alt_d = int(parts[1])
-    return (
-        bases,
-        _gt_type(alleles),
-        phased,
-        int(dp) if dp not in (".", "") else MISSING_INT,
-        ref_d,
-        alt_d,
-        int(gq) if gq not in (".", "") else MISSING_INT,
-    )
-
-
-def _decompose_sample(fmt_keys: list[str], raw: str, ai: int, n_alts: int) -> str:
-    """Per-sample FORMAT rewrite for alt index ``ai`` (vt decompose -s
-    semantics): GT alleles map 0→0, (ai+1)→1, any other alt→'.';
-    Number=R fields (AD) subset to [ref, alt_ai]."""
-    vals = raw.split(":")
-    for idx, key in enumerate(fmt_keys):
-        if idx >= len(vals):
-            break
-        if key == "GT":
-            gt = vals[idx]
-            sep = "|" if "|" in gt else "/"
-            toks = []
-            for t in gt.replace("|", "/").split("/"):
-                if t in (".", ""):
-                    toks.append(".")
-                else:
-                    a = int(t)
-                    toks.append("0" if a == 0 else ("1" if a == ai + 1 else "."))
-            vals[idx] = sep.join(toks)
-        elif key == "AD":
-            ad = vals[idx]
-            if ad not in (".", "") and "," in ad:
-                advals = ad.split(",")
-                if len(advals) == n_alts + 1:
-                    vals[idx] = f"{advals[0]},{advals[ai + 1]}"
-    return ":".join(vals)
-
-
-def _decompose_parts(
-    parts: list[str], header: VCFHeader, ai: int, alt_i: str, n_alts: int
-) -> list[str]:
-    """One multi-allelic record → the single-alt record for alt index
-    ``ai``: INFO Number=A picks slot ai, Number=R keeps [ref, alt_ai],
-    Number=G (genotype-likelihood shaped) is dropped — the reference punts
-    on G entirely (SURVEY §7 hard-part 4); everything else passes through."""
-    new = list(parts)
-    new[4] = alt_i
-    if parts[7] != ".":
-        out_items = []
-        for item in parts[7].split(";"):
-            if "=" not in item:
-                out_items.append(item)
-                continue
-            key, val = item.split("=", 1)
-            fd = header.infos.get(key)
-            if fd is None:
-                out_items.append(item)
-                continue
-            vals = val.split(",")
-            if fd.number == "A" and len(vals) == n_alts:
-                out_items.append(f"{key}={vals[ai]}")
-            elif fd.number == "R" and len(vals) == n_alts + 1:
-                out_items.append(f"{key}={vals[0]},{vals[ai + 1]}")
-            elif fd.number == "G":
-                continue
-            else:
-                out_items.append(item)
-        new[7] = ";".join(out_items) if out_items else "."
-    if len(parts) > 8:
-        fmt_keys = parts[8].split(":")
-        for si in range(9, len(parts)):
-            new[si] = _decompose_sample(fmt_keys, parts[si], ai, n_alts)
-    return new
-
-
-def _row_builder(header: VCFHeader, schema: T.StructType, decompose: str = "reject"):
-    """Compile the per-line transform once per partition: tab-split parts →
-    LIST of schema-ordered tuples (one per alt under ``decompose='split'``;
-    multi-allelic input raises under the default ``'reject'``, preserving
-    the reference's `vt decompose` precondition)."""
-    info_fields = [
-        (f.name, fid)
-        for fid, f in (
-            (fid, T.StructField(clean(fid), fd.spark_type())) for fid, fd in header.infos.items()
-        )
-        if f.name in schema.fieldNames()
-    ]
-    has_gts = "gts" in schema.fieldNames()
-
-    def build_one(parts: list[str]) -> tuple:
-        chrom, pos, _vid, ref, alt, qual, filt, info_raw = parts[:8]
-        info = _parse_info(info_raw, header)
-        row: list[object] = [
-            chrom,
-            int(pos) - 1,  # 0-based start, as in the reference's schema
-            int(pos) - 1 + len(ref),
-            ref,
-            alt,
-            float(qual) if qual not in (".", "") else None,
-            None if filt in (".", "PASS") else filt,
-        ]
-        for _col_name, fid in info_fields:
-            row.append(info.get(fid))
-        if has_gts:
-            fmt_keys = parts[8].split(":") if len(parts) > 8 else []
-            samples = [_parse_sample(fmt_keys, raw, ref, alt) for raw in parts[9:]]
-            for i in range(7):
-                row.append([s[i] for s in samples])
-        return tuple(row)
-
-    def build(parts: list[str]) -> list[tuple]:
-        alt = parts[4]
-        if "," not in alt:
-            return [build_one(parts)]
-        if decompose != "split":
-            raise ValueError(
-                f"multi-allelic record at {parts[0]}:{parts[1]} (ALT={alt!r}); {_SPLIT_HINT}"
-            )
-        alts = alt.split(",")
-        return [
-            build_one(_decompose_parts(parts, header, ai, alt_i, len(alts)))
-            for ai, alt_i in enumerate(alts)
-        ]
-
-    return build
-
-
-# ---------------------------------------------------------------------------
-# JVM builder: the same rows as ``_row_builder``, as Spark expressions
-# ---------------------------------------------------------------------------
 
 
 def _q(text: str) -> str:
@@ -337,35 +133,46 @@ def vcf_columns(
     include_genotypes: bool = True,
     decompose: str = "reject",
 ) -> DataFrame:
-    """Parse a frame of VCF text lines (one ``value`` column, as
-    ``spark.read.text`` / ``readStream.text`` give it) into the variants
-    schema, ``build_schema(header, black_list, include_genotypes)``
-    exactly, nullability included.
+    """Parse a frame of VCF text lines into the variants schema,
+    ``build_schema(header, black_list, include_genotypes)`` exactly,
+    nullability included. This is the package's one VCF record parser.
 
-    The expressions follow ``_row_builder`` rule for rule: a duplicate
-    INFO or FORMAT key keeps its last value, a sample shorter than FORMAT
-    is cut short, an INFO value is everything after the first '=', an
-    absent Flag is NULL. Header and empty lines are skipped. A
-    multi-allelic record under ``decompose='reject'``, a multi-value
-    Number=1/A INFO field and a malformed line raise (``raise_error``)
-    with the Python builder's texts, whichever columns a query keeps.
+    ``lines`` has a ``value`` column, as ``spark.read.text`` /
+    ``readStream.text`` give it, or ``VCFDataSource``'s four columns
+    (``LINE_SCHEMA``). In the second case the output's ``chrom``,
+    ``start`` and ``end`` are the source's own columns, unchanged, so
+    Catalyst pushes predicates on them through the parse into
+    ``pushFilters``.
+
+    The rules: a duplicate INFO or FORMAT key keeps its last value, a
+    sample shorter than FORMAT is cut short, an INFO value is everything
+    after the first '=', an absent Flag is NULL. Header and empty lines
+    are skipped. A multi-allelic record under ``decompose='reject'``, a
+    multi-value Number=1/A INFO field and a malformed line raise
+    (``raise_error``), whichever columns a query keeps.
     ``decompose='split'`` is a ``posexplode`` over ALT that slices
-    Number=A/R values and drops Number=G ones, as ``_decompose_parts``
-    does. The expressions are SQL text: one call into the JVM per column
-    rather than one per function."""
+    Number=A/R values and drops Number=G ones (vt decompose -s). The
+    plain-Python statement of the same rules is kept as the test oracle
+    (``tests/vcf_row_oracle.py``). The expressions are SQL text: one call
+    into the JVM per column rather than one per function."""
     split = decompose.lower() == "split"
     schema = build_schema(header, black_list=black_list, include_genotypes=include_genotypes)
     infos = info_fields(header, black_list)
     has_gts = "gts" in schema.fieldNames()
+    # the source's locus columns, carried through every stage as-is
+    has_locus = {"chrom", "start", "end"} <= set(lines.columns)
+    locus = ["`chrom`", "`start`", "`end`"] if has_locus else []
 
     # Header and empty lines become NULL rather than being filtered out
     # first: Spark merges a query's pushed-down predicates into the same
     # filter and may evaluate their casts before this one, and a cast of
     # "POS" would raise.
     parts = lines.selectExpr(
+        *locus,
         r"split(CASE WHEN value <> '' AND NOT startswith(value, '#') THEN value END, '\t') AS _p"
     )
     parsed = parts.selectExpr(
+        *locus,
         "_p IS NOT NULL AS _record",
         "size(_p) AS _ncols",
         "get(_p, 0) AS _chrom",
@@ -396,7 +203,7 @@ def vcf_columns(
     scalars = [(fid, fd) for fid, fd in infos if fd.type != "Flag" and not fd.is_list]
     if scalars:
         # a comma in a Number=1/A value (after the per-alt slice, in split
-        # mode) is a record the builder rejects
+        # mode) is a record the parser rejects
         def ids(defs):
             return ", ".join(_q(fid) for fid, _fd in defs) or "NULL"
 
@@ -429,7 +236,9 @@ def vcf_columns(
 
     # stage 1: the string value of each INFO field (its last item), and
     # the per-sample calls
-    stage1 = ["_chrom", "_pos", "_ref", "_alt", "_qual", "_filter", "_multi", "_nalts", "_ai"]
+    stage1 = [
+        *locus, "_chrom", "_pos", "_ref", "_alt", "_qual", "_filter", "_multi", "_nalts", "_ai"
+    ]
     for i, (fid, fd) in enumerate(infos):
         keep = f"e[0] = {_q(fid)}"
         if split and fd.number == "G":
@@ -512,27 +321,20 @@ def vcf_columns(
         else:
             out.append(f"nullif({val}, '.')")
     out += [f"_calls.{name}" for name, _dt in GT_COLUMNS] if has_gts else []
-    return stage1_df.selectExpr(
-        *[
-            f"CAST({e} AS {f.dataType.simpleString()}) AS `{f.name}`"
-            for e, f in zip(out, schema.fields)
-        ]
-    )
+    cols = [
+        f"CAST({e} AS {f.dataType.simpleString()}) AS `{f.name}`"
+        for e, f in zip(out, schema.fields)
+    ]
+    cols[: len(locus)] = locus  # chrom, start, end lead the schema
+    return stage1_df.selectExpr(*cols)
 
 
-def _iter_chunks(
-    path: str,
-    header: VCFHeader,
-    schema: T.StructType,
-    partition: "ContigPartition",
-    decompose: str = "reject",
-):
+def _bgzf_records(path: str, partition: ContigPartition):
     """Tabix-seek read: inflate only the partition's BGZF chunk ranges and
-    keep records overlapping its [beg, end) locus window. This is the
-    htslib region-query loop re-expressed per Spark partition."""
+    keep the records overlapping its [beg, end) locus window — the
+    htslib region-query loop, per Spark partition."""
     from vcf2db_spark.sources.bgzf import BGZFReader
 
-    build = _row_builder(header, schema, decompose)
     beg, end = partition.beg, partition.end
     with BGZFReader(path) as rd:
         for vbeg, vend in partition.chunks or ():
@@ -541,37 +343,29 @@ def _iter_chunks(
                 line = rd.readline()
                 if not line:
                     break
-                if line.startswith(b"#"):
+                text = line.rstrip(b"\r\n").decode()
+                if not text or text.startswith("#"):
                     continue
-                parts = line.rstrip(b"\n").decode().split("\t")
-                rec_beg = int(parts[1]) - 1
-                rec_end = rec_beg + len(parts[3])
+                chrom, pos, _vid, ref = text.split("\t", 4)[:4]
+                rec_beg = int(pos) - 1
+                rec_end = rec_beg + len(ref)
                 if rec_beg < end and rec_end > beg:
-                    yield from build(parts)
+                    yield chrom, rec_beg, rec_end, text
 
 
-def _iter_bcf(
-    path: str,
-    header: VCFHeader,
-    schema: T.StructType,
-    partition: "ContigPartition",
-    decompose: str = "reject",
-):
-    """BCF twin of the two text loops: CSI-seek chunk read when the
-    partition carries chunk ranges, else a filtered framed scan. Binary
-    records decode to text parts feeding the SAME row builder — one
-    parsing semantics, two containers (sources/bcf.py)."""
+def _bcf_records(path: str, partition: ContigPartition):
+    """The BCF twin: a CSI-seek chunk read when the partition carries
+    chunk ranges, else a filtered framed scan; each binary record is
+    decoded to its text fields (``sources.bcf``)."""
     from vcf2db_spark.sources import bcf
 
-    build = _row_builder(header, schema, decompose)
     if partition.chunks is not None:  # [] = provably-empty partition
-        src = bcf.iter_bcf_chunk_parts(
-            path, partition.chunks, partition.beg, partition.end
-        )
+        src = bcf.iter_bcf_chunk_parts(path, partition.chunks, partition.beg, partition.end)
     else:
         src = bcf.iter_bcf_parts(path, partition.contig)
     for parts in src:
-        yield from build(parts)
+        rec_beg = int(parts[1]) - 1
+        yield parts[0], rec_beg, rec_beg + len(parts[3]), "\t".join(parts)
 
 
 class VCFReader(DataSourceReader):
@@ -579,7 +373,7 @@ class VCFReader(DataSourceReader):
     #: columnarization, small enough to keep per-batch memory flat
     BATCH_ROWS = 4096
 
-    def __init__(self, schema: T.StructType, options: dict):
+    def __init__(self, options: dict):
         # Spark passes reader options through a case-insensitive map that
         # LOWERCASES keys — read camelCase options via their lowercase form
         # (with the original spelling as a fallback for direct construction
@@ -587,14 +381,12 @@ class VCFReader(DataSourceReader):
         def opt(key: str, default: str) -> str:
             return options.get(key.lower(), options.get(key, default))
 
-        self.schema_ = schema
         self.path = options["path"]
         from vcf2db_spark.sources.bcf import is_bcf
 
         self.is_bcf = is_bcf(self.path)
-        self.header = parse_header(_header_text(self.path))
+        self.header = parse_header(read_header_text(self.path))
         split = opt("partitionByContig", "true").lower() == "true"
-        self.decompose = opt("decompose", "reject").lower()
         self.contigs = self.header.contigs if split else []
         #: target COMPRESSED bytes per partition for intra-contig splitting
         #: (VERDICT r5 item 5): a whole-genome single-contig VCF must not
@@ -606,8 +398,8 @@ class VCFReader(DataSourceReader):
         self.index = self._load_index(options.get("index", "auto").lower())
         if self.index is None and not self.is_bcf:
             raise ValueError(
-                f"{self.path}: a text VCF without a .tbi/.csi index is parsed "
-                "by read_vcf's JVM builder, not this source"
+                f"{self.path}: a text VCF without a .tbi/.csi index is read "
+                "by read_vcf with spark.read.text, not this source"
             )
 
     def _load_index(self, mode: str):
@@ -716,23 +508,16 @@ class VCFReader(DataSourceReader):
         return [ContigPartition(None)]
 
     def read(self, partition: ContigPartition):
-        """Columnar RecordBatches rather than per-row tuples: no per-row
-        pickle on the executor↔Python boundary."""
+        """Columnar RecordBatches of ``LINE_SCHEMA`` rather than per-row
+        tuples: no per-row pickle on the executor↔Python boundary."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        if self.is_bcf:
-            rows = _iter_bcf(
-                self.path, self.header, self.schema_, partition, self.decompose
-            )
-        else:
-            rows = _iter_chunks(
-                self.path, self.header, self.schema_, partition, self.decompose
-            )
-        arrow_schema = to_arrow_schema(self.schema_)
+        arrow_schema = to_arrow_schema(LINE_SCHEMA)
+        records = (_bcf_records if self.is_bcf else _bgzf_records)(self.path, partition)
         buf: list[tuple] = []
-        for row in rows:
-            buf.append(row)
+        for rec in records:
+            buf.append(rec)
             if len(buf) >= self.BATCH_ROWS:
                 yield _to_record_batch(buf, arrow_schema, pa)
                 buf = []
@@ -751,28 +536,25 @@ def _to_record_batch(rows: list[tuple], arrow_schema, pa):
 
 class VCFDataSource(DataSource):
     """``spark.read.format("vcf").load(path)`` after
-    ``spark.dataSource.register(VCFDataSource)``.
+    ``spark.dataSource.register(VCFDataSource)``: the record lines of a
+    BCF or an indexed BGZF file, with their locus (``LINE_SCHEMA``).
+    ``read_vcf`` types them with ``vcf_columns``.
 
-    Options: ``black_list`` (comma-separated INFO IDs to drop — the
-    reference's ``--black-list`` [U vcf2db.py §main ~L1150]);
-    ``partitionByContig`` (default true); ``include_genotypes``
-    (default true); ``index`` (``auto`` = use ``{path}.tbi``/``.csi``
-    when present, ``build`` = create it if missing, ``none`` = filtered
-    scans only, BCF only). ``read_vcf`` picks this source for BCF and for
-    indexed BGZF only."""
+    Options: ``partitionByContig`` (default true); ``index`` (``auto`` =
+    use ``{path}.tbi``/``.csi`` when present, ``build`` = create it if
+    missing, ``none`` = filtered scans only, BCF only);
+    ``targetPartitionBytes`` (compressed bytes per seek partition, 0 =
+    one partition per contig)."""
 
     @classmethod
     def name(cls) -> str:
         return "vcf"
 
     def schema(self) -> T.StructType:
-        header = parse_header(_header_text(self.options["path"]))
-        bl = tuple(x for x in self.options.get("black_list", "").split(",") if x)
-        inc = self.options.get("include_genotypes", "true").lower() == "true"
-        return build_schema(header, black_list=bl, include_genotypes=inc)
+        return LINE_SCHEMA
 
     def reader(self, schema: T.StructType) -> VCFReader:
-        return VCFReader(schema, dict(self.options))
+        return VCFReader(dict(self.options))
 
 
 def _uses_source(path: str, index: str) -> bool:
@@ -792,13 +574,56 @@ def _text_lines(
     spark: SparkSession, path: str, header: VCFHeader, partition_by_contig: bool
 ) -> DataFrame:
     """The file's lines; with ``partition_by_contig``, hash-partitioned
-    by their first field into one partition per header contig, the
-    partition count the source gives. The shuffle lets a gzip file,
-    which Spark reads in one task, be parsed on every core."""
+    by their first field into one partition per header contig, capped at
+    ``spark.sql.shuffle.partitions`` (a GRCh38 header with alt, decoy and
+    HLA contigs declares thousands). Each contig stays in one partition.
+    The shuffle lets a gzip file, which Spark reads in one task, be
+    parsed on every core."""
     lines = spark.read.text(path)
     if not partition_by_contig or not header.contigs:
         return lines
-    return lines.repartition(len(header.contigs), F.substring_index("value", "\t", 1))
+    n = min(len(header.contigs), int(spark.conf.get("spark.sql.shuffle.partitions")))
+    return lines.repartition(n, F.substring_index("value", "\t", 1))
+
+
+def _source_lines(
+    spark: SparkSession,
+    path: str,
+    partition_by_contig: bool,
+    index: str,
+    target_partition_bytes: int | None,
+) -> DataFrame:
+    """The record lines of a BCF or indexed BGZF file, read by
+    ``VCFDataSource`` in seek partitions."""
+    if target_partition_bytes is None:
+        # Adaptive split target: the Python inflate/decode (not IO) is the
+        # scan bottleneck, so a small-but-expensive file should fan out
+        # across every core instead of stopping at one task per contig —
+        # aim for ~2 waves over defaultParallelism, clamped to
+        # [256 KB, 64 MB]. At warehouse scale (file >> cores × 64 MB) the
+        # cap leaves the usual 64 MB split; on one cohort-sized file per
+        # node it keeps all executor threads busy (measured: 16-sample×100k
+        # BCF full scan 1.9 → 1.1 s on local[32], par with the text
+        # container).
+        try:
+            fsize = os.path.getsize(path)
+            cores = spark.sparkContext.defaultParallelism
+            target_partition_bytes = min(64 << 20, max(256 << 10, fsize // (2 * cores)))
+        except OSError:
+            target_partition_bytes = 64 << 20
+    spark.dataSource.register(VCFDataSource)
+    try:
+        # pushFilters requires this conf; Spark rejects the read without it
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    except Exception:
+        pass
+    return (
+        spark.read.format("vcf")
+        .option("partitionByContig", str(partition_by_contig).lower())
+        .option("index", index)
+        .option("targetPartitionBytes", str(target_partition_bytes))
+        .load(path)
+    )
 
 
 def read_vcf(
@@ -813,60 +638,33 @@ def read_vcf(
 ) -> DataFrame:
     """Library entry point (reference entry point 2, [U §VCFDB.__init__ ~L580]).
 
-    Plain text, plain gzip and BGZF with no index (or ``index='none'``)
-    are parsed by the JVM builder (``vcf_columns``): a cold read then
-    starts no Python worker. BCF, and BGZF with a ``.tbi``/``.csi`` index
-    (or ``index='build'``, which writes one), go through
-    ``VCFDataSource``: its seek partitions inflate only their own blocks,
-    in parallel, and prune on pushed-down locus predicates, which a
-    whole-file gzip text scan cannot. ``target_partition_bytes`` sizes
-    the seek partitions; ``partition_by_contig`` gives either path one
-    partition (or, with an index, more) per header contig.
+    Every container is typed by the same ``vcf_columns``; only where the
+    lines come from differs. Plain text, plain gzip and BGZF with no
+    index (or ``index='none'``) are read with ``spark.read.text``: a cold
+    read then starts no Python worker. BCF, and BGZF with a
+    ``.tbi``/``.csi`` index (or ``index='build'``, which writes one), are
+    read by ``VCFDataSource``: its seek partitions inflate only their own
+    blocks, in parallel, and prune on pushed-down ``chrom``/``start``/
+    ``end`` predicates, which a whole-file gzip text scan cannot.
+    ``target_partition_bytes`` sizes the seek partitions (default:
+    adaptive, ``fsize // (2 · cores)`` clamped to [256 KB, 64 MB]);
+    ``partition_by_contig`` gives either path one partition (or, with an
+    index, more) per header contig.
 
     ``decompose='split'`` decomposes multi-allelic records in-engine
     (vt decompose -s semantics: per-alt INFO A/R slicing, GT allele
     remap with other-alt→'.', AD subsetting, Number=G dropped) — the
     preprocessing step the reference requires users to run externally.
     The default ``'reject'`` preserves the reference's precondition."""
-    if not _uses_source(path, index):
-        header = parse_header(read_header_text(path))
-        return vcf_columns(
-            _text_lines(spark, path, header, partition_by_contig),
-            header,
-            black_list=black_list,
-            include_genotypes=include_genotypes,
-            decompose=decompose,
-        )
-    if target_partition_bytes is None:
-        # Adaptive split target: the Python decode (not IO) is the scan
-        # bottleneck, so a small-but-expensive file should fan out across
-        # every core instead of stopping at one task per contig — aim for
-        # ~2 waves over defaultParallelism, clamped to [256 KB, 64 MB].
-        # At warehouse scale (file >> cores × 64 MB) the cap leaves the
-        # usual 64 MB split; on one cohort-sized file per node it keeps
-        # all executor threads busy (measured: 16-sample×100k BCF full
-        # scan 1.9 → 1.1 s on local[32], par with the text container).
-        try:
-            fsize = os.path.getsize(path)
-            cores = spark.sparkContext.defaultParallelism
-            target_partition_bytes = min(
-                64 << 20, max(256 << 10, fsize // (2 * cores))
-            )
-        except OSError:
-            target_partition_bytes = 64 << 20
-    spark.dataSource.register(VCFDataSource)
-    try:
-        # pushFilters requires this conf; Spark rejects the read without it
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    reader = (
-        spark.read.format("vcf")
-        .option("black_list", ",".join(black_list))
-        .option("include_genotypes", str(include_genotypes).lower())
-        .option("partitionByContig", str(partition_by_contig).lower())
-        .option("index", index)
-        .option("decompose", decompose)
-        .option("targetPartitionBytes", str(target_partition_bytes))
+    header = parse_header(read_header_text(path))
+    if _uses_source(path, index):
+        lines = _source_lines(spark, path, partition_by_contig, index, target_partition_bytes)
+    else:
+        lines = _text_lines(spark, path, header, partition_by_contig)
+    return vcf_columns(
+        lines,
+        header,
+        black_list=black_list,
+        include_genotypes=include_genotypes,
+        decompose=decompose,
     )
-    return reader.load(path)
