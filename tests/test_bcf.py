@@ -113,6 +113,31 @@ def test_bcf_header_gains_undeclared_filters(paths):
     assert [ln for ln in got if not ln.startswith("##FILTER=")] == orig
 
 
+def test_bcf_undeclared_format_key_round_trips(spark, tmp_path):
+    """htslib rule: a FORMAT key with no header line gains a one-value
+    String ``##FORMAT`` line on write, so the record still encodes; the
+    BCF decodes to the text records and reads as the text VCF reads."""
+    from vcf2db_spark.sources.vcf import read_vcf
+
+    vcf = tmp_path / "undeclared.vcf"
+    vcf.write_text(
+        "##fileformat=VCFv4.2\n"
+        "##contig=<ID=chr1,length=1000>\n"
+        "##INFO=<ID=DP,Number=1,Type=Integer,Description=\"depth\">\n"
+        '##FORMAT=<ID=GT,Number=1,Type=String,Description="gt">\n'
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2\n"
+        "chr1\t10\t.\tA\tT\t5\tPASS\tDP=3\tGT:XF\t0/1:ab\t1/1:cd\n"
+        "chr1\t20\t.\tC\tG\t5\tPASS\tDP=4\tGT:XF\t0/0:e\t./.:.\n"
+    )
+    bcf = write_bcf(str(vcf), str(tmp_path / "undeclared.bcf"))
+    assert '##FORMAT=<ID=XF,Number=1,Type=String,Description="added on BCF write">' in (
+        read_bcf_header_text(bcf)
+    )
+    body = [ln.split("\t") for ln in vcf.read_text().splitlines() if not ln.startswith("#")]
+    assert list(iter_bcf_parts(bcf)) == body
+    assert _rows(read_vcf(spark, bcf)) == _rows(read_vcf(spark, str(vcf)))
+
+
 def test_bcf_contig_scan_and_gt_decode(paths):
     """Filtered framed scan + the GT edge cases: phased 1|1, missing
     ./., half-call ./1 all reconstruct their text forms."""

@@ -23,7 +23,7 @@ ALLOWED = {
     "streaming/pipelines.py": (1, "distinct bucket ids of ONE micro-batch (≤ n_buckets)"),
     "sinks/writers.py": (1, "1-row min/max aggregate for parquet footer stats"),
     "sinks/export.py": (3, "per-shard manifest stats — one row per shard (pmod-bounded)"),
-    "sinks/lakehouse.py": (4, "MERGE/DV-MERGE: 1-row key-bounds aggregates + per-file hit list; DELETE find-touched basenames (all file-count-bounded)"),
+    "sinks/lakehouse.py": (3, "MERGE/DV-MERGE planner (_keyed_batch): 1-row key-bounds aggregate + per-file hit list; DELETE find-touched basenames (all file-count-bounded)"),
     "operators/dedup.py": (2, "limit(small_threshold+1) union-find probe; 1-row convergence sum per jump"),
     "operators/bpe.py": (1, "limit(1) argmax merge-pair per BPE iteration"),
     "operators/quantization.py": (1, "hash-ordered k-means/OPQ shared training sample via collect_train_sample (sample-size bounded)"),

@@ -10,7 +10,8 @@ indexed BGZF file. The ``pack_blob`` pandas UDF and the reopen's
 ``mapInArrow`` remain, so the second test runs the same ingest in a child
 process whose working directory is outside the checkout and whose
 ``PYTHONPATH`` is unset: its workers can import ``vcf2db_spark`` only from
-the zip the driver ships.
+the zip the driver ships. A third child reads indexed BGZF and BCF through
+the VCF DataSource the same way.
 """
 
 from __future__ import annotations
@@ -71,11 +72,24 @@ def test_negative_control_python_source_trips_gate(spark, tmp_path):
     assert "BatchScan vcf" in python_source_scans(plan_nodes(spark, before))
 
 
+def run_foreign(tmp_path, body: str) -> str:
+    """Run ``body`` in a child process whose working directory is outside
+    the checkout and whose ``PYTHONPATH`` is unset; the package is
+    importable on the driver through ``sys.path`` only. Returns stdout."""
+    script = tmp_path / "child.py"
+    script.write_text(f"import sys\nsys.path.insert(0, {REPO!r})\n" + textwrap.dedent(body))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    proc = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return proc.stdout
+
+
 def test_ingest_from_foreign_working_directory(tmp_path):
-    script = tmp_path / "ingest.py"
-    script.write_text(textwrap.dedent(f"""\
-        import sys
-        sys.path.insert(0, {REPO!r})
+    out = run_foreign(tmp_path, """\
         from tests.fixtures.make_mini_vcf import write_fixture
         from tests.test_ingest_no_python_source import ingest
         from vcf2db_spark.session import get_spark
@@ -84,12 +98,29 @@ def test_ingest_from_foreign_working_directory(tmp_path):
         vcf, _ped = write_fixture("data")
         print("ROWS", ingest(spark, vcf, "mini.db"))
         spark.stop()
-    """))
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SPARK_GRAFT_CPUS"] = "2"
-    proc = subprocess.run(
-        [sys.executable, str(script)], cwd=tmp_path, env=env,
-        capture_output=True, text=True, timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    assert f"ROWS {HET_NA002}" in proc.stdout
+    """)
+    assert f"ROWS {HET_NA002}" in out
+
+
+def test_vcf_source_from_foreign_working_directory(tmp_path):
+    """The VCF DataSource (indexed BGZF, BCF) ships the package itself:
+    its reads are the child's first Python-worker step, and the zip ships
+    once per SparkContext, so nothing else can have shipped it first."""
+    out = run_foreign(tmp_path, """\
+        from tests.fixtures.make_mini_vcf import write_fixture
+        from vcf2db_spark.session import get_spark
+        from vcf2db_spark.sources.bcf import write_bcf
+        from vcf2db_spark.sources.bgzf import compress_file
+        from vcf2db_spark.sources.tabix import index_vcf
+        from vcf2db_spark.sources.vcf import read_vcf
+
+        spark = get_spark("foreign-cwd-source")
+        vcf, _ped = write_fixture("data")
+        compress_file(vcf, vcf + ".gz")
+        index_vcf(vcf + ".gz")
+        write_bcf(vcf, "data/mini.bcf")
+        print("ROWS", read_vcf(spark, vcf + ".gz").count(),
+              read_vcf(spark, "data/mini.bcf").count())
+        spark.stop()
+    """)
+    assert "ROWS 6 6" in out

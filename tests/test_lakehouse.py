@@ -92,6 +92,29 @@ def test_plan_files_prunes_by_stats(spark, root):
     assert pruned.count() == 1000
 
 
+def test_read_pruned_reads_the_version_it_started_on(spark, root, monkeypatch):
+    """Schema and file plan come from one fold: an append committed by a
+    concurrent writer right after ``read_pruned``'s snapshot returns must
+    not leak its rows into the scan."""
+    lh.create(spark, root, _mk(spark, 0, 100), stat_cols=("k",))
+    real = lh.snapshot
+    pending = [True]
+
+    def snapshot_then_concurrent_append(*args, **kwargs):
+        man = real(*args, **kwargs)
+        if pending:
+            pending.clear()
+            lh.append(spark, root, _mk(spark, 100, 150))
+        return man
+
+    monkeypatch.setattr(lh, "snapshot", snapshot_then_concurrent_append)
+    got = lh.read_pruned(spark, root, {"k": (50, None)}).filter("k >= 50")
+    assert not pending, "the concurrent append never ran"
+    assert sorted(r["k"] for r in got.collect()) == list(range(50, 100))
+    monkeypatch.undo()
+    assert lh.read(spark, root).count() == 150
+
+
 def test_compact_bins_and_preserves(spark, root):
     lh.create(spark, root, _mk(spark, 0, 500).repartition(16), stat_cols=("k",))
     n_before = len(lh.snapshot(root)["files"])
@@ -186,10 +209,39 @@ def test_merge_history_matches_dict_replica(spark, tmp_path, seed):
         assert got == want, f"seed={seed} version={v}"
 
 
-def test_merge_sparse_batch_skips_unhit_files(spark, root):
-    """A batch hitting both ENDS of the keyspace must not rewrite the
-    middle file (exact per-file hit detection, not [min,max]-span
-    overlap — the COW write-amplification worst case)."""
+def test_planners_fold_the_txlog_once(spark, root, monkeypatch):
+    """Every planner applies its rule to the snapshot its caller already
+    holds: one fold per call, not one for the schema and another for
+    the file list."""
+    lh.create(
+        spark, root, _mk(spark, 0, 100), stat_cols=("k",), bloom_cols=("k",)
+    )
+    folds = []
+    real = lh.snapshot
+
+    def counted(*args, **kwargs):
+        folds.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(lh, "snapshot", counted)
+    calls = {
+        "read_pruned": lambda: lh.read_pruned(spark, root, {"k": (0, 9)}),
+        "read_point": lambda: lh.read_point(spark, root, {"k": 5}),
+        "delete": lambda: lh.delete(spark, root, "k = 1", prune={"k": (1, 1)}),
+        "dv_delete": lambda: lh.dv_delete(spark, root, "k = 2", prune={"k": (2, 2)}),
+    }
+    for name, call in calls.items():
+        folds.clear()
+        call()
+        assert len(folds) == 1, f"{name} folded the txlog {len(folds)} times"
+
+
+@pytest.mark.parametrize("verb", ["merge", "dv_merge"])
+def test_merge_sparse_batch_skips_unhit_files(spark, root, monkeypatch, verb):
+    """A batch hitting both ENDS of the keyspace must not rewrite or
+    scan the middle file (exact per-file hit detection, not [min,max]-
+    span overlap — the COW write-amplification worst case). Both verbs
+    share the planner, so both scan exactly the two hit files."""
     lh.create(spark, root, _mk(spark, 0, 1000).coalesce(1), stat_cols=("k",))
     lh.append(spark, root, _mk(spark, 1000, 2000).coalesce(1))
     lh.append(spark, root, _mk(spark, 2000, 3000).coalesce(1))
@@ -202,7 +254,17 @@ def test_merge_sparse_batch_skips_unhit_files(spark, root):
     batch = _mk(spark, 5, 10, bump=3.0).unionByName(
         _mk(spark, 2990, 2995, bump=3.0)
     )
-    lh.merge(spark, root, batch, key="k")
+    scanned = []
+    real_scan = lh._scan_entries
+
+    def spy(spark_, root_, entries, *args, **kwargs):
+        scanned.append(len(entries))
+        return real_scan(spark_, root_, entries, *args, **kwargs)
+
+    monkeypatch.setattr(lh, "_scan_entries", spy)
+    getattr(lh, verb)(spark, root, batch, key="k")
+    monkeypatch.undo()
+    assert scanned[0] == 2, f"touched-file scan read {scanned[0]} of 3 files"
     after = {f["path"] for f in lh.snapshot(root)["files"]}
     assert mid <= after, "middle file must carry over un-rewritten"
     got = lh.read(spark, root)
@@ -1567,7 +1629,8 @@ def test_bloom_cols_unsupported_type_rejected_at_create(spark, root):
     assert lh.read_point(spark, root, {"k": 3}).count() == 1
 
 
-def test_merge_nan_key_update_not_lost(spark, root):
+@pytest.mark.parametrize("verb", ["merge", "dv_merge"])
+def test_merge_nan_key_update_not_lost(spark, root, verb):
     """ADVICE r9: Spark joins treat NaN == NaN as TRUE, but the bloom
     probe's pandas batch cannot tell NaN from NULL (Arrow→pandas folds
     them) and used to dropna() both — marking the NaN-holding file
@@ -1581,7 +1644,7 @@ def test_merge_nan_key_update_not_lost(spark, root):
     ).repartition(6)
     lh.create(spark, root, df, stat_cols=("k",), bloom_cols=("k",))
     upd = spark.createDataFrame([(float("nan"), "upd")], "k double, tag string")
-    lh.merge(spark, root, upd, key="k")
+    getattr(lh, verb)(spark, root, upd, key="k")
     rows = lh.read(spark, root).collect()
     nan_rows = [(r["k"], r["tag"]) for r in rows if r["k"] != r["k"]]
     assert nan_rows == [(float("nan"), "upd")] or (
@@ -2034,29 +2097,42 @@ def test_dv_merge_writes_only_the_batch(spark, root):
 def test_dv_merge_matches_cow_merge_semantics(spark, root):
     """dv_merge and merge produce the SAME logical table for the same
     batch (duplicate-batch-key raise, NULL-key handling, update-all
-    columns) — only the write amplification differs."""
+    columns) — only the write amplification differs. Two tables: a
+    numeric key with stats and bloom (range containment + bloom probe)
+    and a string key with stats only (the [min,max] span fallback)."""
     df = spark.range(0, 200).select(
         F.col("id").alias("k"), (F.col("id") % 5).alias("g"),
         F.col("id").cast("double").alias("v"),
     ).repartition(3)
-    root2 = root + "_cow"
-    lh.create(spark, root, df, stat_cols=("k",), bloom_cols=("k",))
-    lh.create(spark, root2, df, stat_cols=("k",), bloom_cols=("k",))
     upd = spark.createDataFrame(
         [(7, 9, 70.0), (500, 9, 50.0), (None, 9, 40.0)],
         "k long, g long, v double",
     )
-    lh.dv_merge(spark, root, upd, key="k")
-    lh.merge(spark, root2, upd, key="k")
+    str_df = df.select(
+        F.format_string("k%04d", "k").alias("k"), "g", "v"
+    ).repartitionByRange(3, "k")
+    str_upd = upd.select(
+        F.when(F.col("k").isNotNull(), F.format_string("k%04d", "k")).alias("k"),
+        "g", "v",
+    )
     keyf = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
-    a = sorted(map(tuple, lh.read(spark, root).collect()), key=keyf)
-    b = sorted(map(tuple, lh.read(spark, root2).collect()), key=keyf)
-    assert a == b  # incl. the NULL-keyed row: both verbs INSERT it
+    for name, table, batch, bloom in (
+        ("num", df, upd, ("k",)), ("str", str_df, str_upd, ()),
+    ):
+        mor, cow = f"{root}_{name}_mor", f"{root}_{name}_cow"
+        for r in (mor, cow):
+            lh.create(spark, r, table, stat_cols=("k",), bloom_cols=bloom)
+        lh.dv_merge(spark, mor, batch, key="k")
+        lh.merge(spark, cow, batch, key="k")
+        a = sorted(map(tuple, lh.read(spark, mor).collect()), key=keyf)
+        b = sorted(map(tuple, lh.read(spark, cow).collect()), key=keyf)
+        assert len(a) == 202, name
+        assert a == b, name  # incl. the NULL-keyed row: both verbs INSERT it
     dup = spark.createDataFrame(
         [(1, 0, 1.0), (1, 0, 2.0)], "k long, g long, v double"
     )
     with pytest.raises(ValueError, match="duplicate"):
-        lh.dv_merge(spark, root, dup, key="k")
+        lh.dv_merge(spark, f"{root}_num_mor", dup, key="k")
 
 
 def test_dv_merge_preserves_duplicate_target_keys(spark, root):

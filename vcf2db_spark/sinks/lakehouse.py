@@ -31,8 +31,10 @@ store with nothing but parquet files and a JSON transaction log:
   ``plan_files`` prunes at manifest level before Spark ever plans a scan,
   the Iceberg scan-planning benefit: at 100 TB the driver eliminates
   files without the cluster reading a byte.
-- **Copy-on-write MERGE** — only files whose key-range stats overlap the
-  update batch are rewritten; untouched file entries carry into the new
+- **MERGE in two passes** — ``_keyed_batch`` finds the files an update
+  batch touches (key-range containment, then the bloom probe) for both
+  ``merge`` (copy-on-write rewrite of those files) and ``dv_merge``
+  (deletion vectors on them); untouched file entries carry into the new
   manifest verbatim (tests assert the paths are identical objects on disk).
 - **Merge-on-read DELETE (deletion vectors, r9)** — ``dv_delete`` commits
   a parquet position-delete sidecar per touched file instead of
@@ -671,31 +673,45 @@ def read(
     return _scan_entries(spark, root, man["files"], _schema_of(man))
 
 
+def _prune_stats(files: list[dict], predicates: dict[str, tuple]) -> list[dict]:
+    """THE stats-pruning rule: the entries of ``files`` whose [min,max]
+    stats overlap every ``col: (lo, hi)`` predicate (None bound = open),
+    in manifest order; a file without stats for a predicate column is
+    conservatively kept. Pure — callers apply it to the snapshot they
+    already hold, so no plan folds the txlog twice."""
+
+    def overlaps(entry: dict) -> bool:
+        for col, (lo, hi) in predicates.items():
+            st = entry["stats"].get(col)
+            if st is not None and (
+                (hi is not None and st[0] > hi) or (lo is not None and st[1] < lo)
+            ):
+                return False
+        return True
+
+    return [e for e in files if overlaps(e)]
+
+
+def _read_sidecar(root: str, entry: dict) -> dict | None:
+    """The entry's bloom sidecar ({col: filter}), or None when it is
+    missing or unreadable — every caller then keeps the file."""
+    try:
+        return _read_json(_bloom_sidecar_path(root, entry["path"]))
+    except (OSError, ValueError):
+        return None
+
+
 def plan_files(
     root: str,
     predicates: dict[str, tuple],
     version: int | None = None,
 ) -> tuple[list[dict], int]:
-    """Manifest-level scan planning: keep files whose [min,max] stats
-    overlap every ``col: (lo, hi)`` predicate (None bound = open); files
-    without stats for a predicate column are conservatively kept.
-    Returns (selected entries, skipped count)."""
-    man = snapshot(root, version)
-    selected = []
-    for entry in man["files"]:
-        keep = True
-        for col, (lo, hi) in predicates.items():
-            st = entry["stats"].get(col)
-            if st is None:
-                continue
-            if (hi is not None and st[0] > hi) or (
-                lo is not None and st[1] < lo
-            ):
-                keep = False
-                break
-        if keep:
-            selected.append(entry)
-    return selected, len(man["files"]) - len(selected)
+    """Manifest-level scan planning over one folded version (latest when
+    None): the files the stats-pruning rule keeps for the ``col: (lo,
+    hi)`` predicates. Returns (selected entries, skipped count)."""
+    files = snapshot(root, version)["files"]
+    selected = _prune_stats(files, predicates)
+    return selected, len(files) - len(selected)
 
 
 def read_pruned(
@@ -704,12 +720,37 @@ def read_pruned(
     predicates: dict[str, tuple],
     version: int | None = None,
 ) -> DataFrame:
-    """Stats-pruned scan. The residual predicate still applies row-level
-    (stats prune at file granularity only); callers add it as a normal
-    ``.filter`` — parquet row-group pushdown handles the rest."""
+    """Stats-pruned scan. Schema and file plan come from ONE fold, so a
+    commit landing mid-call cannot mix versions. The residual predicate
+    still applies row-level (stats prune at file granularity only);
+    callers add it as a normal ``.filter`` — parquet row-group pushdown
+    handles the rest."""
     man = snapshot(root, version)
-    selected, _ = plan_files(root, predicates, version)
-    return _scan_entries(spark, root, selected, _schema_of(man))
+    return _scan_entries(
+        spark, root, _prune_stats(man["files"], predicates), _schema_of(man)
+    )
+
+
+def _plan_equals(
+    root: str, files: list[dict], equals: dict[str, object]
+) -> tuple[list[dict], int, int]:
+    """Two-tier planning for EQUALITY lookups over ``files``: the stats
+    rule first (an equality is the degenerate range [v, v]), then the
+    per-file bloom sidecars of the stats-surviving candidates. Returns
+    (selected entries, skipped by stats, skipped by bloom). Never a false
+    negative: a missing sidecar or unindexed column keeps the file."""
+    from vcf2db_spark.operators.bloom import bloom_contains
+
+    selected = _prune_stats(files, {c: (v, v) for c, v in equals.items()})
+    kept = []
+    for e in selected:
+        side = _read_sidecar(root, e) or {}
+        if all(
+            side.get(c) is None or bloom_contains(side[c], v)
+            for c, v in equals.items()
+        ):
+            kept.append(e)
+    return kept, len(files) - len(selected), len(selected) - len(kept)
 
 
 def plan_files_bloom(
@@ -717,46 +758,16 @@ def plan_files_bloom(
     equals: dict[str, object],
     version: int | None = None,
 ) -> tuple[list[dict], int, int]:
-    """Two-tier planning for EQUALITY lookups: min/max stats first (an
-    equality is the degenerate range [v, v]), then the per-file bloom
-    sidecars of the stats-surviving candidates. Returns (selected
-    entries, skipped by stats, skipped by bloom). Never a false
-    negative: a missing sidecar or unindexed column keeps the file.
+    """Two-tier planning for EQUALITY lookups on one folded version
+    (latest when None): stats, then bloom sidecars (``_plan_equals``).
+    Returns (selected entries, skipped by stats, skipped by bloom).
 
     Scale: the probe reads O(stats-surviving candidates) sidecar JSONs
     driver-side — the same complexity class as the manifest fold
     itself, and each read is KBs. For a point lookup on a key column
     this is exactly the work that replaces a full-table scan; Delta
-    pushes the equivalent probe into its scan planning the same way.
-
-    ``version=None`` pins the CURRENT latest version for the whole
-    plan (a commit landing mid-plan cannot mix versions)."""
-    from vcf2db_spark.operators.bloom import bloom_contains
-
-    if version is None:
-        version = latest_version(root)
-    preds = {c: (v, v) for c, v in equals.items()}
-    selected, skipped_stats = plan_files(root, preds, version)
-    kept: list[dict] = []
-    skipped_bloom = 0
-    for e in selected:
-        side_path = _bloom_sidecar_path(root, e["path"])
-        try:
-            side = _read_json(side_path)
-        except (OSError, ValueError):
-            kept.append(e)  # no sidecar → conservative keep
-            continue
-        drop = False
-        for c, v in equals.items():
-            b = side.get(c)
-            if b is not None and not bloom_contains(b, v):
-                drop = True
-                break
-        if drop:
-            skipped_bloom += 1
-        else:
-            kept.append(e)
-    return kept, skipped_stats, skipped_bloom
+    pushes the equivalent probe into its scan planning the same way."""
+    return _plan_equals(root, snapshot(root, version)["files"], equals)
 
 
 def read_point(
@@ -768,64 +779,65 @@ def read_point(
     """Point lookup: bloom+stats-planned scan of the files that might
     contain the key, with the equality predicate applied ROW-level too
     (bloom prunes at file granularity; the residual filter makes the
-    result exact — parquet row-group pushdown handles the rest). The
-    version is pinned ONCE up front: schema and file plan always come
-    from the same snapshot even under concurrent commits."""
-    if version is None:
-        version = latest_version(root)
+    result exact — parquet row-group pushdown handles the rest). Schema
+    and file plan come from ONE fold, even under concurrent commits."""
     man = snapshot(root, version)
-    kept, _, _ = plan_files_bloom(root, equals, version)
-    schema = _schema_of(man)
+    kept, _, _ = _plan_equals(root, man["files"], equals)
     cond = None
     for c, v in equals.items():
         term = F.col(c) == F.lit(v)
         cond = term if cond is None else (cond & term)
-    df = _scan_entries(spark, root, kept, schema)
+    df = _scan_entries(spark, root, kept, _schema_of(man))
     return df.filter(cond) if cond is not None else df
 
 
-def merge(
+def _keyed_batch(
     spark: SparkSession,
     root: str,
+    cur: dict,
     updates: DataFrame,
     key: str,
-) -> int:
-    """Copy-on-write MERGE: matched target rows take the update batch's
-    non-key columns; unmatched update keys insert. Only data files whose
-    ``key`` range actually CONTAINS an update key are rewritten (exact
-    per-file hit detection: the file ranges — file-count rows — are
-    broadcast against the update keys in a range join, so a sparse batch
-    touching both ends of the keyspace rewrites two files, not the span
-    between them); every other file entry carries into the new manifest
-    verbatim. Non-numeric key stats fall back to [min,max]-span overlap.
-    When the key is bloom-indexed (``bloom_cols``), the hit set is
-    further REFINED by probing each candidate's sidecar filter against
-    the batch — range containment cannot help on an unclustered key
-    (every file covers every key), the bloom probe restores
-    write-amplification ∝ true containment. Driver materializations
-    stay bounded: one 1-row bounds aggregate + one hit list of at most
-    file-count rows + candidate sidecar reads (file-count KBs)."""
-    cur = snapshot(root)
-    _check_schema(cur, updates, "merge")
-    # Materialize the update batch ONCE (eager localCheckpoint): the
-    # batch DAG is otherwise re-evaluated four times — bounds aggregate,
-    # hit-list range join, matched-update join, not-matched anti-join —
-    # and an update batch derived from an expensive upstream (a join, a
-    # stream's foreachBatch slice) pays that upstream 4×. Delta
-    # materializes its MERGE source for the same reason (plus
-    # determinism under non-deterministic sources — all four consumers
-    # now provably see the SAME batch). Eager, not lazy: the dedicated
-    # materialization job measured faster than lazy-on-first-action at
-    # sf0.1 (0.4 vs 0.7 s through bounds+hitlist) and the batch is
-    # consumed unconditionally two lines down. Batch-sized state, never
-    # table-sized. The blocks outlive the merge: localCheckpoint blocks
-    # are released only once the checkpointed RDD is garbage-collected.
-    # The eager job also runs before the empty-batch gate below, so an
-    # empty batch still pays one materialization job.
+    op: str,
+) -> tuple[DataFrame, object, list[dict]]:
+    """First pass of both MERGE verbs (Delta's find-touched step): check
+    the batch schema, materialize the batch, take its 1-row key bounds,
+    refuse duplicate batch keys, and pick the files of ``cur`` the batch
+    can touch. Returns (materialized batch, bounds row, touched entries
+    in manifest order); the caller runs only its second pass (COW
+    rewrite or DV build) over the touched files.
+
+    The touched-file rule, never a lost update:
+      - a batch whose keys are all NULL touches no file (NULL equals
+        nothing under SQL join semantics);
+      - numeric key stats: a file is touched when its [min,max] range
+        CONTAINS an update key — a range join of the file ranges
+        (file-count rows, broadcast) against the batch keys, so a sparse
+        batch at both ends of the keyspace touches two files, not the
+        span between them;
+      - otherwise (stats missing / JSON-stringified temporals): the
+        batch's [min,max] span overlap;
+      - a bloom-indexed key then drops files whose filter rejects EVERY
+        batch key — range containment cannot help on an unclustered key
+        (every file covers every key). A missing sidecar stays touched.
+    Driver work stays bounded: one 1-row aggregate, one hit list of at
+    most file-count rows, candidate sidecar reads (file-count KBs)."""
+    _check_schema(cur, updates, op)
+    # Materialize the batch ONCE (eager localCheckpoint): it is otherwise
+    # re-evaluated by every consumer — bounds aggregate, hit-list range
+    # join, bloom probe, matched join, not-matched anti-join — and a batch
+    # derived from an expensive upstream (a join, a stream's foreachBatch
+    # slice) pays that upstream each time. Delta materializes its MERGE
+    # source for the same reason (plus determinism under
+    # non-deterministic sources — every consumer sees the SAME batch).
+    # Eager, not lazy: the dedicated materialization job measured faster
+    # than lazy-on-first-action at sf0.1 (0.4 vs 0.7 s through
+    # bounds+hitlist). Batch-sized state, never table-sized. The blocks
+    # outlive the verb: localCheckpoint blocks are released only once the
+    # checkpointed RDD is garbage-collected. An empty batch still pays
+    # this job before the caller's empty-batch gate.
     updates = updates.localCheckpoint(eager=True)
-    # 1-row bounds aggregate of the update batch (empty-batch gate, the
-    # duplicate-key guard, and the fallback pruning bound for
-    # non-numeric keys)
+    # 1-row bounds aggregate: the callers' empty-batch gate and broadcast
+    # size, the duplicate-key guard, and the span-fallback bounds
     bounds = updates.agg(
         F.min(key).alias("lo"),
         F.max(key).alias("hi"),
@@ -835,96 +847,83 @@ def merge(
     ).collect()[0]
     if bounds["n"] != bounds["nd"]:
         # duplicate keys would multiply matched target rows through the
-        # left join — Delta raises here too ("multiple source rows
-        # matched"); a silent multi-match is a silently wrong table
+        # join — Delta raises here too ("multiple source rows matched");
+        # a silent multi-match is a silently wrong table
         raise ValueError(
-            f"merge: update batch has duplicate values in key column "
+            f"{op}: update batch has duplicate values in key column "
             f"{key!r} ({bounds['n']} rows, {bounds['nd']} distinct)"
         )
-    if bounds["total"] == 0:  # empty batch → no-op commit
-        return _commit(root, _child_manifest(cur, "merge", []))
-    if bounds["lo"] is None:
-        # non-empty batch whose keys are ALL NULL: NULL equals nothing
-        # under SQL join semantics, so no file can match — skip pruning
-        # (min/max are NULL, there is nothing to prune WITH) and touch no
-        # file; every batch row falls through to the not-matched
-        # anti-join below and inserts, per the docstring contract
-        overlapping = [False for _ in cur["files"]]
+    if bounds["lo"] is None:  # empty or all-NULL-key batch: no file
+        return updates, bounds, []
+    files = cur["files"]
+    ranges = [e["stats"].get(key) for e in files]
+    if any(st is not None for st in ranges) and all(
+        st is None or isinstance(st[0], (int, float)) for st in ranges
+    ):
+        rng = spark.createDataFrame(
+            [(i, st[0], st[1]) for i, st in enumerate(ranges) if st is not None],
+            ["__idx", "__lo", "__hi"],
+        )
+        hit = {
+            r["__idx"]
+            for r in updates.select(F.col(key).alias("__k"))
+            .join(
+                F.broadcast(rng),
+                (F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi")),
+            )
+            .select("__idx")
+            .distinct()
+            .collect()
+        }
+        touched = [
+            e for i, (e, st) in enumerate(zip(files, ranges))
+            if st is None or i in hit
+        ]
     else:
         lo, hi = _stat_value(bounds["lo"]), _stat_value(bounds["hi"])
-
-        ranges = [
-            (i, e["stats"].get(key)) for i, e in enumerate(cur["files"])
+        touched = [
+            e for e, st in zip(files, ranges)
+            if st is None or not (st[0] > hi or st[1] < lo)
         ]
-        numeric = all(
-            st is None or isinstance(st[0], (int, float))
-            for _, st in ranges
-        )
-        if numeric and any(st is not None for _, st in ranges):
-            rng = spark.createDataFrame(
-                [(i, st[0], st[1]) for i, st in ranges if st is not None],
-                ["__idx", "__lo", "__hi"],
-            )
-            # hit list: ≤ file-count rows regardless of batch volume
-            hit = {
-                r["__idx"]
-                for r in updates.select(F.col(key).alias("__k"))
-                .join(
-                    F.broadcast(rng),
-                    (F.col("__k") >= F.col("__lo"))
-                    & (F.col("__k") <= F.col("__hi")),
-                )
-                .select("__idx")
-                .distinct()
-                .collect()
-            }
-            overlapping = [
-                i in hit if st is not None else True for i, st in ranges
-            ]
-        else:  # span fallback: stats missing / JSON-stringified temporals
-            overlapping = [
-                st is None or not (st[0] > hi or st[1] < lo)
-                for _, st in ranges
-            ]
-
-    # Bloom refinement (r8): range containment proves a file's [min,max]
-    # COVERS some update key, not that the file CONTAINS one — on an
-    # unclustered key every file covers every key and a sparse merge
-    # would rewrite the whole table. When the merge key is bloom-indexed,
-    # probe each candidate's sidecar against the batch executor-side
-    # (operators/bloom.py probe_any_key — filters broadcast, keys hashed
-    # once per partition): files whose filter rejects EVERY update key
-    # provably contain none and carry verbatim. Missing sidecars stay
-    # hit — degraded scope, never a lost update.
     if key in _bloom_cols_of(cur):
-        blooms_by_idx: dict[int, dict] = {}
-        for i, e in enumerate(cur["files"]):
-            if not overlapping[i]:
-                continue
-            try:
-                side = _read_json(_bloom_sidecar_path(root, e["path"]))
-            except (OSError, ValueError):
-                continue
-            b = side.get(key)
+        # probe each candidate's sidecar against the batch executor-side
+        # (operators/bloom.py probe_any_key — filters broadcast, keys
+        # hashed once per partition)
+        blooms = {}
+        for i, e in enumerate(touched):
+            b = (_read_sidecar(root, e) or {}).get(key)
             if b is not None:
-                blooms_by_idx[i] = b
-        if blooms_by_idx:
+                blooms[i] = b
+        if blooms:
             from vcf2db_spark.operators.bloom import probe_any_key
 
             matched = probe_any_key(
-                spark,
-                updates.select(F.col(key).alias("__k")),
-                "__k",
-                blooms_by_idx,
+                spark, updates.select(F.col(key).alias("__k")), "__k", blooms
             )
-            for i in blooms_by_idx:
-                if i not in matched:
-                    overlapping[i] = False
+            touched = [
+                e for i, e in enumerate(touched)
+                if i not in blooms or i in matched
+            ]
+    return updates, bounds, touched
 
-    touched, untouched = [], []
-    for entry, hit_flag in zip(cur["files"], overlapping):
-        (touched if hit_flag else untouched).append(entry)
 
+def merge(
+    spark: SparkSession,
+    root: str,
+    updates: DataFrame,
+    key: str,
+) -> int:
+    """Copy-on-write MERGE: matched target rows take the update batch's
+    non-key columns; unmatched update keys insert; a duplicate key
+    within the batch raises; NULL-keyed update rows match nothing and
+    insert. The touched files come from ``_keyed_batch`` (exact range
+    containment on numeric key stats, span overlap otherwise, refined by
+    the bloom probe on a bloom-indexed key); only they are rewritten, and
+    every other file entry carries into the new manifest verbatim."""
+    cur = snapshot(root)
+    updates, bounds, touched = _keyed_batch(spark, root, cur, updates, key, "merge")
+    if bounds["total"] == 0:  # empty batch → no-op commit
+        return _commit(root, _child_manifest(cur, "merge", []))
     schema = _schema_of(cur)
     non_key = [f.name for f in schema if f.name != key]
     # DV-aware target scan: a rewritten file's DV-masked rows must NOT
@@ -939,10 +938,10 @@ def merge(
     # test is the presence flag, not coalesce — a NULL update value
     # overwrites the old value instead of silently keeping it (ADVICE r6)
     # Join strategy picked from what the optimizer cannot see: the batch
-    # row count is exact (the bounds aggregate above), while Catalyst
-    # only has the upstream scan estimate — broadcast the bounded batch
-    # so the TARGET side is never shuffled (same gate dv_merge uses;
-    # larger or wider batches fall back to the planner's choice).
+    # row count is exact (the bounds aggregate), while Catalyst only has
+    # the upstream scan estimate — broadcast the bounded batch so the
+    # TARGET side is never shuffled (same gate dv_merge uses; larger or
+    # wider batches fall back to the planner's choice).
     upd = _broadcast_if_small(spark, upd, bounds["total"])
     merged = target.join(upd, target[key] == upd["__k"], "left").select(
         key,
@@ -975,6 +974,14 @@ def merge(
     )
 
 
+def _delete_candidates(cur: dict, prune: dict[str, tuple] | None) -> list[dict]:
+    """The files of ``cur`` a DELETE may touch: the stats-pruning rule
+    over ``prune`` bounds, planned against the SAME snapshot the verb
+    rewrites (a commit landing mid-plan cannot let the candidate set
+    diverge from the read set), or every file without bounds."""
+    return _prune_stats(cur["files"], prune) if prune else list(cur["files"])
+
+
 def delete(
     spark: SparkSession,
     root: str,
@@ -986,27 +993,17 @@ def delete(
     forgotten verb a training-data table needs.
 
     ``prune`` (optional ``{col: (lo, hi)}`` bounds implied by the
-    predicate) limits the rewrite to files whose stats overlap — the
-    same manifest-level planning as ``read_pruned``; files outside it
-    carry into the new manifest verbatim and are never read. Within the
+    predicate) limits the rewrite to files the stats-pruning rule keeps,
+    applied to the one snapshot the verb reads; files outside it carry
+    into the new manifest verbatim and are never read. Within the
     candidate set, a FIND-TOUCHED scan (Delta's two-phase DELETE) runs
     the predicate once with pushdown and keeps only files that actually
     contain a matching row — a predicate matching 0.1% of rows rewrites
     the files holding that 0.1%, not every stats-overlapping candidate.
     Driver work stays manifest-sized (the hit list is ≤ file-count
-    basenames)."""
+    basenames). Only rows where the predicate is positively TRUE go."""
     cur = snapshot(root)
-    if prune:
-        # plan against the SAME pinned version we rewrite — a commit
-        # landing between the snapshot read and the plan must not let
-        # the candidate set diverge from the read set (the stale parent
-        # would still conflict at publish, but correctness should come
-        # from the plan, not the incidental conflict)
-        candidates, _ = plan_files(root, prune, version=cur["version"])
-        cand_paths = {e["path"] for e in candidates}
-    else:
-        cand_paths = {e["path"] for e in cur["files"]}
-    touched = [e for e in cur["files"] if e["path"] in cand_paths]
+    touched = _delete_candidates(cur, prune)
     schema = _schema_of(cur)
     if touched:
         # find-touched scan: which candidate files hold ≥1 matching LIVE
@@ -1063,27 +1060,24 @@ def dv_delete(
     DV purge rewrites a file only once its deleted ratio crosses the
     threshold (amortized, like Delta's OPTIMIZE on DV'd tables).
 
-    Mechanics: one DV-aware scan of the pruned candidates finds matching
-    LIVE rows' ``(file, _metadata.row_index)`` positions; one Spark
-    write unions them with the file's existing positions and writes one
-    sorted parquet position-delete sidecar per file with a hit
-    (``_build_dvs``); the driver renames the sidecars into place, reads
-    each count from its footer, and commits a manifest that REPLACES
-    each touched entry (remove+add of the same data path with the new
-    ``dv`` ref). No Python worker runs and nothing is collected. A file
-    whose every row is now deleted is dropped from the manifest outright
-    (no empty-file tombstones). Snapshots stay immutable: time travel to
-    the pre-delete version reads the OLD entry and its old (or no) DV.
+    Mechanics: ``prune`` narrows the candidates exactly as in ``delete``
+    (same snapshot, same stats rule); one DV-aware scan of them finds
+    matching LIVE rows' ``(file, _metadata.row_index)`` positions; one
+    Spark write unions them with the file's existing positions and
+    writes one sorted parquet position-delete sidecar per file with a
+    hit (``_build_dvs``); the driver renames the sidecars into place,
+    reads each count from its footer, and commits a manifest that
+    REPLACES each touched entry (remove+add of the same data path with
+    the new ``dv`` ref). No Python worker runs and nothing is collected.
+    A file whose every row is now deleted is dropped from the manifest
+    outright (no empty-file tombstones). Snapshots stay immutable: time
+    travel to the pre-delete version reads the OLD entry and its old (or
+    no) DV.
 
     Three-valued NULL semantics match ``delete``: only rows where the
     predicate is positively TRUE are masked."""
     cur = snapshot(root)
-    if prune:
-        candidates, _ = plan_files(root, prune, version=cur["version"])
-        cand_paths = {e["path"] for e in candidates}
-    else:
-        cand_paths = {e["path"] for e in cur["files"]}
-    touched = [e for e in cur["files"] if e["path"] in cand_paths]
+    touched = _delete_candidates(cur, prune)
     if not touched:
         return _commit(root, _child_manifest(cur, "dv_delete", []))
     schema = _schema_of(cur)
@@ -1159,77 +1153,32 @@ def dv_merge(
     replacements — plus the not-matched inserts — land in ONE appended
     data file, so the bytes written are O(update batch), never O(touched
     files). COW ``merge`` rewrites every file containing a matched key
-    (bloom-refined, but a 3-row update spread across 3 × 1 GB files
-    still rewrites 3 GB); this verb writes KB-scale sidecars + the batch.
+    (a 3-row update spread across 3 × 1 GB files still rewrites 3 GB);
+    this verb writes KB-scale sidecars + the batch.
 
     Semantics match ``merge`` exactly: matched target rows take the
     update's non-key columns (every copy of a duplicated target key is
     matched — one replacement row appends per matched TARGET row, so
     duplicate-key tables keep their multiplicity); unmatched update keys
     insert; a duplicate key within the BATCH raises; NULL-keyed update
-    rows match nothing and insert. Candidate files narrow through the
-    same stats + bloom tiers as ``merge``; the matched-position scan and
-    the DV build are the ``dv_delete`` machinery. Reads apply the
-    sidecars; ``compact`` purges them past the deleted-ratio threshold."""
+    rows match nothing and insert. The touched files come from the same
+    planner as ``merge`` (``_keyed_batch``: range containment or span
+    overlap, then the bloom probe), so the matched-position scan reads
+    only them; the DV build is the ``dv_delete`` machinery. Reads apply
+    the sidecars; ``compact`` purges them past the deleted-ratio
+    threshold."""
     cur = snapshot(root)
-    _check_schema(cur, updates, "dv_merge")
-    # one materialization of the batch for its four consumers (bounds,
-    # bloom probe, matched join, inserts anti-join) — same rationale and
-    # measurement as merge() above; batch-sized, and like merge()'s its
-    # blocks are released only when the checkpointed RDD is collected
-    updates = updates.localCheckpoint(eager=True)
-    bounds = updates.agg(
-        F.min(key).alias("lo"),
-        F.max(key).alias("hi"),
-        F.count(key).alias("n"),
-        F.countDistinct(key).alias("nd"),
-        F.count(F.lit(1)).alias("total"),
-    ).collect()[0]
-    if bounds["n"] != bounds["nd"]:
-        raise ValueError(
-            f"dv_merge: update batch has duplicate values in key column "
-            f"{key!r} ({bounds['n']} rows, {bounds['nd']} distinct)"
-        )
+    updates, bounds, touched = _keyed_batch(
+        spark, root, cur, updates, key, "dv_merge"
+    )
     if bounds["total"] == 0:  # empty batch → no-op commit (merge parity)
         return _commit(root, _child_manifest(cur, "dv_merge", []))
-    all_null = bounds["lo"] is None
     schema = _schema_of(cur)
     non_key = [f.name for f in schema if f.name != key]
     upd = updates.select(
         F.col(key).alias("__k"),
         *[F.col(c).alias(f"__u_{c}") for c in non_key],
     )
-    # candidate narrowing: every file is a candidate unless its bloom
-    # filter provably rejects the whole batch (range stats cannot prove
-    # CONTAINMENT on an unclustered key — the bloom tier is the one that
-    # shrinks this; missing sidecars conservatively stay candidates)
-    # all-NULL-key batch: NULL equals nothing under SQL join semantics,
-    # so no target row can match — no file is touched, no DV is built,
-    # and every batch row falls through to the not-matched anti-join
-    # below and inserts, per the docstring contract (merge parity)
-    touched = [] if all_null else list(cur["files"])
-    if key in _bloom_cols_of(cur) and touched:
-        blooms_by_idx: dict[int, dict] = {}
-        for i, e in enumerate(touched):
-            try:
-                side = _read_json(_bloom_sidecar_path(root, e["path"]))
-            except (OSError, ValueError):
-                continue
-            b = side.get(key)
-            if b is not None:
-                blooms_by_idx[i] = b
-        if blooms_by_idx:
-            from vcf2db_spark.operators.bloom import probe_any_key
-
-            matched_idx = probe_any_key(
-                spark, updates.select(F.col(key).alias("__k")), "__k",
-                blooms_by_idx,
-            )
-            touched = [
-                e
-                for i, e in enumerate(touched)
-                if i not in blooms_by_idx or i in matched_idx
-            ]
     # matched target rows: (file, position) for the DV build AND the
     # replacement rows (update values, one per matched target copy)
     target = _scan_entries(
@@ -1237,8 +1186,7 @@ def dv_merge(
     )
     # broadcast only a bounded batch (the verb promises O(batch)-bounded
     # WRITES, not batch-sized executor memory) — past the gate let
-    # AQE/autoBroadcastJoinThreshold pick the join strategy, same policy
-    # as the DV-positions join's _DV_BROADCAST_POSITIONS gate
+    # AQE/autoBroadcastJoinThreshold pick the join strategy
     upd_side = _broadcast_if_small(spark, upd, bounds["total"])
     matched = target.join(upd_side, target[key] == upd["__k"])
     # matched feeds BOTH the DV build and the replacement rows — without

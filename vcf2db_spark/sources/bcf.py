@@ -52,6 +52,8 @@ _INT_END = {1: -0x7F, 2: -0x7FFF, 3: -0x7FFFFFFF}
 _FLOAT_MISSING_BITS = 0x7F800001
 _FLOAT_END_BITS = 0x7F800002
 _INT_FMT = {1: "b", 2: "h", 3: "i"}
+#: text spellings of a missing numeric value the encoder accepts
+_MISSING_TEXT = (".", "")
 _INT_WIDTH = {1: 1, 2: 2, 3: 4}
 
 
@@ -296,7 +298,7 @@ class BCFCodec:
             (key_id, off) = _read_typed_int_vec(shared, off, scalar=True)
             key = self.strings[key_id]
             val, off = _read_typed_value(shared, off)
-            if val is True and self.types.get(key) == "Flag":
+            if val is True:  # a valueless item (a Flag) reads back bare
                 info_parts.append(key)
                 continue
             is_f = self.types.get(key) == "Float"
@@ -475,10 +477,11 @@ class BCFCodec:
         shared += struct.pack("<iii", self.ctg_id[chrom], int(pos) - 1, len(ref))
         shared += (
             struct.pack("<I", _FLOAT_MISSING_BITS)
-            if qual == "."
+            if qual in _MISSING_TEXT
             else struct.pack("<f", np.float32(float(qual)))
         )
-        info_items = [] if info == "." else info.split(";")
+        # htslib skips empty INFO items (``;;``)
+        info_items = [] if info == "." else [x for x in info.split(";") if x]
         shared += struct.pack("<I", (len(alleles) << 16) | len(info_items))
         fmt_keys = parts[8].split(":") if len(parts) > 8 else []
         samples = parts[9:] if len(parts) > 9 else []
@@ -504,12 +507,12 @@ class BCFCodec:
             elif typ == "Integer":
                 vs = val.split(",")
                 shared += self._typed_ints(
-                    [0 if v == "." else int(v) for v in vs],
-                    missing={i for i, v in enumerate(vs) if v == "."},
+                    [0 if v in _MISSING_TEXT else int(v) for v in vs],
+                    missing={i for i, v in enumerate(vs) if v in _MISSING_TEXT},
                 )
             elif typ == "Float":
                 shared += self._typed_floats(
-                    [None if v == "." else float(v) for v in val.split(",")]
+                    [None if v in _MISSING_TEXT else float(v) for v in val.split(",")]
                 )
             else:
                 shared += self._typed_str(val)
@@ -537,8 +540,8 @@ class BCFCodec:
                     indiv += struct.pack(f"<{width}{_INT_FMT[t]}", *al)
             elif typ == "Integer":
                 vecs = [
-                    [] if c == "." else [
-                        None if v == "." else int(v) for v in c.split(",")
+                    [] if c in _MISSING_TEXT else [
+                        None if v in _MISSING_TEXT else int(v) for v in c.split(",")
                     ]
                     for c in cells
                 ]
@@ -556,8 +559,8 @@ class BCFCodec:
                     indiv += struct.pack(f"<{width}{_INT_FMT[t]}", *row)
             elif typ == "Float":
                 vecs = [
-                    [] if c == "." else [
-                        None if v == "." else float(v) for v in c.split(",")
+                    [] if c in _MISSING_TEXT else [
+                        None if v in _MISSING_TEXT else float(v) for v in c.split(",")
                     ]
                     for c in cells
                 ]
@@ -603,24 +606,32 @@ def write_bcf(vcf_path: str, out_path: str, index_path: str | None = None) -> st
         text = fh.read()
     header_lines = [ln for ln in text.splitlines() if ln.startswith("#")]
     body_lines = [ln for ln in text.splitlines() if ln and not ln.startswith("#")]
-    # htslib rule: FILTER names used in the body but undeclared in the
-    # header get ##FILTER lines added on write (the string dictionary
-    # can only index declared IDs)
-    declared = {
-        ln.split("ID=", 1)[1].split(",", 1)[0].split(">", 1)[0]
-        for ln in header_lines
-        if ln.startswith("##FILTER=")
-    } | {"PASS"}
-    used = {
-        f
-        for ln in body_lines
-        for f in ln.split("\t")[6].split(";")
-        if f not in (".", "")
-    }
-    extra = [
-        f'##FILTER=<ID={f},Description="added on BCF write">'
-        for f in sorted(used - declared)
-    ]
+    # htslib rule: FILTER, INFO and FORMAT IDs used in the body but
+    # undeclared in the header get header lines added on write (the
+    # string dictionary can only index declared IDs); an added INFO or
+    # FORMAT key is typed as one String, as htslib types it
+    used: dict[str, set] = {"FILTER": set(), "INFO": set(), "FORMAT": set()}
+    for ln in body_lines:
+        parts = ln.split("\t")
+        used["FILTER"].update(parts[6].split(";"))
+        if parts[7] != ".":
+            used["INFO"].update(x.split("=", 1)[0] for x in parts[7].split(";"))
+        if len(parts) > 8:
+            used["FORMAT"].update(parts[8].split(":"))
+    extra = []
+    for kind, attrs in (
+        ("FILTER", ""), ("INFO", "Number=1,Type=String,"),
+        ("FORMAT", "Number=1,Type=String,"),
+    ):
+        declared = {
+            ln.split("ID=", 1)[1].split(",", 1)[0].split(">", 1)[0]
+            for ln in header_lines
+            if ln.startswith(f"##{kind}=")
+        } | {"PASS", ".", ""}
+        extra += [
+            f'##{kind}=<ID={f},{attrs}Description="added on BCF write">'
+            for f in sorted(used[kind] - declared)
+        ]
     if extra:
         header_lines = header_lines[:-1] + extra + header_lines[-1:]
     header_text = "\n".join(header_lines) + "\n"

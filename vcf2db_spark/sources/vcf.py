@@ -56,6 +56,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from vcf2db_spark.session import ship_package
 from vcf2db_spark.sources.header import (
     GT_COLUMNS,
     VCFHeader,
@@ -611,6 +612,10 @@ def _source_lines(
             target_partition_bytes = min(64 << 20, max(256 << 10, fsize // (2 * cores)))
         except OSError:
             target_partition_bytes = 64 << 20
+    # the source unpickles on Python workers, which import vcf2db_spark
+    # from the shipped zip when PYTHONPATH does not carry it; register()
+    # captures the context's py-files, so the zip must be added first
+    ship_package(spark)
     spark.dataSource.register(VCFDataSource)
     try:
         # pushFilters requires this conf; Spark rejects the read without it
