@@ -11,7 +11,9 @@ indexed BGZF file. The ``pack_blob`` pandas UDF and the reopen's
 process whose working directory is outside the checkout and whose
 ``PYTHONPATH`` is unset: its workers can import ``vcf2db_spark`` only from
 the zip the driver ships. A third child reads indexed BGZF and BCF through
-the VCF DataSource the same way.
+the VCF DataSource the same way, and a fourth drains a lakehouse change
+feed, whose streaming-source runner imports the package only through the
+``PYTHONPATH`` the shipped zip is prepended to.
 """
 
 from __future__ import annotations
@@ -124,3 +126,23 @@ def test_vcf_source_from_foreign_working_directory(tmp_path):
         spark.stop()
     """)
     assert "ROWS 6 6" in out
+
+
+def test_feed_stream_from_foreign_working_directory(tmp_path):
+    out = run_foreign(tmp_path, """\
+        import os
+
+        from vcf2db_spark.session import get_spark
+        from vcf2db_spark.sinks import lakehouse as lh
+        from vcf2db_spark.sources.lakehouse_feed import read_feed_stream
+        from vcf2db_spark.streaming.pipelines import run_to_memory
+
+        spark = get_spark("foreign-cwd-feed")
+        root = os.path.abspath("tbl")
+        lh.create(spark, root, spark.range(10).withColumnRenamed("id", "k"))
+        lh.append(spark, root, spark.range(10, 15).withColumnRenamed("id", "k"))
+        feed = run_to_memory(read_feed_stream(spark, root), "feed_foreign")
+        print("ROWS", feed.count())
+        spark.stop()
+    """)
+    assert "ROWS 15" in out

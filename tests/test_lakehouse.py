@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from vcf2db_spark.session import conf_scope
 from vcf2db_spark.sinks import lakehouse as lh
 
 
@@ -2252,15 +2253,11 @@ def test_merge_broadcast_gate_is_sized_by_bytes(spark):
         joined = target.join(side, target["k"] == side["__k"])
         return joined._jdf.queryExecution().executedPlan().toString()
 
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         assert "BroadcastHashJoin" in plan(narrow)
         wide_plan = plan(wide)
         assert "BroadcastHashJoin" not in wide_plan
         assert "SortMergeJoin" in wide_plan or "ShuffledHashJoin" in wide_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 # ---- cross-process CONFLICTING DV writers (r10, VERDICT r9 item 4) -----------

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vcf2db_spark.io import table
+from vcf2db_spark.session import conf_scope
 from vcf2db_spark.sinks.writers import write_bucketed
 
 SF = "/root/testdata/sf0.001"
@@ -17,13 +18,11 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture()
 def no_broadcast(spark):
     """Force the join down the shuffle path so bucketing is observable."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with conf_scope(spark, {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.enabled": "false",
+    }):
+        yield
 
 
 def test_bucketed_join_elides_shuffle(spark, no_broadcast):

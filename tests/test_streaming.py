@@ -235,7 +235,8 @@ def test_rocksdb_state_store_matches_default(spark, events_dup_dir):
     """The RocksDB provider (production posture: state on SSD, bounded
     heap) must be a pure deployment knob — identical results to the
     default heap-backed store on stateful dedup + windowed agg."""
-    from vcf2db_spark.streaming import ROCKSDB_PROVIDER, state_store_provider
+    from vcf2db_spark.session import conf_scope
+    from vcf2db_spark.streaming import ROCKSDB_PROVIDER
 
     def drain(suffix):
         dedup = run_to_memory(
@@ -252,7 +253,9 @@ def test_rocksdb_state_store_matches_default(spark, events_dup_dir):
         )
 
     base_dedup, base_tumble = drain("heap")
-    with state_store_provider(spark, ROCKSDB_PROVIDER):
+    with conf_scope(
+        spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
+    ):
         assert (
             spark.conf.get("spark.sql.streaming.stateStore.providerClass")
             == ROCKSDB_PROVIDER

@@ -22,25 +22,19 @@ TABLES = (
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table.
 
-    Also pins the session timezone to UTC: the driver may pass a session we
-    didn't configure, and the fixtures' naive timestamps must resolve
-    identically in Spark and DuckDB. Other runtime confs (AQE, a sane
-    shuffle-partition count) are pinned once via session.pin_session_conf.
+    The driver may pass a session we did not configure, so this readies
+    it first (``session.pin_session_conf``, once per session): UTC, so the
+    fixtures' naive timestamps resolve as in DuckDB, and parquet
+    TIMESTAMP(NANOS) read as long, so ``events.ts`` can be truncated
+    here to microseconds, as DuckDB surfaces it.
     """
     from vcf2db_spark.session import pin_session_conf
 
     pin_session_conf(spark)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
-        # reader rejects. Read nanos as long and truncate to microseconds —
-        # exactly what DuckDB does when it surfaces the column as TIMESTAMP.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+    return df
 
 
 # (path, cores) → whether the scan is row-group-starved; parquet footer

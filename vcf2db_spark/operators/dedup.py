@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vcf2db_spark.session import conf_scope
+
 
 def exact_dedup(df: DataFrame, keys: list[str], tie_col: str) -> DataFrame:
     """Keep one deterministic representative (min tie_col) per key tuple."""
@@ -428,18 +430,15 @@ def duplicate_clusters(
     probe = sel.limit(small_threshold + 1).toPandas()
     if len(probe) <= small_threshold:
         return _cc_unionfind(probe, nodes, id_col, a_col, b_col)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if loop_partitions:
-        # every round is 2 joins + an agg over label-sized data; at a
-        # bounded scope 32-way exchanges are pure task-scheduling tax
-        # (measured 11.9 s → ~4 s at the 500-doc declared query with 4).
-        # Cluster-scale callers leave this None and keep the session
-        # width. Restored in the finally below.
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
-    try:
+    if not loop_partitions:
+        # cluster-scale callers keep the session width
         return _cc_loop(sel, nodes, id_col, a_col, b_col, max_iters)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # every round is 2 joins + an agg over label-sized data; at a
+    # bounded scope 32-way exchanges are pure task-scheduling tax
+    # (measured 11.9 s → ~4 s at the 500-doc declared query with 4). A
+    # batch loop runs every round under the conf, so the scope spans it.
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": str(loop_partitions)}):
+        return _cc_loop(sel, nodes, id_col, a_col, b_col, max_iters)
 
 
 def _cc_unionfind(

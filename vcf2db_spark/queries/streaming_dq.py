@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from vcf2db_spark.lifecycle import Lifecycle, scratch_dir
 from vcf2db_spark.registry import dq
+from vcf2db_spark.session import conf_scope
 from vcf2db_spark.streaming import (
     dedup_within_watermark,
     read_events_stream,
@@ -148,9 +149,7 @@ def stream_sink_parquet(spark, sf_dir):
     agg = tumbling_counts(s, watermark="10 minutes")
     base = _SINK_LC.fresh_dir("sinkdq")
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             agg.writeStream.format("parquet")
             .option("path", out)
@@ -159,9 +158,7 @@ def stream_sink_parquet(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_windows"),

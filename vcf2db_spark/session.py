@@ -1,4 +1,8 @@
-"""SparkSession factory tuned for the local test harness.
+"""The one owner of the Spark confs this package sets: ``runtime_conf``
+is the one table of runtime SQL confs, which ``get_spark`` builds with
+and ``pin_session_conf`` applies to a session we did not build;
+``conf_scope`` is the one scoped override (tests/test_session_conf.py
+keeps every other conf write out of the package).
 
 Scale notes (100 TB design): the same builder settings apply on a real
 cluster — AQE handles runtime coalescing/skew-splitting; shuffle partition
@@ -8,8 +12,66 @@ count is a starting hint that AQE re-plans. Only ``master`` changes.
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+
+def runtime_conf(cores: int) -> dict[str, str]:
+    """The runtime SQL confs the package relies on, for ``cores`` slots."""
+    return {
+        # AQE: runtime partition coalescing, skew-join splitting, join re-plan.
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # Let AQE downgrade sort-merge joins to shuffled-hash at runtime
+        # when the build side's per-partition map output is small (≤128 MB
+        # here). Size-gated: a 100 TB build side exceeds the threshold and
+        # keeps the spill-safe SMJ, so unlike preferSortMergeJoin=false
+        # (measured 2× regression on the interval join) this cannot pin a
+        # hash build that doesn't fit. Measured at sf1: tpch_q5 1.9→1.3 s,
+        # join_star/agg_distinct ~6-10% — no query regressed.
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "134217728",
+        # One slot per core; AQE coalesces small shuffles down at runtime.
+        # (A/B with 8 vs 32 at sf0.1 is within run-to-run noise once warm —
+        # the first session in a process pays ~2s of JIT regardless.)
+        "spark.sql.shuffle.partitions": os.environ.get(
+            "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cores, 8))
+        ),
+        # The r9 sf16 finding: with a FIXED reduce-side partition count
+        # (= cores), the heavy TPC-H joins stopped falling toward 1× at
+        # 16× the data — ~3M lineitem rows per partition pushed the
+        # per-partition map output past the SHJ threshold and the SMJ
+        # sorts into spill (tpch_q21 15.7 s → 6.7 s, tpch_q5 10.3 → 6.9 s
+        # at sf16 when re-run at 256). AQE's pre-coalesce count is the
+        # scale-adaptive fix: BATCH shuffles start at 8× cores and AQE
+        # coalesces small stages back to ~advisory size (sf0.1 measured
+        # neutral), while streaming state shuffles — where AQE never
+        # coalesces — keep the shuffle.partitions count above. On a real
+        # cluster the same knob is how a fixed-conf job survives growing
+        # inputs between runs.
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": os.environ.get(
+            "SPARK_GRAFT_INITIAL_PARTITIONS", str(max(cores * 8, 64))
+        ),
+        # autoBroadcastJoinThreshold stays at the 10 MB default: measured
+        # A/B at sf1 (tpch_q5 1.8 s @10 MB vs 5.2 s @64 MB) — raising it
+        # flips million-row relations into single-threaded driver-side
+        # broadcast builds that cost more than the shuffle they avoid.
+        # Determinism: pin session TZ (fixtures carry naive timestamps).
+        "spark.sql.session.timeZone": "UTC",
+        # Parquet TIMESTAMP(NANOS) events.ts, which Spark's vectorized reader
+        # rejects, reads as long; the events readers (io.table,
+        # read_events_stream) truncate it to microseconds, as DuckDB does.
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        # Arrow for pandas_udf / toPandas round-trips.
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Python DataSource pushFilters (VCF source locus pruning); Spark
+        # rejects a pushFilters read without it.
+        "spark.sql.python.filterPushdown.enabled": "true",
+    }
 
 
 def get_spark(app_name: str = "vcf2db-spark") -> SparkSession:
@@ -24,55 +86,10 @@ def get_spark(app_name: str = "vcf2db-spark") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        .config(map=runtime_conf(int(cpus)))
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", blas)
         .config("spark.executorEnv.OMP_NUM_THREADS", blas)
         .config("spark.executorEnv.MKL_NUM_THREADS", blas)
-        # AQE: runtime partition coalescing, skew-join splitting, join re-plan.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Let AQE downgrade sort-merge joins to shuffled-hash at runtime
-        # when the build side's per-partition map output is small (≤128 MB
-        # here). Size-gated: a 100 TB build side exceeds the threshold and
-        # keeps the spill-safe SMJ, so unlike preferSortMergeJoin=false
-        # (measured 2× regression on the interval join) this cannot pin a
-        # hash build that doesn't fit. Measured at sf1: tpch_q5 1.9→1.3 s,
-        # join_star/agg_distinct ~6-10% — no query regressed.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            "134217728",
-        )
-        # One slot per core; AQE coalesces small shuffles down at runtime.
-        # (A/B with 8 vs 32 at sf0.1 is within run-to-run noise once warm —
-        # the first session in a process pays ~2s of JIT regardless.)
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(int(cpus), 8))),
-        )
-        # The r9 sf16 finding: with a FIXED reduce-side partition count
-        # (= cores), the heavy TPC-H joins stopped falling toward 1× at
-        # 16× the data — ~3M lineitem rows per partition pushed the
-        # per-partition map output past the SHJ threshold and the SMJ
-        # sorts into spill (tpch_q21 15.7 s → 6.7 s, tpch_q5 10.3 → 6.9 s
-        # at sf16 when re-run at 256). AQE's pre-coalesce count is the
-        # scale-adaptive fix: BATCH shuffles start at 8× cores and AQE
-        # coalesces small stages back to ~advisory size (sf0.1 measured
-        # neutral), while streaming state shuffles — where AQE never
-        # coalesces — keep the shuffle.partitions count above. On a real
-        # cluster the same knob is how a fixed-conf job survives growing
-        # inputs between runs.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "SPARK_GRAFT_INITIAL_PARTITIONS", str(max(int(cpus) * 8, 64))
-            ),
-        )
-        # autoBroadcastJoinThreshold stays at the 10 MB default: measured
-        # A/B at sf1 (tpch_q5 1.8 s @10 MB vs 5.2 s @64 MB) — raising it
-        # flips million-row relations into single-threaded driver-side
-        # broadcast builds that cost more than the shuffle they avoid.
-        # Determinism: pin session TZ (fixtures carry naive timestamps).
-        .config("spark.sql.session.timeZone", "UTC")
         # Harness knob: the differential comparator collects full results;
         # per-row queries at sf4 exceed the 1g default. Static conf —
         # tools/check.py sets the env var before building the session.
@@ -80,10 +97,6 @@ def get_spark(app_name: str = "vcf2db-spark") -> SparkSession:
             "spark.driver.maxResultSize",
             os.environ.get("SPARK_GRAFT_MAX_RESULT", "1g"),
         )
-        # Arrow for pandas_udf / toPandas round-trips.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python DataSource pushFilters (VCF source locus pruning).
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         # Static conf: the compiled-class cache for whole-stage codegen.
@@ -146,55 +159,71 @@ def _tmpfs_free_bytes(path: str) -> int:
 
 
 def pin_session_conf(spark: SparkSession) -> None:
-    """Runtime-settable confs we rely on, applied defensively when the
-    driver hands us a session we did not build (io.table() calls this on
-    every fixture read; it early-exits after the first application)."""
+    """Ready ``spark`` for the package, once per session object: apply
+    ``runtime_conf`` and ship the package to Python workers. Readers and
+    sinks call this, so a session the caller built (the driver harness,
+    a notebook) runs the package like one from ``get_spark``."""
     if getattr(spark, "_vcf2db_pinned", False):
         return
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728"
-    )
+    sc = spark.sparkContext
+    confs = runtime_conf(sc.defaultParallelism)
     # an unconfigured session defaults to 200 shuffle partitions — far too
     # many tasks for a local driver harness (AQE coalesces reads, but the
-    # map side still buckets 200 ways); leave any non-default choice alone
-    if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-        cores = spark.sparkContext.defaultParallelism
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(8, cores))),
-        )
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # static conf on some builds; VCF pushdown then stays off
-    ship_package(spark)
+    # map side still buckets 200 ways); leave any other choice alone
+    if spark.conf.get("spark.sql.shuffle.partitions") != "200":
+        del confs["spark.sql.shuffle.partitions"]
+        del confs["spark.sql.adaptive.coalescePartitions.initialPartitionNum"]
+    for key, value in confs.items():
+        # filterPushdown is a static conf on some builds; pushdown then
+        # stays off
+        if spark.conf.isModifiable(key):
+            spark.conf.set(key, value)
+    _ship_package(sc)
     spark._vcf2db_pinned = True
 
 
-def ship_package(spark: SparkSession) -> None:
+_SCOPE_LOCK = threading.RLock()
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on ``spark`` for the body, then put each key back as
+    it was (one that was unset is unset again). Every scope holds one
+    process-wide re-entrant lock, so two threads cannot interleave their
+    saves and restores. Keep the body short: a streaming query copies its
+    session's conf when ``start()`` clones the session, so a drain scopes
+    its ``start()``, never its ``awaitTermination()``."""
+    with _SCOPE_LOCK:
+        prev = {key: spark.conf.get(key, None) for key in confs}
+        try:
+            for key, value in confs.items():
+                spark.conf.set(key, value)
+            yield
+        finally:
+            for key, value in prev.items():
+                if value is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, value)
+
+
+def _ship_package(sc: SparkContext) -> None:
     """Make ``vcf2db_spark`` importable on Python WORKERS regardless of the
     driver environment. Closures that reference this package by module
-    (pandas UDFs, mapInArrow/mapInPandas stages, applyInPandasWithState)
-    unpickle on the worker with a plain ``import vcf2db_spark`` — which
-    fails if the driver only had the repo on ``sys.path`` (not
-    ``$PYTHONPATH``, which is what worker processes inherit). ``addPyFile``
-    of a package zip is the environment-independent fix: workers prepend
-    shipped files to their ``sys.path``. Every code path that creates such
-    a closure calls this (``pin_session_conf`` for the query path, the
-    SQLite sink and source for ingest). Cheap (one ~360 KB zip per
-    process, built under the scratch root) and once per SparkContext."""
+    (pandas UDFs, mapInArrow/mapInPandas stages, applyInPandasWithState,
+    Python data sources) unpickle on the worker with a plain ``import
+    vcf2db_spark`` — which fails if the driver only had the repo on
+    ``sys.path`` (not ``$PYTHONPATH``, which is what worker processes
+    inherit). ``addPyFile`` of a package zip is the environment-independent
+    fix: workers prepend shipped files to their ``sys.path``. The
+    streaming-source runner ignores those and reads only the PYTHONPATH a
+    Python function copies from ``sc.environment`` when it is wrapped (a
+    data source: at ``register``), so the zip goes there too. Cheap (one
+    ~360 KB zip per process, under the scratch root), once per context."""
     import zipfile
 
     from vcf2db_spark.lifecycle import scratch_root
 
-    try:
-        sc = spark.sparkContext
-    except Exception:
-        return  # Spark Connect sessions have no SparkContext
     if getattr(sc, "_vcf2db_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
@@ -212,4 +241,7 @@ def ship_package(spark: SparkSession) -> None:
                         z.write(full, rel)
         os.replace(tmp, zpath)
     sc.addPyFile(zpath)
+    sc.environment["PYTHONPATH"] = os.pathsep.join(
+        p for p in (zpath, sc.environment.get("PYTHONPATH")) if p
+    )
     sc._vcf2db_shipped = True

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vcf2db_spark.functions.codecs import pack_blob_udf
-from vcf2db_spark.session import ship_package
+from vcf2db_spark.session import pin_session_conf
 
 # Spark surfaces BinaryType as bytearray; sqlite3 binds bytes.
 sqlite3.register_adapter(bytearray, bytes)
@@ -83,7 +83,7 @@ def serialize_for_sqlite(df: DataFrame, legacy: bool = True) -> DataFrame:
     """Distributed row serialization: every non-SQLite-representable column
     becomes INTEGER/REAL/TEXT/BLOB *before* rows reach the driver. Blob
     packing is an Arrow-batched pandas UDF; everything else is JVM-side."""
-    ship_package(df.sparkSession)
+    pin_session_conf(df.sparkSession)
     pack = pack_blob_udf(legacy=legacy)
     out = df
     for field in df.schema.fields:

@@ -63,6 +63,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from vcf2db_spark.session import pin_session_conf
+
 #: manifest operation → feed tag for that commit's added files.
 #: dv_delete matches COW delete's contract: the commit's (re-)added
 #: entries stream their SURVIVING rows — the entry's deletion vector is
@@ -378,6 +380,9 @@ def read_feed_stream(
     max_bytes_per_trigger: int | None = None,
 ):
     """``readStream`` handle over the table's additive change feed."""
+    # register() copies the PYTHONPATH the streaming-source runner
+    # imports vcf2db_spark from, so the session is readied first
+    pin_session_conf(spark)
     spark.dataSource.register(LakehouseFeedDataSource)
     reader = (
         spark.readStream.format("lakehouse_feed")

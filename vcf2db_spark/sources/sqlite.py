@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from vcf2db_spark.session import ship_package
+from vcf2db_spark.session import pin_session_conf
 
 #: BLOB columns that decode to int32 arrays (our sink's and the
 #: reference's genotype matrices; `_blob` twins from the CLI path).
@@ -147,7 +147,7 @@ def read_gemini_db(
     schema = _table_schema(db_path, table, decode_blobs)
     ranges = _rowid_ranges(db_path, table, n_partitions)
     arrow_schema = to_arrow_schema(schema)
-    ship_package(spark)
+    pin_session_conf(spark)
 
     def read(batches):
         for batch in batches:

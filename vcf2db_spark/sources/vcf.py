@@ -56,7 +56,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
-from vcf2db_spark.session import ship_package
+from vcf2db_spark.session import pin_session_conf
 from vcf2db_spark.sources.header import (
     GT_COLUMNS,
     VCFHeader,
@@ -614,14 +614,10 @@ def _source_lines(
             target_partition_bytes = 64 << 20
     # the source unpickles on Python workers, which import vcf2db_spark
     # from the shipped zip when PYTHONPATH does not carry it; register()
-    # captures the context's py-files, so the zip must be added first
-    ship_package(spark)
+    # captures the context's py-files, so the session is readied first
+    # (that also turns on filterPushdown, which pushFilters requires)
+    pin_session_conf(spark)
     spark.dataSource.register(VCFDataSource)
-    try:
-        # pushFilters requires this conf; Spark rejects the read without it
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
     return (
         spark.read.format("vcf")
         .option("partitionByContig", str(partition_by_contig).lower())

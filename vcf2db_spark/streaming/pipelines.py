@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from vcf2db_spark.lifecycle import Lifecycle, scratch_dir
+from vcf2db_spark.session import conf_scope, pin_session_conf
 
 # Schema of the events fixture AFTER ts normalization (streaming file
 # sources need an explicit schema — there is no inference pass).
@@ -47,8 +48,9 @@ EVENTS_SCHEMA = StructType(
 )
 
 # If a producer writes parquet TIMESTAMP(NANOS), Spark's vectorized reader
-# surfaces it as long under spark.sql.legacy.parquet.nanosAsLong; we then
-# truncate nanos -> micros ourselves (same handling as io.table()).
+# surfaces it as long under spark.sql.legacy.parquet.nanosAsLong (set by
+# pin_session_conf); we then truncate nanos -> micros ourselves (same
+# handling as io.table()).
 _EVENTS_NANOS_DISK_SCHEMA = StructType(
     [f if f.name != "ts" else StructField("ts", LongType()) for f in EVENTS_SCHEMA.fields]
 )
@@ -85,11 +87,9 @@ def read_events_stream(
     same incremental-listing semantics (each micro-batch picks up new
     files), which is what the tests and backfills use.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_session_conf(spark)
     nanos = _ts_stored_as_nanos(path)
     schema = _EVENTS_NANOS_DISK_SCHEMA if nanos else EVENTS_SCHEMA
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -283,36 +283,9 @@ ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-
-
-class state_store_provider:
-    """Context manager pinning the state-store backend for queries started
-    inside it (the conf is read at query start). Results must be identical
-    across providers — asserted in tests/test_streaming.py — so this is a
-    pure deployment knob, not a semantics switch."""
-
-    def __init__(self, spark: SparkSession, provider: str = ROCKSDB_PROVIDER):
-        self._spark, self._provider = spark, provider
-
-    def __enter__(self):
-        self._prev = self._spark.conf.get(_PROVIDER_KEY, None)
-        self._spark.conf.set(_PROVIDER_KEY, self._provider)
-        return self
-
-    def __exit__(self, *exc):
-        if self._prev is None:
-            self._spark.conf.unset(_PROVIDER_KEY)
-        else:
-            self._spark.conf.set(_PROVIDER_KEY, self._prev)
-
-
 # -------------------------------------------------------------------------
 # test/backfill harness
 # -------------------------------------------------------------------------
-
-# checkpoint of the most recent memory drain (dead once it returns)
-_CKPT_LC = Lifecycle()
 
 
 def run_to_memory(
@@ -324,9 +297,8 @@ def run_to_memory(
     currently-visible input then stops — batch-equivalent semantics.
 
     Stateful operators allocate one state-store instance per shuffle
-    partition; for the local harness we pin that to 8 for the duration of
-    the stream (32 stores × checkpoint dirs is pure fixed cost at test
-    scale — on a cluster you size it to executor count instead).
+    partition; the drain sizes that count to its input with
+    ``_drain_partitions`` (~one store per 3 MB of source, in [4, 16]).
 
     ``final_no_data_batch=False`` skips the trailing no-data micro-batch
     (``spark.sql.streaming.noDataMicroBatches.enabled``) for the drain.
@@ -343,44 +315,42 @@ def run_to_memory(
     test_final_no_data_batch_output_identity. Callers opt in per QUERY
     SEMANTICS, never per scale.
 
-    The drain saves and restores session-global confs
-    (``noDataMicroBatches``, ``shuffle.partitions``,
-    ``minBatchesToRetain``), so two drains must not run concurrently in
-    one SparkSession."""
+    These confs are scoped around ``start()``, which clones the session:
+    the session keeps its own values while the drain runs, and drains
+    may run concurrently."""
     spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_retain = spark.conf.get("spark.sql.streaming.minBatchesToRetain", "100")
-    _NODATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nodata = spark.conf.get(_NODATA_KEY, "true")
+    confs = {
+        # State-store instances sized by INPUT VOLUME: per-store WAL/commit
+        # fixed costs dominate tiny drains (8→4 measured ~12% on the
+        # stream-stream join at sf0.1), but starving a larger drain of
+        # parallelism costs more (stateful totals at sf1: 20.3 s @4 parts
+        # vs 14.1 s @8); a real deployment sizes this to state volume /
+        # executor count instead.
+        "spark.sql.shuffle.partitions": str(_drain_partitions(sdf)),
+        # state-version retention exists for failure recovery of
+        # long-running streams; an ephemeral availableNow drain needs none
+        # of it (~10%)
+        "spark.sql.streaming.minBatchesToRetain": "1",
+    }
     if not final_no_data_batch:
-        spark.conf.set(_NODATA_KEY, "false")
-    # State-store instances sized by INPUT VOLUME: per-store WAL/commit
-    # fixed costs dominate tiny drains (8→4 measured ~12% on the
-    # stream-stream join at sf0.1), but starving a larger drain of
-    # parallelism costs more (stateful totals at sf1: 20.3 s @4 parts vs
-    # 14.1 s @8). One file-size probe of the stream's source dirs picks
-    # ~one store per 32 MB, clamped to [4, 16]; a real deployment sizes
-    # this to state volume / executor count instead.
-    spark.conf.set("spark.sql.shuffle.partitions", str(_drain_partitions(sdf)))
-    # state-version retention exists for failure recovery of long-running
-    # streams; an ephemeral availableNow drain needs none of it (~10%)
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    # an ephemeral local drain checkpoints under the scratch root (a
+    # real deployment points this at durable object storage instead);
+    # the memory sink holds the rows, so the checkpoint dies with the drain
+    ckpt = scratch_dir("ckpt")
     writer = (
         sdf.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
+        .option("checkpointLocation", ckpt)
     )
-    # an ephemeral local drain checkpoints under the scratch root (a
-    # real deployment points this at durable object storage instead)
-    writer = writer.option("checkpointLocation", _CKPT_LC.fresh_dir("ckpt"))
     try:
-        q = writer.start()
+        with conf_scope(spark, confs):
+            q = writer.start()
         q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.minBatchesToRetain", prev_retain)
-        spark.conf.set(_NODATA_KEY, prev_nodata)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -575,19 +545,16 @@ def upsert_latest_drain(
                 shutil.rmtree(old, ignore_errors=True)
 
     s = read_events_stream(spark, source_dir, max_files_per_trigger=1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_drain_partitions(s)))
     ckpt = os.path.join(work_dir, "ckpt")
-    try:
+    parts = str(_drain_partitions(s))
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": parts}):
         q = (
             s.writeStream.foreachBatch(merge)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
     # the stream is finished: its checkpoint/WAL is dead weight now; the
     # final state version must survive until the NEXT drain (the caller's
     # DataFrame reads it lazily)
